@@ -811,11 +811,11 @@ def _ensure_fixtures(spark: SparkSession, sf_dir: str) -> Path:
 
 
 def _engine(
-    spark: SparkSession, sf_dir: str, explicit: bool = False
+    spark: SparkSession, sf_dir: str, native: bool = False
 ) -> GlueSparkEngine:
     # key on the live session object (not id(spark): a GC'd session's id
     # can be reused by a new one and alias a stale engine)
-    key = (spark, str(sf_dir), explicit)
+    key = (spark, str(sf_dir), native)
     eng = _ENGINES.get(key)
     if eng is None:
         # stable timestamp semantics whatever session the driver built
@@ -990,8 +990,13 @@ def _engine(
                 "skip.header.line.count": "1",
             },
         )
+        # native=True: max_explicit_files=0 reroutes every non-empty
+        # HIVE/UNPARTITIONED scan to Spark's directory scan — the
+        # other arm of the explicit-list vs directory-scan pair
         eng = GlueSparkEngine(
-            spark, store, EngineConfig(explicit_file_lists=explicit)
+            spark,
+            store,
+            EngineConfig(max_explicit_files=0) if native else None,
         )
         _ENGINES[key] = eng
     return eng
@@ -1000,7 +1005,9 @@ def _engine(
 # --------------------------------------------------------------------------
 # Pure-SQL entries: (name, mode, spark_sql, oracle_sql)
 # mode: "engine" = GlueSparkEngine.sql (glue.tpch.* refs),
-#       "engine_explicit" = explicit-file-list engine,
+#       "engine_native" = engine whose HIVE/UNPARTITIONED scans take
+#                         Spark's directory scan instead of the
+#                         cached explicit file list,
 #       "spark" = plain spark.sql (no glue refs)
 # --------------------------------------------------------------------------
 
@@ -1660,7 +1667,7 @@ _SQL_ENTRIES: list[tuple[str, str, str, str | None]] = [
     # -- Layer A machinery: partitioned + projected tables ------------------
     (
         "hive_partition_prune",
-        "engine",
+        "engine_native",
         """SELECT CAST(year AS INT) AS yr, CAST(month AS INT) AS mon,
                   count(*) AS n, round(sum(o_totalprice), 2) AS total
            FROM glue.tpch.orders_part WHERE year = '1997'
@@ -1672,7 +1679,7 @@ _SQL_ENTRIES: list[tuple[str, str, str, str | None]] = [
     ),
     (
         "hive_explicit_or_prune",
-        "engine_explicit",
+        "engine",
         """SELECT CAST(year AS INT) AS yr, count(*) AS n
            FROM glue.tpch.orders_part
            WHERE year = '1996' OR year = '1998' GROUP BY 1""",
@@ -3432,8 +3439,8 @@ def _make_sql_query(
 ) -> Callable[[SparkSession, str], DataFrame]:
     if mode == "engine":
         return lambda spark, sf: _engine(spark, sf).sql(sql)
-    if mode == "engine_explicit":
-        return lambda spark, sf: _engine(spark, sf, explicit=True).sql(sql)
+    if mode == "engine_native":
+        return lambda spark, sf: _engine(spark, sf, native=True).sql(sql)
     return lambda spark, sf: spark.sql(sql)
 
 

@@ -42,13 +42,6 @@ class EngineConfig:
     #: materialized file lists (local HTTP block cache,
     #: /root/reference/src/glue-table-cache.ts:54-65, 235-238)
     proxy_address: str | None = None
-    #: when True, always scan via an explicit pre-listed (and pruned)
-    #: file list, mirroring the reference's design.  When False (default)
-    #: HIVE/UNPARTITIONED tables scan their directory natively so
-    #: Catalyst's PruneFileSourcePartitions does the pruning — the
-    #: Spark-idiomatic, 100 TB-scale path.  GLUE_PROJECTED tables always
-    #: use explicit file lists (Spark has no projection support).
-    explicit_file_lists: bool = False
     #: listings with at least this many files prune via a Spark
     #: DataFrame filter instead of a driver-side Python loop.  Measured
     #: locally the loop wins up to ~200k files (0.4s vs 2.1s DF
@@ -67,14 +60,19 @@ class EngineConfig:
     #: lists by reading parquet FOOTERS (row-group statistics).  Costs
     #: one footer read per surviving file at planning time, so it is
     #: opt-in — worth it for highly selective predicates over sorted /
-    #: clustered data, wasted work for full scans.  Native-mode scans
-    #: don't need it: Spark pushes the filters into the parquet reader
-    #: and row groups are skipped executor-side
+    #: clustered data, wasted work for full scans.  Without it Spark
+    #: still pushes the filters into the parquet reader and skips row
+    #: groups executor-side; this drops whole files at planning time
     footer_stats_skipping: bool = False
     #: hard cap on how many explicit file paths may be handed to one
-    #: ``spark.read.parquet(*paths)`` call; beyond it HIVE/UNPARTITIONED
-    #: tables reroute to the native directory scan and projection tables
-    #: (which have no native equivalent) raise
+    #: ``spark.read.parquet(*paths)`` call.  HIVE/UNPARTITIONED/projection
+    #: tables always scan the reference's way — the cached, pruned
+    #: listing handed to the reader as explicit paths; beyond the cap
+    #: HIVE/UNPARTITIONED tables reroute to Spark's native directory
+    #: scan (``InMemoryFileIndex`` lists the table again and Catalyst's
+    #: PruneFileSourcePartitions prunes it) and projection tables (which
+    #: have no native equivalent) raise.  ``0`` sends every non-empty
+    #: HIVE/UNPARTITIONED scan down the native path
     max_explicit_files: int = 100_000
     #: refuse HIVE/UNPARTITIONED/projection scans over a location that
     #: contains Delta/Hudi/Iceberg markers (``_delta_log/``,

@@ -8,15 +8,17 @@ lifecycle table in SURVEY.md §3).  Where the reference emits DuckDB SQL
 caller to execute, we register temp views over DataFrames and hand the
 rewritten query to Catalyst:
 
-* HIVE / UNPARTITIONED tables (default mode) scan their directory
-  natively — Spark's ``InMemoryFileIndex`` + ``PruneFileSourcePartitions``
-  give listing + partition pruning with zero driver-side work, the plan
-  that survives a 100 TB / 1000-executor scale-up.
-* GLUE_PROJECTED tables (and all tables in ``explicit_file_lists`` mode)
-  go through the reference-style path: driver-side listing (LRU+TTL
-  cached), partition-value extraction by regex, conservative pruning
-  (fixing the reference's OR→AND hazard, SURVEY.md §2.D.1), then
-  ``spark.read.parquet(*pruned_paths)``.
+* HIVE / UNPARTITIONED / GLUE_PROJECTED tables go through the
+  reference-style path: driver-side listing (LRU+TTL cached,
+  prefix-pruned when the query carries a partition predicate),
+  partition-value extraction by regex over each path below the table
+  location, conservative pruning (fixing the reference's OR→AND hazard,
+  SURVEY.md §2.D.1), then ``spark.read.parquet(*pruned_paths)`` (plus
+  ``basePath`` for hive layouts).  The scan schema Spark infers for a
+  path list is cached beside the listing, so a repeat query starts no
+  listing or footer-inference job before its own.  Only a pruned list
+  over ``max_explicit_files`` falls back to Spark's native directory
+  scan (``InMemoryFileIndex`` + ``PruneFileSourcePartitions``).
 * ICEBERG tables resolve the current snapshot's data files via the
   manifest walk in :mod:`glue_table_cache_spark.sources.iceberg`.
 """
@@ -25,6 +27,7 @@ from __future__ import annotations
 
 import itertools
 import re as _re
+import threading
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 
@@ -57,7 +60,10 @@ from glue_table_cache_spark.listing import (
     list_table_files,
     list_table_files_pruned,
 )
-from glue_table_cache_spark.projection import extractors_for
+from glue_table_cache_spark.projection import (
+    extractors_for,
+    relative_path_column,
+)
 from glue_table_cache_spark.pruning import (
     TruePredicate,
     extract_partition_predicate,
@@ -107,8 +113,13 @@ class GlueSparkEngine:
         # the metadata entry was LRU-evicted or TTL-expired (peek()
         # would miss and the stale listing would keep serving).  A SET
         # per table (r13): predicate-scoped format-scan entries mean
-        # one table can own several cache keys at once
-        self._listing_keys: dict[str, set[str]] = {}
+        # one table can own several cache keys at once; insertion
+        # -ordered (a dict used as an ordered set) so the cap in
+        # _track_listing_key evicts the least recently recorded key
+        self._listing_keys: dict[str, dict[str, None]] = {}
+        # guards the side-map: concurrent sql() calls record keys while
+        # others iterate them
+        self._keys_lock = threading.Lock()
         if cfg.credentials is not None or cfg.region is not None:
             self._apply_credentials(cfg.credentials, cfg.region)
 
@@ -2447,7 +2458,9 @@ class GlueSparkEngine:
         to the cached metadata's location, plus the substring sweep for
         parity with any location that does embed the table name."""
         meta_key = table_cache_key(database, table)
-        for lkey in self._listing_keys.pop(meta_key, set()):
+        with self._keys_lock:
+            tracked = list(self._listing_keys.pop(meta_key, {}))
+        for lkey in tracked:
             self._listing_cache.invalidate(lkey)
         cached = self._metadata_cache.peek(meta_key)
         if cached is not None and cached.location:
@@ -2520,24 +2533,38 @@ class GlueSparkEngine:
         return value
 
     #: bound on tracked cache keys per table: each distinct pushed
-    #: predicate adds one fingerprint key, and a long-lived engine
-    #: serving ad-hoc WHEREs must not grow the side-map forever
+    #: predicate adds one fingerprint key, each distinct scan path list
+    #: one schema key, and a long-lived engine serving ad-hoc WHEREs
+    #: must not grow the side-map forever
     _MAX_TRACKED_KEYS = 64
 
+    #: markers of the scoped keys the cap may evict: a pushed
+    #: predicate's fingerprint, a scan path list's digest
+    _SCOPED_KEY_MARKERS = ("#w:", "#schema:")
+
     def _track_listing_key(self, tbl: CatalogTable, key: str) -> None:
-        """Record ``key`` for invalidate_table.  At the cap, an
-        arbitrary tracked predicate-scoped key is evicted from the
-        CACHE before being dropped from the map — the invariant that
-        every live cache entry has an invalidation record survives."""
-        keys = self._listing_keys.setdefault(
-            table_cache_key(tbl.database, tbl.name), set()
-        )
-        if key not in keys and len(keys) >= self._MAX_TRACKED_KEYS:
-            victim = next((k for k in keys if "#w:" in k), None)
-            if victim is not None:
-                self._listing_cache.invalidate(victim)
-                keys.discard(victim)
-        keys.add(key)
+        """Record ``key`` for invalidate_table.  At the cap, the least
+        recently recorded scoped key is evicted from the CACHE before
+        being dropped from the map — the invariant that every live
+        cache entry has an invalidation record survives."""
+        with self._keys_lock:
+            keys = self._listing_keys.setdefault(
+                table_cache_key(tbl.database, tbl.name), {}
+            )
+            if key not in keys and len(keys) >= self._MAX_TRACKED_KEYS:
+                victim = next(
+                    (
+                        k
+                        for k in keys
+                        if any(m in k for m in self._SCOPED_KEY_MARKERS)
+                    ),
+                    None,
+                )
+                if victim is not None:
+                    self._listing_cache.invalidate(victim)
+                    del keys[victim]
+            keys.pop(key, None)
+            keys[key] = None
 
     def _format_scan_cached_pruned(
         self, tbl: CatalogTable, load: Callable, factory
@@ -2602,13 +2629,16 @@ class GlueSparkEngine:
         entry is freshly loaded or served, so a ``#w:`` entry can
         never outlive a newer full walk and time-travel a repeat
         query backward."""
-        keys = self._listing_keys.get(
-            table_cache_key(tbl.database, tbl.name), set()
-        )
         prefix = f"{bare}#w:"
-        for k in [k for k in keys if k.startswith(prefix) and k != keep]:
-            self._listing_cache.invalidate(k)
-            keys.discard(k)
+        with self._keys_lock:
+            keys = self._listing_keys.get(
+                table_cache_key(tbl.database, tbl.name), {}
+            )
+            for k in [
+                k for k in keys if k.startswith(prefix) and k != keep
+            ]:
+                self._listing_cache.invalidate(k)
+                del keys[k]
 
     @staticmethod
     def _travel_timestamp_ms(literal: str) -> int:
@@ -2914,16 +2944,19 @@ class GlueSparkEngine:
                     base_path=tbl.location,
                 )
             # same basePath treatment as DELTA: hudi partition paths
-            # are usually hive-style <k>=<v> directories
-            reader = self.spark.read.option("basePath", tbl.location)
-            # the newest commit's extraMetadata.schema (when a writer
-            # recorded one) is the authoritative scan schema for
-            # EVOLVED tables — pre-evolution base files surface nulls
-            # for added columns, independent of scan order; partition
-            # columns in it resolve typed from the k=v directories
-            if len(walk) > 2 and walk[2] is not None:
-                reader = reader.schema(walk[2])
-            return self._format_read(reader, tbl, *paths)
+            # are usually hive-style <k>=<v> directories.  The newest
+            # commit's extraMetadata.schema (when a writer recorded
+            # one) is the authoritative scan schema for EVOLVED tables
+            # — pre-evolution base files surface nulls for added
+            # columns, independent of scan order; partition columns in
+            # it resolve typed from the k=v directories.  Without one
+            # the inferred schema is cached per path list
+            return self._read_paths(
+                paths,
+                base_path=tbl.location,
+                tbl=tbl,
+                schema=walk[2] if len(walk) > 2 else None,
+            )
         if ttype == ETableType.DELTA:
             # beyond the reference (which never handles DELTA): resolve
             # the ACTIVE file set from the transaction log — a raw
@@ -3378,31 +3411,14 @@ class GlueSparkEngine:
                 if set(want) == set(df.columns) and want != df.columns:
                     df = df.select(*want)
             return df
-        if (
-            ttype in (ETableType.HIVE, ETableType.UNPARTITIONED)
-            and not self.config.explicit_file_lists
-        ):
-            # native path: let Spark list + partition-prune
-            from pyspark.errors import AnalysisException
-
-            reader = self.spark.read
-            if ttype == ETableType.HIVE:
-                reader = reader.option("basePath", tbl.location)
-            try:
-                return self._format_read(reader, tbl, tbl.location)
-            except AnalysisException:
-                # empty or missing location (UNABLE_TO_INFER_SCHEMA /
-                # PATH_NOT_FOUND): fall through to the explicit path,
-                # which emits the reference's empty-relation view.  Real
-                # read failures (permissions, corrupt footers) are NOT
-                # caught — silently returning 0 rows would hide them.
-                return self._explicit_list_dataframe(tbl, query)
         return self._explicit_list_dataframe(tbl, query)
 
     def _explicit_list_dataframe(
         self, tbl: CatalogTable, query: str | None
     ) -> DataFrame:
-        """Reference-style scan: pre-listed, pruned explicit file list.
+        """Reference-style scan: pre-listed, pruned explicit file list —
+        the only read path for HIVE, UNPARTITIONED and GLUE_PROJECTED
+        tables, as in the reference (``glue-table-cache.ts:292-333``).
 
         r14: when the query carries a partition predicate, the LISTING
         itself is prefix-pruned and parallel
@@ -3433,8 +3449,8 @@ class GlueSparkEngine:
                     lstats.first_pruned, fs=self._fs
                 )
                 if sample is not None:
-                    df = self._format_read(
-                        self.spark.read, tbl, sample
+                    df = self._read_paths(
+                        self._proxy([sample]), None, tbl
                     ).limit(0)
                     return self._attach_partition_columns(df, tbl)
             # view over an empty relation, as the reference emits
@@ -3494,8 +3510,8 @@ class GlueSparkEngine:
                 pruned = [f for f in pruned if f.path in keep]
         if not pruned:
             # pruned-to-zero: empty relation with the real schema
-            df = self._format_read(
-                self.spark.read, tbl, files[0].path
+            df = self._read_paths(
+                self._proxy([files[0].path]), None, tbl
             ).limit(0)
             return self._attach_partition_columns(df, tbl)
         paths = self._proxy([f.path for f in pruned])
@@ -3574,16 +3590,54 @@ class GlueSparkEngine:
         tbl: CatalogTable | None = None,
         schema=None,
     ) -> DataFrame:
+        """Scan an explicit path list.  ``schema`` is the format's
+        metadata-authoritative scan schema when it has one: it skips
+        inference and types evolved columns.  Without it, a catalog
+        table's inferred schema is cached in the listing cache under
+        its location, ``basePath``, format and a digest of the exact
+        path list, so a repeat scan of the same files passes the
+        schema Spark inferred and starts no footer-inference job.  The
+        key is tracked per table (TTL, LRU and ``invalidate_table``
+        drop it with the listing)."""
         reader = self.spark.read
         if base_path:
             # explicit leaf files + basePath: Spark still derives hive
             # partition columns and prunes them at planning time
             reader = reader.option("basePath", base_path)
         if schema is not None:
-            # metadata-authoritative scan schema (table formats):
-            # skips inference and types evolved columns
-            reader = reader.schema(schema)
-        return self._format_read(reader, tbl, *paths)
+            return self._format_read(reader.schema(schema), tbl, *paths)
+        if tbl is None:
+            return self._format_read(reader, tbl, *paths)
+        key = self._schema_cache_key(tbl, base_path, paths)
+        cached = self._listing_cache.peek(key)
+        if cached is not None:
+            df = self._format_read(reader.schema(cached), tbl, *paths)
+        else:
+            df = self._format_read(reader, tbl, *paths)
+            self._listing_cache.get_or_load(key, lambda: df.schema)
+        # recorded after the entry exists: a concurrent cap eviction
+        # can then never leave a live entry without its record
+        self._track_listing_key(tbl, key)
+        return df
+
+    @staticmethod
+    def _schema_cache_key(
+        tbl: CatalogTable, base_path: str | None, paths: list[str]
+    ) -> str:
+        import hashlib
+
+        params = tbl.parameters
+        digest = hashlib.sha1(
+            "\n".join(
+                [
+                    tbl.data_format,
+                    params.get("delimiter", ""),
+                    params.get("skip.header.line.count", ""),
+                    *paths,
+                ]
+            ).encode()
+        ).hexdigest()
+        return f"{tbl.location}|{base_path or ''}#schema:{digest}"
 
     def _format_read(self, reader, tbl: CatalogTable | None, *paths) -> DataFrame:
         """Dispatch the scan on the table's ``classification`` catalog
@@ -3618,7 +3672,8 @@ class GlueSparkEngine:
         if fmt == "json":
             return reader.json(list(paths))
         if fmt == "orc":
-            return reader.orc(*paths)
+            # orc(path, mergeSchema, ...): paths go in as ONE list
+            return reader.orc(list(paths))
         if fmt != "parquet":
             # an unrecognized classification must not silently scan
             # the files as parquet — a typo'd or unsupported format
@@ -3638,9 +3693,12 @@ class GlueSparkEngine:
         self, df: DataFrame, tbl: CatalogTable
     ) -> DataFrame:
         """For non-hive layouts (partition projection) attach partition
-        columns by regex over the file path — distributed, no driver loop
-        (extractors ported from /root/reference/src/util/glue.ts:136-175)."""
-        path_col = F.col("_metadata.file_path")
+        columns by regex over the file path below the table location —
+        distributed, no driver loop (extractors ported from the
+        reference's ``src/util/glue.ts:136-175``)."""
+        path_col = relative_path_column(
+            F.col("_metadata.file_path"), tbl.location
+        )
         for ex in extractors_for(tbl.partition_keys, tbl.projection):
             if ex.column not in df.columns:
                 df = df.withColumn(ex.column, ex.spark_column(path_col))
@@ -3772,14 +3830,16 @@ class GlueSparkEngine:
             F.col("__pv_key") == F.col("__pv_path"),
             "left",
         )
+        rel_key = relative_path_column(F.col("__pv_key"), tbl.location)
         for k, c in zip(keys, pv_cols):
             value = F.col(c)
             if k in extractors:
-                # ``k=v`` path segments survive scheme normalization,
-                # and ``__pv_key`` stays resolvable after the join
-                # where the hidden ``_metadata`` column may not
+                # ``k=v`` path segments below the location survive
+                # scheme normalization, and ``__pv_key`` stays
+                # resolvable after the join where the hidden
+                # ``_metadata`` column may not
                 value = F.coalesce(
-                    value, extractors[k].spark_column(F.col("__pv_key"))
+                    value, extractors[k].spark_column(rel_key)
                 )
             if k in ice_types:
                 value = value.cast(ice_types[k])

@@ -18,12 +18,16 @@ disproves are never paged, and surviving prefixes list in parallel
 
 from __future__ import annotations
 
+import os
 import posixpath
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Protocol
 
-from glue_table_cache_spark.projection import PartitionExtractor
+from glue_table_cache_spark.projection import (
+    PartitionExtractor,
+    relative_path,
+)
 
 #: suffixes that are never data files (the reference drops
 #: ``_$folder$`` markers, /root/reference/src/util/s3.ts:43-46; we also
@@ -58,15 +62,22 @@ class FileSystem(Protocol):
 class LocalFileSystem:
     """Lists a local directory recursively. A single ``*.parquet`` file
     path is returned as-is (the driver testdata ships one file per
-    table)."""
+    table).  Hidden directories below the location
+    (:func:`_is_hidden`) are never entered."""
 
     def list_files(self, location: str) -> list[str]:
         p = Path(location)
         if p.is_file():
             return [str(p)]
-        return sorted(
-            str(f) for f in p.rglob("*") if f.is_file() and _is_data_file(str(f))
-        )
+        out: list[str] = []
+        for root, dirs, files in os.walk(p):
+            dirs[:] = [d for d in dirs if not _is_hidden(d)]
+            out.extend(
+                path
+                for path in (os.path.join(root, f) for f in files)
+                if _is_data_file(path)
+            )
+        return sorted(out)
 
     def list_dir(self, location: str) -> tuple[list[str], list[str]]:
         p = Path(location)
@@ -81,7 +92,8 @@ class LocalFileSystem:
         files: list[str] = []
         for child in p.iterdir():
             if child.is_dir():
-                dirs.append(str(child))
+                if not _is_hidden(child.name):
+                    dirs.append(str(child))
             elif child.is_file() and _is_data_file(str(child)):
                 files.append(str(child))
         return sorted(dirs), sorted(files)
@@ -110,7 +122,10 @@ class S3FileSystem:
             resp = self._client.list_objects_v2(**kwargs)
             for obj in resp.get("Contents", []):
                 key = obj["Key"]
-                if _is_data_file(key):
+                below = key[len(prefix):].split("/")[:-1]
+                if _is_data_file(key) and not any(
+                    _is_hidden(d) for d in below
+                ):
                     paths.append(f"s3://{bucket}/{key}")
             if not resp.get("IsTruncated"):
                 break
@@ -137,9 +152,9 @@ class S3FileSystem:
                 kwargs["ContinuationToken"] = token
             resp = self._client.list_objects_v2(**kwargs)
             for cp in resp.get("CommonPrefixes", []):
-                dirs.append(
-                    f"s3://{bucket}/{cp['Prefix'].rstrip('/')}"
-                )
+                sub = cp["Prefix"].rstrip("/")
+                if not _is_hidden(posixpath.basename(sub)):
+                    dirs.append(f"s3://{bucket}/{sub}")
             for obj in resp.get("Contents", []):
                 key = obj["Key"]
                 if key != prefix and _is_data_file(key):
@@ -155,6 +170,18 @@ def _is_data_file(path: str) -> bool:
     return not (
         name.startswith(("_", "."))
         or any(path.endswith(m) for m in _NON_DATA_MARKERS)
+    )
+
+
+def _is_hidden(name: str) -> bool:
+    """Spark's hidden-path rule for a directory below a table location
+    (``HadoopFSUtils.shouldFilterOutPathName``): ``.``-prefixed, or
+    ``_``-prefixed and not a ``k=v`` partition directory.  So
+    ``_delta_log/``, ``_temporary/`` and ``.hoodie/`` contents never
+    enter an explicit file list, as they never enter a directory
+    scan."""
+    return name.startswith(".") or (
+        name.startswith("_") and "=" not in name
     )
 
 
@@ -186,17 +213,20 @@ def list_table_files(
     the given extractors (reference: ``listS3Objects`` +
     ``extractPartitionValues``)."""
     fs = fs or filesystem_for(location)
-    return _attach_values(fs.list_files(location), extractors)
+    return _attach_values(fs.list_files(location), extractors, location)
 
 
 def _attach_values(
-    paths: list[str], extractors: list[PartitionExtractor]
+    paths: list[str], extractors: list[PartitionExtractor], location: str
 ) -> list[FileInfo]:
+    """Partition values extracted from each path BELOW ``location``
+    (:func:`~glue_table_cache_spark.projection.relative_path`)."""
     out: list[FileInfo] = []
     for path in paths:
+        rel = relative_path(path, location)
         values: dict[str, str] = {}
         for ex in extractors:
-            v = ex.extract(path)
+            v = ex.extract(rel)
             if v is not None:
                 values[ex.column] = v
         out.append(FileInfo(path=path, partition_values=values))
@@ -237,15 +267,17 @@ class ListingStats:
 
 
 def _prefix_values(
-    prefix: str, extractors: list[PartitionExtractor]
+    prefix: str, extractors: list[PartitionExtractor], location: str
 ) -> dict[str, str]:
     """Partition values provable from a directory PREFIX alone.  Only
     ``prefix_stable`` extractors participate (see
     :class:`~glue_table_cache_spark.projection.PartitionExtractor`);
     the trailing ``/`` guarantees any completed match is bounded the
     same way it is in a full file path.  Missing keys evaluate
-    Unknown in the predicate tree — the walk keeps descending."""
-    probe = prefix.rstrip("/") + "/"
+    Unknown in the predicate tree — the walk keeps descending.  Like
+    :func:`_attach_values`, extraction sees only the part of the
+    prefix below ``location``."""
+    probe = relative_path(prefix.rstrip("/") + "/", location)
     values: dict[str, str] = {}
     for ex in extractors:
         if not ex.prefix_stable:
@@ -258,6 +290,7 @@ def _prefix_values(
 
 def _walk_prefix(
     prefix: str,
+    location: str,
     extractors: list[PartitionExtractor],
     predicate,
     fs: FileSystem | None = None,
@@ -282,7 +315,7 @@ def _walk_prefix(
             if (
                 predicate is not None
                 and predicate.evaluate(
-                    _prefix_values(sub, extractors)
+                    _prefix_values(sub, extractors, location)
                 )
                 is False
             ):
@@ -350,7 +383,7 @@ def list_table_files_pruned(
             for sub in dirs:
                 if (
                     predicate.evaluate(
-                        _prefix_values(sub, extractors)
+                        _prefix_values(sub, extractors, location)
                     )
                     is False
                 ):
@@ -370,7 +403,9 @@ def list_table_files_pruned(
             results = (
                 sc.parallelize(frontier, len(frontier))
                 .map(
-                    lambda d: _walk_prefix(d, extractors, predicate)
+                    lambda d: _walk_prefix(
+                        d, location, extractors, predicate
+                    )
                 )
                 .collect()
             )
@@ -381,7 +416,7 @@ def list_table_files_pruned(
                 results = list(
                     pool.map(
                         lambda d: _walk_prefix(
-                            d, extractors, predicate, fs
+                            d, location, extractors, predicate, fs
                         ),
                         frontier,
                     )
@@ -393,7 +428,7 @@ def list_table_files_pruned(
             if first_pruned:
                 stats.first_pruned = stats.first_pruned or first_pruned
     stats.files_listed = len(files)
-    return _attach_values(sorted(files), extractors)
+    return _attach_values(sorted(files), extractors, location)
 
 
 def first_file_under(prefix: str, fs=None) -> str | None:

@@ -12,6 +12,8 @@ so listings too large for the driver can be processed distributed.
 
 from __future__ import annotations
 
+import functools
+import posixpath
 import re
 from dataclasses import dataclass
 
@@ -72,6 +74,44 @@ class PartitionExtractor:
         # NULL for a file that lacks the key (mixed layouts)
         col = F.when(col != "", col)
         return col.cast(self.cast) if self.cast else col
+
+
+@functools.lru_cache(maxsize=256)
+def _location_marker(location: str) -> str:
+    """The table location's path part as a ``/``-bounded substring —
+    what every path below the location contains, whatever scheme or
+    proxy spelling precedes it (``s3://b/t`` → ``/b/t/``, a proxied
+    ``http://host:port/b/t/...`` still contains it)."""
+    loc = location.rstrip("/")
+    if "://" in loc:
+        loc = loc.split("://", 1)[1]
+    else:
+        if loc.startswith("file:"):
+            loc = loc[len("file:"):]
+        loc = posixpath.normpath(loc)
+    return "/" + loc.lstrip("/") + "/"
+
+
+def relative_path(path: str, location: str) -> str:
+    """``path`` below ``location``, with a leading ``/``
+    (``/p=1/f.parquet``): extractors run on this, so a ``p=`` or
+    all-digit component of the location itself (a table under
+    ``/data/2024/``) never reads as a partition value.  A path that
+    does not contain the location is returned whole."""
+    marker = _location_marker(location)
+    probe = path if path.startswith("/") else "/" + path
+    i = probe.find(marker)
+    return probe[i + len(marker) - 1:] if i >= 0 else path
+
+
+def relative_path_column(path_col: Column, location: str) -> Column:
+    """:func:`relative_path` over a ``_metadata.file_path``-style
+    column: the location is matched in its Hadoop-URI spelling
+    (``%`` → ``%25``, space → ``%20``), the first occurrence and
+    everything before it replaced by ``/``."""
+    marker = _location_marker(location)
+    marker = marker.replace("%", "%25").replace(" ", "%20")
+    return F.regexp_replace(path_col, "^.*?" + re.escape(marker), "/")
 
 
 def hive_extractor(key: str) -> PartitionExtractor:

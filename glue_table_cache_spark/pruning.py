@@ -16,9 +16,10 @@ Two deliberate fixes over the reference (SURVEY.md §2.D):
    (``TruePredicate``) — pruning is an optimization, never a filter of
    record; the full WHERE still executes over the scanned data.
 2. Extraction still reads only the top-level WHERE (like the reference,
-   `src/sql-transformer.ts:187-190`) because in the native path Catalyst
-   already prunes at any depth; this layer only matters for explicit
-   file-list scans and projection tables.
+   `src/sql-transformer.ts:187-190`): hive-layout scans hand Spark the
+   listed files with ``basePath``, so Catalyst's
+   PruneFileSourcePartitions still prunes them at any depth; this layer
+   shrinks the listing and the file list before that.
 
 Parsing uses DuckDB's ``json_serialize_sql`` — the very parser/AST the
 reference builds on (`src/sql-transformer.ts:13-25`) — imported lazily;

@@ -100,7 +100,9 @@ class TestHivePartitioned:
     def test_native_scan_partition_pruning(self, spark, hive_store):
         from glue_table_cache_spark.plans.explain import partition_filters
 
-        engine = GlueSparkEngine(spark, hive_store)
+        engine = GlueSparkEngine(
+            spark, hive_store, EngineConfig(max_explicit_files=0)
+        )
         df = engine.sql(
             "SELECT * FROM glue.tpch.orders_part WHERE year = '1995'"
         )
@@ -109,9 +111,7 @@ class TestHivePartitioned:
         assert df.count() > 0
 
     def test_explicit_list_mode_prunes(self, spark, hive_store):
-        engine = GlueSparkEngine(
-            spark, hive_store, EngineConfig(explicit_file_lists=True)
-        )
+        engine = GlueSparkEngine(spark, hive_store)
         all_df = engine.sql("SELECT * FROM glue.tpch.orders_part")
         pruned_df = engine.sql(
             "SELECT * FROM glue.tpch.orders_part "
@@ -123,7 +123,9 @@ class TestHivePartitioned:
             for f in pruned_df.inputFiles()
         )
         # values must match the native path
-        native = GlueSparkEngine(spark, hive_store).sql(
+        native = GlueSparkEngine(
+            spark, hive_store, EngineConfig(max_explicit_files=0)
+        ).sql(
             "SELECT count(*) AS c FROM glue.tpch.orders_part "
             "WHERE year = '1995' AND month IN ('01','02')"
         )
@@ -131,14 +133,14 @@ class TestHivePartitioned:
 
     def test_explicit_list_or_filter_not_overpruned(self, spark, hive_store):
         """The reference's OR→AND hazard must not reproduce here."""
-        engine = GlueSparkEngine(
-            spark, hive_store, EngineConfig(explicit_file_lists=True)
-        )
+        engine = GlueSparkEngine(spark, hive_store)
         df = engine.sql(
             "SELECT count(*) AS c FROM glue.tpch.orders_part "
             "WHERE year = '1995' OR year = '1996'"
         )
-        native = GlueSparkEngine(spark, hive_store).sql(
+        native = GlueSparkEngine(
+            spark, hive_store, EngineConfig(max_explicit_files=0)
+        ).sql(
             "SELECT count(*) AS c FROM glue.tpch.orders_part "
             "WHERE year = '1995' OR year = '1996'"
         )
@@ -167,9 +169,7 @@ def test_concurrent_sql_different_filters(spark, hive_store):
     different WHERE clauses must not swap each other's views."""
     from concurrent.futures import ThreadPoolExecutor
 
-    engine = GlueSparkEngine(
-        spark, hive_store, EngineConfig(explicit_file_lists=True)
-    )
+    engine = GlueSparkEngine(spark, hive_store)
 
     def run(year: str) -> int:
         return (
@@ -197,10 +197,7 @@ def test_invalidate_table_drops_listing(spark, store):
 
             return LocalFileSystem().list_files(location)
 
-    engine = GlueSparkEngine(
-        spark, store, EngineConfig(explicit_file_lists=True),
-        filesystem=CountingFS(),
-    )
+    engine = GlueSparkEngine(spark, store, filesystem=CountingFS())
     engine.sql("SELECT * FROM glue.tpch.region").count()
     engine.sql("SELECT * FROM glue.tpch.region").count()
     assert listing_calls["n"] == 1  # cached
@@ -249,9 +246,7 @@ def test_mixed_layout_not_prune(spark, store, tmp_path):
     store.register_parquet_dir(
         "tpch", "mixed_tbl", str(base), partition_keys=[PartitionKey("year")]
     )
-    engine = GlueSparkEngine(
-        spark, store, EngineConfig(explicit_file_lists=True)
-    )
+    engine = GlueSparkEngine(spark, store)
     df = engine.sql(
         "SELECT * FROM glue.tpch.mixed_tbl WHERE NOT (year = '1995')"
     )
@@ -303,15 +298,15 @@ def test_max_explicit_files_reroutes_to_native(spark, hive_store):
     engine = GlueSparkEngine(
         spark,
         hive_store,
-        EngineConfig(explicit_file_lists=True, max_explicit_files=1),
+        EngineConfig(max_explicit_files=1),
     )
     df = engine.sql(
         "SELECT count(*) AS c FROM glue.tpch.orders_part WHERE year = '1995'"
     )
-    native = GlueSparkEngine(spark, hive_store).sql(
+    explicit = GlueSparkEngine(spark, hive_store).sql(
         "SELECT count(*) AS c FROM glue.tpch.orders_part WHERE year = '1995'"
     )
-    assert df.collect()[0].c == native.collect()[0].c > 0
+    assert df.collect()[0].c == explicit.collect()[0].c > 0
 
 
 def test_max_explicit_files_raises_for_projection(spark, store, tmp_path):
@@ -394,7 +389,6 @@ def test_invalidate_after_metadata_expiry_still_drops_listing(spark, store):
         spark,
         store,
         EngineConfig(
-            explicit_file_lists=True,
             table_metadata_ttl_ms=30,       # metadata expires quickly...
             s3_listing_ttl_ms=3_600_000,    # ...the listing does not
         ),
@@ -535,9 +529,7 @@ def test_explicit_mode_json_table(spark, tmp_path):
     store.register_parquet_dir(
         "db", "jex", str(data), parameters={"classification": "json"}
     )
-    eng = GlueSparkEngine(
-        spark, store, EngineConfig(explicit_file_lists=True)
-    )
+    eng = GlueSparkEngine(spark, store)
     out = eng.sql(
         "SELECT CAST(sum(v) AS BIGINT) AS s FROM glue.db.jex"
     ).collect()

@@ -131,10 +131,10 @@ def test_engine_scan_uses_pruned_listing(spark, hive_store):
     scan, the listing cache holds a predicate-fingerprint entry, and
     a later unfiltered query loads the full listing (retiring the
     pruned entries, same contract as the format walks)."""
-    eng = GlueSparkEngine(
-        spark, hive_store, EngineConfig(explicit_file_lists=True)
+    eng = GlueSparkEngine(spark, hive_store)
+    native = GlueSparkEngine(
+        spark, hive_store, EngineConfig(max_explicit_files=0)
     )
-    native = GlueSparkEngine(spark, hive_store)
     flat_years = native.sql(
         "SELECT DISTINCT year FROM glue.tpch.orders_part ORDER BY year"
     ).collect()
@@ -160,9 +160,7 @@ def test_engine_scan_uses_pruned_listing(spark, hive_store):
 
 
 def test_engine_pruned_to_zero_keeps_schema(spark, hive_store):
-    eng = GlueSparkEngine(
-        spark, hive_store, EngineConfig(explicit_file_lists=True)
-    )
+    eng = GlueSparkEngine(spark, hive_store)
     out = eng.sql(
         "SELECT o_orderkey FROM glue.tpch.orders_part "
         "WHERE year = '1800'"
@@ -208,9 +206,7 @@ def test_projection_enum_prefix_not_trusted(spark, tmp_path):
     assert {f.path for f in pruned} == {f.path for f in flat}
     kept = prune_files(pruned, pred)
     assert all(f.partition_values["src"] == "s1" for f in kept)
-    eng = GlueSparkEngine(
-        spark, store, EngineConfig(explicit_file_lists=True)
-    )
+    eng = GlueSparkEngine(spark, store)
     out = eng.sql("SELECT id FROM glue.db.enumtbl WHERE src = 's1'")
     assert [r.id for r in out.collect()] == [1]
 
@@ -247,9 +243,7 @@ def test_missing_location_parity_returns_empty(spark, tmp_path):
     store.register_parquet_dir(
         "db", "absent", missing, partition_keys=[PartitionKey("year")]
     )
-    eng = GlueSparkEngine(
-        spark, store, EngineConfig(explicit_file_lists=True)
-    )
+    eng = GlueSparkEngine(spark, store)
     # never-held-a-file parity: both the filtered and unfiltered
     # query get the reference's SELECT NULL LIMIT 0 view — a WHERE
     # on it is the same UNRESOLVED_COLUMN analysis error the flat

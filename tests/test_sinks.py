@@ -259,9 +259,7 @@ def test_zorder_enables_skipping_on_every_column(spark, tmp_path):
     eng = GlueSparkEngine(
         spark,
         store,
-        config=EngineConfig(
-            explicit_file_lists=True, footer_stats_skipping=True
-        ),
+        config=EngineConfig(footer_stats_skipping=True),
     )
     for col in ("x", "y"):
         probe = eng.sql(f"SELECT x, y FROM glue.db.z WHERE {col} < 4")

@@ -412,9 +412,7 @@ def test_engine_footer_skipping_hive_explicit(spark, tmp_path):
     eng = GlueSparkEngine(
         spark,
         store,
-        config=EngineConfig(
-            explicit_file_lists=True, footer_stats_skipping=True
-        ),
+        config=EngineConfig(footer_stats_skipping=True),
     )
     out = eng.sql(
         "SELECT count(*) AS n FROM glue.db.plain WHERE x BETWEEN 40 AND 60"
@@ -423,9 +421,7 @@ def test_engine_footer_skipping_hive_explicit(spark, tmp_path):
     probe = eng.sql("SELECT x FROM glue.db.plain WHERE x BETWEEN 40 AND 60")
     assert len(probe.inputFiles()) == 1
     # default config never reads footers and scans everything
-    eng_off = GlueSparkEngine(
-        spark, store, config=EngineConfig(explicit_file_lists=True)
-    )
+    eng_off = GlueSparkEngine(spark, store)
     probe_off = eng_off.sql(
         "SELECT x FROM glue.db.plain WHERE x BETWEEN 40 AND 60"
     )
