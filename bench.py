@@ -614,15 +614,15 @@ def _meta_walk(fmt: str, distributed: bool):
             finally:
                 d.DISTRIBUTED_CHECKPOINT_MIN_BYTES = old
         else:
-            old = ice.DISTRIBUTED_MANIFEST_MIN_COUNT
-            ice.DISTRIBUTED_MANIFEST_MIN_COUNT = (
-                1 if distributed else 10**9
+            old = ice.DISTRIBUTED_MANIFEST_MIN_BYTES
+            ice.DISTRIBUTED_MANIFEST_MIN_BYTES = (
+                0 if distributed else 1 << 60
             )
             try:
                 entries, _pos, _eq = ice.iceberg_scan_details(ice_loc)
                 n = len(entries)
             finally:
-                ice.DISTRIBUTED_MANIFEST_MIN_COUNT = old
+                ice.DISTRIBUTED_MANIFEST_MIN_BYTES = old
         return spark.createDataFrame([(n,)], "n long")
 
     return run
@@ -666,8 +666,8 @@ def _meta_prune(fmt: str):
             assert factory.applied
             want = _META_DELTA_ADDS // _META_PARTS
         else:
-            old = ice.DISTRIBUTED_MANIFEST_MIN_COUNT
-            ice.DISTRIBUTED_MANIFEST_MIN_COUNT = 1
+            old = ice.DISTRIBUTED_MANIFEST_MIN_BYTES
+            ice.DISTRIBUTED_MANIFEST_MIN_BYTES = 0
             try:
                 factory = iceberg_prune_factory(
                     q, ["p"], {"t"}, False
@@ -676,7 +676,7 @@ def _meta_prune(fmt: str):
                     ice_loc, prune_factory=factory
                 )
             finally:
-                ice.DISTRIBUTED_MANIFEST_MIN_COUNT = old
+                ice.DISTRIBUTED_MANIFEST_MIN_BYTES = old
             assert factory.applied
             want = (
                 _META_ICE_MANIFESTS * _META_ICE_ENTRIES

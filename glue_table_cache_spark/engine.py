@@ -70,6 +70,7 @@ from glue_table_cache_spark.pruning import (
     predicate_to_column,
     prune_files,
 )
+from glue_table_cache_spark.session import local_frame
 from glue_table_cache_spark.transformer import (
     TableReference,
     get_query_glue_table_refs,
@@ -447,7 +448,8 @@ class GlueSparkEngine:
             )
             if version is not None:
                 self.invalidate_table(ref.database, ref.table)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(
                     "COPY INTO",
                     None if version is None else str(version),
@@ -512,7 +514,8 @@ class GlueSparkEngine:
                     loc, {}, unset=(key,)
                 )
             self.invalidate_table(ref.database, ref.table)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(
                     f"{stmt.action.upper()} CONSTRAINT",
                     str(version), 0, 0, 0,
@@ -555,7 +558,8 @@ class GlueSparkEngine:
                     f"as {ttype.name}"
                 )
             self.invalidate_table(ref.database, ref.table)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(
                     "UNSET TBLPROPERTIES"
                     if stmt.unset else "SET TBLPROPERTIES",
@@ -588,7 +592,8 @@ class GlueSparkEngine:
             else:
                 version = drop_iceberg_ref(loc, stmt.name)
             self.invalidate_table(ref.database, ref.table)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     (
                         f"{stmt.action.upper()} "
@@ -645,7 +650,8 @@ class GlueSparkEngine:
             else:
                 raise GlueSparkError(f"RESTORE {qual}: {fmt_hint}")
             self.invalidate_table(ref.database, ref.table)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [("RESTORE", str(version), 0, 0, 0)],
                 "operation string, version string, rows_updated long, "
                 "rows_inserted long, rows_deleted long",
@@ -696,7 +702,8 @@ class GlueSparkEngine:
                     "TABLE AS"
                 )
             self.invalidate_table(ref.database, ref.table)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(verb, str(version), 0, 0, 0)],
                 "operation string, version string, rows_updated "
                 "long, rows_inserted long, rows_deleted long",
@@ -732,7 +739,8 @@ class GlueSparkEngine:
             else:
                 raise GlueSparkError(f"ALTER TABLE {qual}: {fmt_hint}")
             self.invalidate_table(ref.database, ref.table)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [("ADD COLUMNS", str(version), 0, 0, 0)],
                 "operation string, version string, rows_updated long, "
                 "rows_inserted long, rows_deleted long",
@@ -832,7 +840,8 @@ class GlueSparkEngine:
             else:
                 raise GlueSparkError(f"{op} {qual}: {fmt_hint}")
             self.invalidate_table(ref.database, ref.table)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(op, str(version), 0, n_ins, 0)],
                 "operation string, version string, rows_updated long, "
                 "rows_inserted long, rows_deleted long",
@@ -1067,7 +1076,8 @@ class GlueSparkEngine:
             # the commit is externally visible NOW — drop the cached
             # format walk so the next scan replays the new version
             self.invalidate_table(ref.database, ref.table)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(op, None if version is None else str(version),
               n_upd, n_ins, n_del)],
             "operation string, version string, rows_updated long, "
@@ -1409,7 +1419,8 @@ class GlueSparkEngine:
                     "support enumeration (no list_tables)"
                 )
             dbs = sorted({t.database for t in lt(None)})
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(d,) for d in dbs], "namespace string"
             )
         if stmt.verb == "tables":
@@ -1428,7 +1439,8 @@ class GlueSparkEngine:
                 )
                 for t in lt(stmt.database)
             ]
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 rows,
                 "database string, tableName string, tableType string, "
                 "location string",
@@ -1459,7 +1471,8 @@ class GlueSparkEngine:
                 "/".join(f"{k}={v}" for k, v in zip(pkeys, t))
                 for t in tuples
             )
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(r,) for r in rows], "partition string"
             )
         if stmt.verb in ("history", "tblproperties"):
@@ -1472,7 +1485,8 @@ class GlueSparkEngine:
             schema = self.table_dataframe(
                 ref.database, ref.table
             ).schema
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(f.name,) for f in schema.fields],
                 "col_name string",
             )
@@ -1488,7 +1502,8 @@ class GlueSparkEngine:
             rows.append(("# col_name", "data_type", None))
             for k in tbl.partition_keys:
                 rows.append((k.name, k.type, None))
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows, "col_name string, data_type string, comment string"
         )
 
@@ -1532,7 +1547,8 @@ class GlueSparkEngine:
                 for k, v in sorted(props.items())
             )
             lines.append("TBLPROPERTIES (\n" + kv + "\n)")
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [("\n".join(lines),)], "createtab_stmt string"
         )
 
@@ -1672,7 +1688,8 @@ class GlueSparkEngine:
             size,
             props,
         )]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "format string, id string, location string, "
             "createdAt long, partitionColumns array<string>, "
@@ -1779,7 +1796,8 @@ class GlueSparkEngine:
                         props[k.strip()] = v.strip()
         else:
             raise GlueSparkError(hint)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             sorted(props.items()), "key string, value string"
         )
 
@@ -1809,7 +1827,8 @@ class GlueSparkEngine:
             exists = False
         if exists:
             if stmt.if_not_exists:
-                return self.spark.createDataFrame(
+                return local_frame(
+                    self.spark,
                     [("CLONE", None, 0, 0, 0)],
                     "operation string, version string, "
                     "rows_updated long, rows_inserted long, "
@@ -1864,7 +1883,8 @@ class GlueSparkEngine:
                 parameters={"spark.sql.sources.provider": "delta"},
             )
         )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [("CLONE", "0", 0, 0, 0)],
             "operation string, version string, rows_updated long, "
             "rows_inserted long, rows_deleted long",
@@ -1917,7 +1937,8 @@ class GlueSparkEngine:
             )
         )
         self.invalidate_table(stmt.ref.database, stmt.ref.table)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [("CONVERT", "0", 0, 0, 0)],
             "operation string, version string, rows_updated long, "
             "rows_inserted long, rows_deleted long",
@@ -1949,7 +1970,8 @@ class GlueSparkEngine:
             exists = False
         if exists:
             if stmt.if_not_exists:
-                return self.spark.createDataFrame(
+                return local_frame(
+                    self.spark,
                     [("CREATE TABLE", None, 0, 0, 0)],
                     "operation string, version string, "
                     "rows_updated long, rows_inserted long, "
@@ -2028,7 +2050,8 @@ class GlueSparkEngine:
             )
         )
         self.invalidate_table(ref.database, ref.table)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (
                     "CREATE TABLE",
@@ -2060,7 +2083,8 @@ class GlueSparkEngine:
             self.store.get_table(ref.database, ref.table)
         except TableNotFoundError:
             if stmt.if_exists:
-                return self.spark.createDataFrame(
+                return local_frame(
+                    self.spark,
                     [("DROP TABLE", None, 0, 0, 0)],
                     "operation string, version string, "
                     "rows_updated long, rows_inserted long, "
@@ -2069,7 +2093,8 @@ class GlueSparkEngine:
             raise
         self.store.unregister_table(ref.database, ref.table)
         self.invalidate_table(ref.database, ref.table)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [("DROP TABLE", None, 0, 0, 0)],
             "operation string, version string, rows_updated long, "
             "rows_inserted long, rows_deleted long",
@@ -2103,7 +2128,8 @@ class GlueSparkEngine:
             version = optimize_delta(self.spark, loc, purge_only=True)
             if version is not None:
                 self.invalidate_table(tbl.database, tbl.name)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [("REORG",
                   None if version is None else str(version), 0)],
                 "operation string, version string, files_removed long",
@@ -2125,12 +2151,14 @@ class GlueSparkEngine:
 
             version, gone = fsck_delta(loc, dry_run=stmt.dry_run)
             if stmt.dry_run:
-                return self.spark.createDataFrame(
+                return local_frame(
+                    self.spark,
                     [(str(p),) for p in gone], "path string"
                 )
             if version is not None:
                 self.invalidate_table(tbl.database, tbl.name)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [("FSCK",
                   None if version is None else str(version),
                   len(gone))],
@@ -2178,7 +2206,8 @@ class GlueSparkEngine:
                 )
             if version is not None:
                 self.invalidate_table(tbl.database, tbl.name)
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [("OPTIMIZE",
                   None if version is None else str(version), 0)],
                 "operation string, version string, files_removed long",
@@ -2222,10 +2251,12 @@ class GlueSparkEngine:
             # the deletable set itself, nothing deleted — the
             # look-before-you-leap half of vacuum_delta/clean_hudi/
             # remove_iceberg_orphans surfaced through SQL
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(str(v),) for v in sorted(victims)], "path string"
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [("VACUUM", None, len(victims))],
             "operation string, version string, files_removed long",
         )
@@ -2721,7 +2752,7 @@ class GlueSparkEngine:
         degrades to the reference's ``SELECT NULL LIMIT 0`` shape
         (/root/reference/src/sql-transformer.ts:320-322)."""
         if schema is not None:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         if sample_path:
             reader = self.spark.read
             if base_path:
@@ -3553,7 +3584,7 @@ class GlueSparkEngine:
             tuple([f.path] + [f.partition_values.get(k) for k in keys])
             for f in files
         ]
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def _prune_distributed(
         self, files: list[FileInfo], keys: list[str], predicate
@@ -3816,7 +3847,7 @@ class GlueSparkEngine:
             + [StructField(c, StringType(), True) for c in pv_cols]
         )
         pvdf = (
-            self.spark.createDataFrame(rows, pv_schema)
+            local_frame(self.spark, rows, pv_schema)
             .withColumn("__pv_path", _strip_scheme(F.col("__pv_path")))
         )
         extractors = {

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from glue_table_cache_spark.session import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential left-fold dot product — deterministic element order.
@@ -488,7 +490,8 @@ def ivf_topk(
     )
     spark = corpus.sparkSession
     cent_df = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             _centroid_rows(centroids), "cluster int, centroid array<double>"
         )
     )
@@ -1005,7 +1008,8 @@ def pq_train(
     spark = corpus.sparkSession
     for _ in range(iters):
         book_df = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(s, c, cent) for (s, c), cent in sorted(books.items())],
                 "sub int, code int, cent array<double>",
             )
@@ -1072,7 +1076,8 @@ def pq_encode(
     subs = _subvectors(v, "v", dim, m)
     spark = corpus.sparkSession
     book_df = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             codebooks, "sub int, code int, cent array<double>"
         )
     )
@@ -1169,7 +1174,8 @@ def pq_topk(
     # one partial per broadcast codebook row, assembled by two
     # aggregations bounded at |Q|·m rows — no driver-side loop
     book_df = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             list(codebooks), "s int, c int, bv array<double>"
         )
     )
@@ -1271,7 +1277,8 @@ def ivfpq_encode(
         F.col(vec_col).cast("array<double>").alias("v"),
     )
     cent_df = F.broadcast(
-        corpus.sparkSession.createDataFrame(
+        local_frame(
+            corpus.sparkSession,
             _centroid_rows(centroids),
             "cluster int, centroid array<double>",
         )
@@ -1362,7 +1369,8 @@ def ivfpq_topk(
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
     cent_df = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             _centroid_rows(centroids),
             "cluster int, centroid array<double>",
         )
@@ -1386,7 +1394,8 @@ def ivfpq_topk(
     # one partial per broadcast codebook row, assembled by two
     # aggregations bounded at |Q|·m rows
     book_df = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             list(codebooks), "s int, c int, bv array<double>"
         )
     )

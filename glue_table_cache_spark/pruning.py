@@ -34,6 +34,7 @@ from dataclasses import dataclass
 from typing import Any
 
 from glue_table_cache_spark.listing import FileInfo
+from glue_table_cache_spark.transformer import serialize_sql
 
 # --------------------------------------------------------------------------
 # Predicate tree
@@ -209,14 +210,7 @@ def parse_where_clause(sql: str) -> dict | None:
     /root/reference/src/sql-transformer.ts:13-25).  Returns None when
     duckdb is unavailable, the SQL fails to parse, or there is no WHERE."""
     try:
-        import duckdb
-    except ImportError:  # pragma: no cover
-        return None
-    try:
-        raw = duckdb.sql(
-            "select json_serialize_sql(?::varchar)", params=[sql]
-        ).fetchone()[0]
-        doc = json.loads(raw)
+        doc = json.loads(serialize_sql(sql))
     except Exception:
         return None
     if doc.get("error"):

@@ -51,6 +51,7 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 from glue_table_cache_spark.errors import GlueSparkError
+from glue_table_cache_spark.session import local_frame
 from glue_table_cache_spark.sinks.delta_write import (
     _next_version,
     refuse_append_only,
@@ -216,7 +217,8 @@ def delete_from_delta(
                 "vectors (optimize_delta) before deleting more"
             )
         if prior_pairs:
-            deleted = spark.createDataFrame(
+            deleted = local_frame(
+                spark,
                 prior_pairs, "__f string, __p long"
             )
             tagged = tagged.join(
@@ -292,7 +294,8 @@ def delete_from_delta(
             if full_prior:
                 ftag = ftag.join(
                     F.broadcast(
-                        spark.createDataFrame(
+                        local_frame(
+                            spark,
                             full_prior, "__f string, __p long"
                         )
                     ),

@@ -47,6 +47,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from glue_table_cache_spark.errors import GlueSparkError
+from glue_table_cache_spark.session import local_frame
 from glue_table_cache_spark.sinks.delta_write import (
     _footer_stats_json,
     _maybe_checkpoint,
@@ -243,7 +244,8 @@ def merge_into_delta(
         if prior_pairs:
             tagged = tagged.join(
                 F.broadcast(
-                    spark.createDataFrame(
+                    local_frame(
+                        spark,
                         prior_pairs, "__f string, __p long"
                     )
                 ),
@@ -552,7 +554,8 @@ def merge_general_delta(
         if prior_pairs:
             t = t.join(
                 F.broadcast(
-                    spark.createDataFrame(
+                    local_frame(
+                        spark,
                         prior_pairs, "__f string, __p long"
                     )
                 ),
@@ -823,7 +826,8 @@ def update_delta(
     if prior_pairs:
         tagged = tagged.join(
             F.broadcast(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     prior_pairs, "__f string, __p long"
                 )
             ),

@@ -43,6 +43,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 
 from glue_table_cache_spark.errors import GlueSparkError
+from glue_table_cache_spark.session import local_frame
 from glue_table_cache_spark.sinks.hive_paths import (
     partition_values_from_dir_parts,
 )
@@ -1285,7 +1286,8 @@ def convert_to_delta(
     part_fields = []
     for name, sql_type in partition_keys or []:
         try:
-            t = spark.createDataFrame(
+            t = local_frame(
+                spark,
                 [], f"`{name}` {sql_type}"
             ).schema.fields[0]
         except Exception:

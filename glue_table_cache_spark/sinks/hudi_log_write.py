@@ -43,6 +43,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from glue_table_cache_spark.errors import GlueSparkError
+from glue_table_cache_spark.session import local_frame
 from glue_table_cache_spark.sinks.hudi_write import _latest_instant
 from glue_table_cache_spark.sources.hudi import (
     _BASE_FILE_RE,
@@ -276,7 +277,8 @@ def write_hudi_log(
     del_keys = [str(k) for k in (delete_keys or [])]
     want_keys |= set(del_keys)
 
-    keys_df = spark.createDataFrame(
+    keys_df = local_frame(
+        spark,
         [(k,) for k in sorted(want_keys)], "__k string"
     )
     scan = spark.read.parquet(*[p for p, _part in groups.values()])
@@ -750,7 +752,8 @@ def _tag_with_partition_columns(spark, df, active):
     if not missing:
         return tagged, []
     pv_map = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (
                     _strip_path(hadoop_uri_encode(p)),
@@ -835,7 +838,8 @@ def _fid_map_df(spark: SparkSession, paths: list[str]):
     from glue_table_cache_spark.sources.iceberg import _strip_path
 
     return F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (_strip_path(hadoop_uri_encode(p)), _fid_of(p))
                 for p in paths
@@ -1533,7 +1537,8 @@ def merge_general_hudi(
                     (*[row[c] for c in pcols], fid)
                 )
             route_df = F.broadcast(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     route_rows,
                     ", ".join(
                         [f"`{c}` string" for c in pcols]

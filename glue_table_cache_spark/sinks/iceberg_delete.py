@@ -36,6 +36,7 @@ from urllib.parse import unquote
 from pyspark.sql import SparkSession
 
 from glue_table_cache_spark.errors import GlueSparkError
+from glue_table_cache_spark.session import local_frame
 from glue_table_cache_spark.sinks.hive_paths import (
     partition_values_from_dir_parts,
 )
@@ -79,7 +80,8 @@ def _attach_identity_partition_columns(spark, tagged, entries, schema):
         ])
         for p, pv, _seq in entries
     ]
-    pv_df = spark.createDataFrame(
+    pv_df = local_frame(
+        spark,
         rows,
         ", ".join(
             ["__pvf string"] + [f"__pv_{f.name} string" for f in missing]

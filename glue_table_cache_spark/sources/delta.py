@@ -45,6 +45,7 @@ from urllib.parse import quote as _quote
 from urllib.parse import unquote
 
 from glue_table_cache_spark.errors import GlueSparkError
+from glue_table_cache_spark.session import local_frame
 from glue_table_cache_spark.sources.iceberg import (
     _path_resolver,
     _read_bytes,
@@ -1613,7 +1614,8 @@ def apply_deletion_vectors(
         for pos in dv_deleted_positions(dv, location, s3_client)
     ]
     spark = df.sparkSession
-    deleted = spark.createDataFrame(
+    deleted = local_frame(
+        spark,
         pairs, "__dv_file string, __dv_pos long"
     )
     return (
@@ -1769,7 +1771,8 @@ def delta_history(spark, location: str, s3_client=None, fs=None):
         raise GlueSparkError(
             f"No Delta log found under {location!r}/_delta_log"
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted(rows),
         "version long, timestamp long, operation string",
     )

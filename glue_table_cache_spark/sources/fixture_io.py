@@ -3,13 +3,16 @@
 The lakehouse fixture builders (delta/iceberg/hudi) write MANY tiny
 data files — one per synthetic commit.  The original shape,
 ``df.coalesce(1).write.parquet(stage)`` + rename, paid one full Spark
-write job per file; worse, fixture frames come from
+write job per file; worse, the tests build fixture frames with
 ``createDataFrame(<python list>)``, whose lineage is a Python
 ``parallelize`` RDD with ``defaultParallelism`` slices, and
 ``coalesce(1)`` evaluates all of those slices SEQUENTIALLY inside one
 task — one Python-worker round-trip per slice.  Measured on
 ``local[32]``: ~6 s per 2-row file; a fixture-heavy test paid it 4-10
 times (tests/test_delta.py::test_active_set_add_then_remove: 40 s).
+(The package's own driver-built frames go through
+:func:`glue_table_cache_spark.session.local_frame` instead: an Arrow
+``LocalRelation`` with no Python worker behind it.)
 
 ``df.toArrow()`` collects the same rows through Spark's own Arrow type
 mapping in ONE parallel job and pyarrow writes the single file

@@ -38,6 +38,7 @@ import posixpath
 import re
 
 from glue_table_cache_spark.errors import GlueSparkError
+from glue_table_cache_spark.session import local_frame
 from glue_table_cache_spark.sources.iceberg import _read_bytes, _resolve_path
 
 #: Completed-instant names: legacy ``<ts>.commit`` and the Hudi 1.x
@@ -678,7 +679,8 @@ def hudi_history(spark, location: str, s3_client=None, fs=None):
         except ValueError:
             pass
         rows.append((int(ts), epoch_ms, kind))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted(rows),
         "version long, timestamp long, operation string",
     )
@@ -744,7 +746,8 @@ def hudi_timeline(spark, location: str, s3_client=None, fs=None):
             if st.get("path")
         )
         rows.append((ts, kind, n_files))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "instant long, action string, files_written int"
     )
 
@@ -915,7 +918,8 @@ def _deltacommit_change_rows(
             f"{record_key_field!r} in the table schema "
             f"{schema.fieldNames()} — pass the table's key field"
         )
-    paths_df = spark.createDataFrame(
+    paths_df = local_frame(
+        spark,
         [(p, str(instant)) for p, *_ in log_stats],
         "path string, commit string",
     ).repartition(min(len(log_stats), 64))
@@ -970,7 +974,8 @@ def _deltacommit_change_rows(
         [f for f in schema.fields if f.name not in pv_cols]
     )
     if pv_cols:
-        pv_df = spark.createDataFrame(
+        pv_df = local_frame(
+            spark,
             [
                 (p, *[pv_by_src[p].get(c) for c in pv_cols])
                 for p, _part, *_ in log_stats
@@ -1424,7 +1429,8 @@ def hudi_table_changes(
                 "the timeline records no extraMetadata.schema to "
                 "type the empty result"
             )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             StructType(
                 list(schema.fields)

@@ -40,6 +40,7 @@ from __future__ import annotations
 import json
 
 from glue_table_cache_spark.errors import GlueSparkError
+from glue_table_cache_spark.session import local_frame
 
 #: Hudi's record-key meta column, present in every real Hudi table
 DEFAULT_RECORD_KEY = "_hoodie_record_key"
@@ -178,7 +179,7 @@ def hudi_mor_read(
                 "needs a schema to type the log payloads — pass the "
                 "timeline's recorded extraMetadata.schema"
             )
-        base = spark.createDataFrame([], schema)
+        base = local_frame(spark, [], schema)
     if record_key_field not in base.columns:
         raise GlueSparkError(
             f"record key field {record_key_field!r} is not in the "
@@ -195,7 +196,8 @@ def hudi_mor_read(
     data_cols = base.columns
 
     if base_entries:
-        instant_map = spark.createDataFrame(
+        instant_map = local_frame(
+            spark,
             [
                 (_strip_path(p), str(ts))
                 for p, _pv, ts in base_entries
@@ -231,7 +233,8 @@ def hudi_mor_read(
         )
 
     if log_entries:
-        paths_df = spark.createDataFrame(
+        paths_df = local_frame(
+            spark,
             [(p, str(ts)) for p, ts in log_entries],
             "path string, commit string",
         ).repartition(min(len(log_entries), 64))
@@ -259,7 +262,8 @@ def hudi_mor_read(
         )
         if pv_cols:
             types = {f.name: f.dataType for f in base.schema.fields}
-            pv_df = spark.createDataFrame(
+            pv_df = local_frame(
+                spark,
                 [
                     (p, *[log_pv.get(p, {}).get(c) for c in pv_cols])
                     for p, _ts in log_entries

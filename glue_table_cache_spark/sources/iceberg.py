@@ -22,12 +22,14 @@ files sitting in the data directory are invisible, the hygiene property
 the reference's integration test asserts.
 
 All four steps are metadata-scale and run on the driver — except the
-per-manifest Avro decode at extreme manifest counts (r12): a snapshot
-referencing at least :data:`DISTRIBUTED_MANIFEST_MIN_COUNT` manifests
-decodes them executor-side via one ``mapInPandas`` over the manifest
-paths (:func:`_decode_manifests_distributed`); the manifest-LIST read
-and all validation stay driver-side.  The returned path list feeds
-the distributed parquet scan.  Avro decoding uses
+per-manifest Avro decode of very large snapshots: when the manifests
+a snapshot references add up to at least
+:data:`DISTRIBUTED_MANIFEST_MIN_BYTES` (the manifest list's
+``manifest_length`` sum, so the gate reads nothing extra), they decode
+executor-side via one ``mapInPandas`` over the manifest paths
+(:func:`_decode_manifests_distributed`); the manifest-LIST read and
+all validation stay driver-side.  The returned path list feeds the
+distributed parquet scan.  Avro decoding uses
 :mod:`glue_table_cache_spark.sources.avro_lite` (neither fastavro nor
 the spark-avro module ship in this environment).
 """
@@ -39,6 +41,7 @@ import posixpath
 from pathlib import Path
 
 from glue_table_cache_spark.errors import GlueSparkError
+from glue_table_cache_spark.session import local_frame
 from glue_table_cache_spark.sources.avro_lite import read_avro_bytes
 
 
@@ -63,16 +66,40 @@ def _read_json(path: str, s3_client=None) -> dict:
     return json.loads(_read_bytes(path, s3_client))
 
 
-#: Distributed-decode gate (r12): a snapshot referencing at least this
-#: many manifests decodes them EXECUTOR-side (one ``mapInPandas`` over
-#: the manifest paths, the pure-Python Avro codec running in parallel on
-#: the workers) instead of serially on the driver — the driver keeps
-#: only the manifest-LIST read and the per-entry validation, so the
-#: walk's driver critical path stops growing with manifest count.
-#: Below the threshold the driver path stays (no Spark-job overhead for
-#: small tables).  Requires an active SparkSession and no injected
-#: ``s3_client`` (a boto3 client cannot ship to executors).
-DISTRIBUTED_MANIFEST_MIN_COUNT = 64
+#: Distributed-decode gate, in manifest bytes: a snapshot whose
+#: manifests add up to at least this many bytes (the manifest list's
+#: ``manifest_length`` sum) decodes them EXECUTOR-side (one
+#: ``mapInPandas`` over the manifest paths, the pure-Python Avro codec
+#: running in parallel on the workers) instead of serially on the
+#: driver — the driver keeps only the manifest-LIST read and the
+#: per-entry validation, so the walk's driver critical path stops
+#: growing with manifest bytes.  Below the gate the driver decodes
+#: and no Spark job starts.  Same unit as the Delta checkpoint gate
+#: (``sources.delta.DISTRIBUTED_CHECKPOINT_MIN_BYTES``).  Requires an
+#: active SparkSession and no injected ``s3_client`` (a boto3 client
+#: cannot ship to executors).
+#:
+#: Crossover, median wall ms of a warm walk, driver / distributed, over
+#: lake-shaped manifests with column stats (the 64-manifest benchmark
+#: lake's manifests copied k times; 4-core host, ``local[3]``):
+#:
+#: ============== ===================== =============
+#: manifest bytes with a pushed filter   without one
+#: ============== ===================== =============
+#: 0.43 MB        174 / 478             138 / 547
+#: 0.86 MB        237 / 476             214 / 676
+#: 1.72 MB        636 / 550             503 / 890
+#: 3.43 MB        1,336 / 674           1,137 / 1,462
+#: 6.86 MB        2,802 / 901           2,230 / 2,614
+#: 13.72 MB       4,362 / 1,394         4,590 / 4,880
+#: ============== ===================== =============
+#:
+#: Without a pushed filter the driver leg also spends less total CPU
+#: (Python plus JVM) at every size measured; with one it wins on CPU
+#: up to about 5 MB and on wall time up to about 1.5 MB.  2 MiB keeps
+#: small and mid-sized snapshots (and the 64-manifest, 0.43 MB
+#: point-query lake) off the Python workers.
+DISTRIBUTED_MANIFEST_MIN_BYTES = 2 * 1024 * 1024
 
 
 def _decode_manifests_distributed(
@@ -123,11 +150,11 @@ def _decode_manifests_distributed(
             yield pd.DataFrame({"path": out_p, "blob": out_b})
 
     uniq = sorted(set(paths))
-    # createDataFrame already slices across defaultParallelism — no
-    # repartition (that would add a shuffle just to re-spread a
-    # metadata-scale path list)
+    # a local relation's scan already slices across
+    # defaultParallelism — no repartition (that would add a shuffle
+    # just to re-spread a metadata-scale path list)
     rows = (
-        spark.createDataFrame([(p,) for p in uniq], "path string")
+        local_frame(spark, [(p,) for p in uniq], "path string")
         .mapInPandas(_decode, schema="path string, blob binary")
         .collect()
     )
@@ -170,24 +197,31 @@ class _LazyManifests:
 
 
 def _manifest_reader(
-    manifest_paths: list[str],
+    list_rows: list[dict],
+    resolve,
     s3_client=None,
     keep_fn=None,
     data_paths: set[str] | None = None,
     applied: list | None = None,
 ):
     """``callable(resolved_path) -> entries`` for a snapshot's
-    manifests: executor-side bulk decode at or above
-    :data:`DISTRIBUTED_MANIFEST_MIN_COUNT` (active session, no
-    injected client), else the driver codec per call.  ``keep_fn`` /
-    ``data_paths`` push query predicates into the distributed decode
-    (see :func:`_decode_manifests_distributed`); the driver fallback
-    ignores them — the engine's driver-side prune still runs over
-    whatever this returns, so both paths converge on the same kept
-    set."""
+    manifest-list rows (paths mapped through ``resolve``):
+    executor-side bulk decode when their ``manifest_length`` sum
+    reaches :data:`DISTRIBUTED_MANIFEST_MIN_BYTES` (active session,
+    no injected client), else the driver codec per call.
+    ``keep_fn`` / ``data_paths`` push query predicates into the
+    distributed decode (see :func:`_decode_manifests_distributed`);
+    the driver fallback ignores them — the engine's driver-side prune
+    still runs over whatever this returns, so both paths converge on
+    the same kept set."""
+    lengths = {
+        resolve(r["manifest_path"]): int(r.get("manifest_length") or 0)
+        for r in list_rows
+    }
     if (
         s3_client is None
-        and len(set(manifest_paths)) >= DISTRIBUTED_MANIFEST_MIN_COUNT
+        and lengths
+        and sum(lengths.values()) >= DISTRIBUTED_MANIFEST_MIN_BYTES
     ):
         from pyspark.sql import SparkSession
 
@@ -197,7 +231,7 @@ def _manifest_reader(
                 applied.append(True)
             decoded = _decode_manifests_distributed(
                 spark,
-                manifest_paths,
+                list(lengths),
                 keep_fn=keep_fn,
                 data_paths=data_paths,
             )
@@ -696,7 +730,8 @@ def iceberg_scan_details(
     }
     pushdown_applied: list = []
     read_manifest = _manifest_reader(
-        [_res(r["manifest_path"]) for r in list_rows],
+        list_rows,
+        _res,
         s3_client,
         keep_fn=keep_fn,
         data_paths=data_manifest_paths,
@@ -845,7 +880,8 @@ def apply_equality_deletes(df, entries, eq_deletes):
     seq_rows = [
         (_strip_path(path), int(seq)) for path, _pv, seq in entries
     ]
-    seq_df = spark.createDataFrame(
+    seq_df = local_frame(
+        spark,
         seq_rows, "__eq_file string, __data_seq long"
     )
     out = (
@@ -944,7 +980,8 @@ def iceberg_snapshots(spark, location: str, s3_client=None, fs=None):
         )
         for s in meta.get("snapshots") or []
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "snapshot_id long, sequence_number long, timestamp_ms long, "
         "manifest_list string",
@@ -1042,7 +1079,8 @@ def iceberg_metadata_table(
             )
             for s in snapshots
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "committed_at timestamp, snapshot_id long, "
             "parent_id long, operation string, "
@@ -1076,7 +1114,8 @@ def iceberg_metadata_table(
             )
             for s in snapshots
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "made_current_at timestamp, snapshot_id long, "
             "parent_id long, is_current_ancestor boolean",
@@ -1093,7 +1132,8 @@ def iceberg_metadata_table(
                 (meta.get("refs") or {}).items()
             )
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "name string, type string, snapshot_id long, "
             "max_reference_age_in_ms long",
@@ -1122,7 +1162,7 @@ def iceberg_metadata_table(
             "or partitions"
         )
     if cur is None:
-        return spark.createDataFrame([], schemas[kind])
+        return local_frame(spark, [], schemas[kind])
     snap_seq = cur.get("sequence-number", 0)
     list_rows = read_avro_bytes(
         _read_bytes(
@@ -1142,7 +1182,8 @@ def iceberg_metadata_table(
             )
             for r in list_rows
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "content int, path string, length long, "
             "partition_spec_id int, added_snapshot_id long, "
@@ -1151,11 +1192,7 @@ def iceberg_metadata_table(
     rows = []
     agg: dict = {}  # partitions: (tuple(pv), spec_id) -> [rc, fc, sz]
     read_manifest = _manifest_reader(
-        [
-            _resolve_path(location, r["manifest_path"])
-            for r in list_rows
-        ],
-        s3_client,
+        list_rows, _path_resolver(location), s3_client
     )
     for r in list_rows:
         m = _resolve_path(location, r["manifest_path"])
@@ -1194,7 +1231,7 @@ def iceberg_metadata_table(
                 agg.items(), key=lambda kv: repr(kv[0])
             )  # repr: NULL partition values don't order vs str
         ]
-    return spark.createDataFrame(rows, schemas[kind])
+    return local_frame(spark, rows, schemas[kind])
 
 
 def iceberg_history(spark, location: str, s3_client=None, fs=None):
@@ -1226,7 +1263,8 @@ def iceberg_history(spark, location: str, s3_client=None, fs=None):
         )
         for s in meta.get("snapshots") or []
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted(rows),
         "version long, timestamp long, operation string, "
         "is_current boolean",
@@ -1367,7 +1405,8 @@ def _tagged_prior_scan(spark, location: str, entries: list):
     df = spark.read.option("basePath", location).parquet(
         *[p for p, _pv, _s in entries]
     )
-    seq_df = spark.createDataFrame(
+    seq_df = local_frame(
+        spark,
         [
             (_strip_path(hadoop_uri_encode(p)), int(s))
             for p, _pv, s in entries
@@ -1887,7 +1926,8 @@ def iceberg_table_changes(
         )
 
         fields = list(schema.fields) if schema is not None else []
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             StructType(
                 fields

@@ -18,6 +18,7 @@ we never round-trip the query through another dialect's unparser.
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 from dataclasses import dataclass
@@ -86,18 +87,29 @@ def _unquote(ident: str) -> str:
     return ident
 
 
+@functools.lru_cache(maxsize=256)
+def serialize_sql(sql: str) -> str:
+    """DuckDB's ``json_serialize_sql`` of ``sql``, as the JSON text.
+
+    One statement's text is serialized by ref resolution, partition
+    predicate extraction and the metadata-prune fingerprint; the cache
+    makes that one DuckDB call.  Callers ``json.loads`` the text, so
+    each gets its own objects.  Raises when duckdb is missing or the
+    call fails (failures are not cached); a parse error is a JSON
+    document with ``"error": true``."""
+    import duckdb
+
+    return duckdb.sql(
+        "select json_serialize_sql(?::varchar)", params=[sql]
+    ).fetchone()[0]
+
+
 def _ast_refs(sql: str) -> list[TableReference] | None:
     """BASE_TABLE nodes with glue catalog, via DuckDB's AST (mirrors the
     JSONPath walk at /root/reference/src/sql-transformer.ts:69-78).
     None when the parse fails or duckdb is missing."""
     try:
-        import duckdb
-
-        doc = json.loads(
-            duckdb.sql(
-                "select json_serialize_sql(?::varchar)", params=[sql]
-            ).fetchone()[0]
-        )
+        doc = json.loads(serialize_sql(sql))
     except Exception:
         return None
     if doc.get("error"):

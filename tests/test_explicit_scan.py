@@ -226,3 +226,29 @@ def test_tracked_keys_concurrent_record_and_retire():
     assert len(tracked) <= 8
     live = {k for k in eng._listing_cache.keys() if "#" in k}
     assert live <= set(tracked)
+
+
+def test_cold_hive_sql_serializes_once(spark, hive_store, monkeypatch):
+    """Ref resolution, partition-predicate extraction and the
+    metadata-prune fingerprint share one DuckDB serialization of a
+    statement's text."""
+    import duckdb
+
+    from glue_table_cache_spark.transformer import serialize_sql
+
+    calls = []
+    real = duckdb.sql
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    serialize_sql.cache_clear()
+    monkeypatch.setattr(duckdb, "sql", counting)
+    eng = GlueSparkEngine(spark, hive_store)
+    q = (
+        "SELECT count(*) AS n FROM glue.tpch.orders_part "
+        "WHERE year = '1995' AND month = '03' /* serialize-once */"
+    )
+    assert eng.sql(q).first().n > 0
+    assert len(calls) == 1

@@ -1094,7 +1094,7 @@ def test_distributed_manifest_decode_matches_driver(
         ],
     )
     drv = ice.iceberg_scan_details(str(base), with_stats=True)
-    monkeypatch.setattr(ice, "DISTRIBUTED_MANIFEST_MIN_COUNT", 1)
+    monkeypatch.setattr(ice, "DISTRIBUTED_MANIFEST_MIN_BYTES", 0)
     dist = ice.iceberg_scan_details(str(base), with_stats=True)
     assert dist == drv
     assert dist[0], "fixture should have data entries"

@@ -240,7 +240,7 @@ def test_iceberg_pushdown_prunes_collected_entries(
     full = ice.iceberg_scan_details(str(base), with_stats=True)
     assert len(full[0]) == 3
 
-    monkeypatch.setattr(ice, "DISTRIBUTED_MANIFEST_MIN_COUNT", 1)
+    monkeypatch.setattr(ice, "DISTRIBUTED_MANIFEST_MIN_BYTES", 0)
     factory = iceberg_prune_factory(
         "SELECT * FROM t WHERE year = '1997'", ["year"], {"t"}, True
     )
@@ -267,7 +267,7 @@ def test_iceberg_pushdown_stats_and_unknown(
     import glue_table_cache_spark.sources.iceberg as ice
 
     base = _partitioned_iceberg(spark, tmp_path)
-    monkeypatch.setattr(ice, "DISTRIBUTED_MANIFEST_MIN_COUNT", 1)
+    monkeypatch.setattr(ice, "DISTRIBUTED_MANIFEST_MIN_BYTES", 0)
 
     stats = iceberg_prune_factory(
         "SELECT * FROM t WHERE id >= 4", ["year"], {"t"}, True
@@ -323,7 +323,7 @@ def test_iceberg_pushdown_keeps_delete_files(
             }
         ],
     )
-    monkeypatch.setattr(ice, "DISTRIBUTED_MANIFEST_MIN_COUNT", 1)
+    monkeypatch.setattr(ice, "DISTRIBUTED_MANIFEST_MIN_BYTES", 0)
     factory = iceberg_prune_factory(
         "SELECT * FROM t WHERE year = '1996'", ["year"], {"t"}, True
     )
@@ -507,3 +507,150 @@ def test_mapped_pushdown_divergent_tail_reruns_unpruned(
     assert sorted(p for p, _pv, _dv in entries) == sorted(
         p for p, _pv, _dv in plain
     )
+
+
+def _many_manifest_iceberg(root, n_manifests=64, n_entries=8, parts=16):
+    """Metadata-only Iceberg snapshot over ``n_manifests`` manifests of
+    ``n_entries`` data-file entries, partition ``p`` = manifest % parts
+    (the walk never opens data files)."""
+    import json
+
+    from glue_table_cache_spark.sources.avro_lite import write_avro
+    from glue_table_cache_spark.sources.iceberg_fixture import (
+        MANIFEST_ENTRY_SCHEMA,
+        MANIFEST_LIST_SCHEMA,
+    )
+
+    meta = root / "metadata"
+    meta.mkdir(parents=True)
+    list_rows = []
+    for m in range(n_manifests):
+        path = meta / f"manifest-{m}.avro"
+        write_avro(
+            path,
+            MANIFEST_ENTRY_SCHEMA,
+            [
+                {
+                    "status": 1,
+                    "snapshot_id": 1001,
+                    "sequence_number": None,
+                    "data_file": {
+                        "content": 0,
+                        "file_path": f"data/p={m % parts}/f-{m}-{e}.parquet",
+                        "file_format": "PARQUET",
+                        "partition": {"p": str(m % parts)},
+                        "record_count": 10,
+                        "file_size_in_bytes": 100,
+                        "equality_ids": None,
+                        "lower_bounds": None,
+                        "upper_bounds": None,
+                        "null_value_counts": None,
+                    },
+                }
+                for e in range(n_entries)
+            ],
+        )
+        list_rows.append(
+            {
+                "manifest_path": str(path),
+                "manifest_length": path.stat().st_size,
+                "partition_spec_id": 0,
+                "content": 0,
+                "sequence_number": 1,
+                "added_snapshot_id": 1001,
+            }
+        )
+    mlist = meta / "snap-1001.avro"
+    write_avro(mlist, MANIFEST_LIST_SCHEMA, list_rows)
+    (meta / "v1.metadata.json").write_text(
+        json.dumps(
+            {
+                "format-version": 2,
+                "location": str(root),
+                "last-sequence-number": 1,
+                "current-snapshot-id": 1001,
+                "current-schema-id": 0,
+                "schemas": [
+                    {
+                        "schema-id": 0,
+                        "type": "struct",
+                        "fields": [
+                            {"id": 1, "name": "id", "required": False,
+                             "type": "long"},
+                            {"id": 2, "name": "p", "required": False,
+                             "type": "string"},
+                        ],
+                    }
+                ],
+                "partition-specs": [
+                    {
+                        "spec-id": 0,
+                        "fields": [
+                            {"name": "p", "transform": "identity",
+                             "source-id": 2, "field-id": 1000}
+                        ],
+                    }
+                ],
+                "default-spec-id": 0,
+                "snapshots": [
+                    {
+                        "snapshot-id": 1001,
+                        "sequence-number": 1,
+                        "timestamp-ms": 1700000000000,
+                        "manifest-list": str(mlist),
+                    }
+                ],
+            }
+        )
+    )
+    return str(root), sum(r["manifest_length"] for r in list_rows)
+
+
+def test_iceberg_manifest_byte_gate(spark, tmp_path, monkeypatch):
+    """A cold walk of a 64-manifest snapshot below the byte gate
+    decodes on the driver and starts no Spark job; it equals the
+    forced-distributed walk, with and without a prune factory (the
+    pushed predicate keeps exactly the entries of its partition)."""
+    import uuid
+
+    import glue_table_cache_spark.sources.iceberg as ice
+
+    loc, total = _many_manifest_iceberg(tmp_path / "ice64")
+    assert total < ice.DISTRIBUTED_MANIFEST_MIN_BYTES
+    q = "SELECT * FROM t WHERE p = '7'"
+
+    def jobs_during(fn):
+        sc = spark.sparkContext
+        group = f"gate-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "manifest gate probe")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    def walk(factory=None):
+        return ice.iceberg_scan_details(
+            loc, with_stats=True, prune_factory=factory
+        )
+
+    driver, jobs = jobs_during(walk)
+    assert jobs == []
+    assert len(driver[0]) == 64 * 8
+    fac = iceberg_prune_factory(q, ["p"], {"t"}, True)
+    driver_f, jobs = jobs_during(lambda: walk(fac))
+    assert jobs == []
+    # below the gate the predicate is not pushed: the full set comes
+    # back, and the caching layer must not key it by predicate
+    assert driver_f == driver and not fac.applied
+
+    monkeypatch.setattr(ice, "DISTRIBUTED_MANIFEST_MIN_BYTES", 0)
+    dist, jobs = jobs_during(walk)
+    assert jobs and dist == driver
+    fac = iceberg_prune_factory(q, ["p"], {"t"}, True)
+    dist_f = walk(fac)
+    assert fac.applied
+    assert dist_f[0] == [e for e in driver[0] if e[1]["p"] == "7"]
+    assert len(dist_f[0]) == 4 * 8
+    assert dist_f[1:] == driver[1:]
