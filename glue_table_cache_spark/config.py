@@ -42,12 +42,6 @@ class EngineConfig:
     #: materialized file lists (local HTTP block cache,
     #: /root/reference/src/glue-table-cache.ts:54-65, 235-238)
     proxy_address: str | None = None
-    #: listings with at least this many files prune via a Spark
-    #: DataFrame filter instead of a driver-side Python loop.  Measured
-    #: locally the loop wins up to ~200k files (0.4s vs 2.1s DF
-    #: overhead); the DF path is about bounding driver CPU at 10⁶⁺
-    #: files, so the crossover default is high
-    listing_df_threshold: int = 500_000
     #: zone-map file skipping from table-format metadata (Delta
     #: ``add.stats``, Iceberg manifest bounds): data-column predicates
     #: drop whole files whose min/max ranges provably cannot match.

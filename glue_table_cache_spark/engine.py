@@ -19,8 +19,16 @@ rewritten query to Catalyst:
   listing or footer-inference job before its own.  Only a pruned list
   over ``max_explicit_files`` falls back to Spark's native directory
   scan (``InMemoryFileIndex`` + ``PruneFileSourcePartitions``).
-* ICEBERG tables resolve the current snapshot's data files via the
-  manifest walk in :mod:`glue_table_cache_spark.sources.iceberg`.
+* DELTA, ICEBERG and HUDI tables resolve their active data files from
+  the format's own metadata walk (transaction log, manifests,
+  timeline), cached like a listing, then read the kept paths.
+
+Every read path picks its files in one place,
+``GlueSparkEngine._prune_and_skip``: identity partition pruning,
+transform pruning (Iceberg hidden partitions, Delta generated
+columns) and zone-map skipping over the walk's per-file stats — the
+reference's single ``SELECT list(path) FROM listing WHERE …``
+(its ``src/glue-table-cache.ts:323-333``).
 """
 
 from __future__ import annotations
@@ -65,9 +73,9 @@ from glue_table_cache_spark.projection import (
     relative_path_column,
 )
 from glue_table_cache_spark.pruning import (
+    And,
     TruePredicate,
     extract_partition_predicate,
-    predicate_to_column,
     prune_files,
 )
 from glue_table_cache_spark.session import local_frame
@@ -2411,68 +2419,46 @@ class GlueSparkEngine:
         if not table.location:
             raise NoStorageLocationError(table.database, table.name)
         keys = [k.name for k in table.partition_keys]
-        lkey = listing_cache_key(table.location, keys)
-        self._track_listing_key(table, lkey)
-        loaded: list = []
-
-        def loader():
-            loaded.append(True)
-            return self._list_files(table)
-
-        value = self._listing_cache.get_or_load(lkey, loader)
-        if loaded:
-            # a fresh FULL listing: predicate-scoped (#w:) entries
-            # from before it must not outlive it (r14, same contract
-            # as the format-scan cache — see _drop_pruned_keys)
-            self._drop_pruned_keys(table, lkey)
-        return value
+        return self._cached_listing(
+            table,
+            listing_cache_key(table.location, keys),
+            lambda: self._list_files(table),
+        )
 
     def _list_files_maybe_pruned(
         self, tbl: CatalogTable, query: str | None, predicate
     ) -> tuple[list[FileInfo], "ListingStats | None"]:
         """The r14 prefix-pruned listing behind the same
         predicate-fingerprint caching as the table-format walks
-        (:meth:`_format_scan_cached_pruned`): a fresh bare (full)
-        listing is always preferred and retires predicate-scoped
-        entries; a pruned listing caches under its fingerprint so no
-        other query ever serves from the narrowed set; a walk that
-        pruned nothing IS the full listing and is mirrored under the
-        bare key.  Returns ``(files, stats)`` — ``stats`` is ``None``
-        on the flat path (then an empty list means a truly empty
-        table)."""
+        (:meth:`_cached_listing`); a walk that pruned no prefix IS the
+        full listing.  Returns ``(files, stats)`` — ``stats`` is
+        ``None`` on the flat path (then an empty list means a truly
+        empty table)."""
         if predicate is None or not tbl.location:
             return self.list_table_files_cached(tbl), None
-        keys = [k.name for k in tbl.partition_keys]
-        bare = listing_cache_key(tbl.location, keys)
-        hit = self._listing_cache.peek(bare)
-        if hit is not None:
-            self._track_listing_key(tbl, bare)
-            self._drop_pruned_keys(tbl, bare)
-            return hit, None
         from glue_table_cache_spark.meta_prune import _fingerprint
 
+        keys = [k.name for k in tbl.partition_keys]
         fp = _fingerprint(
             query, keys, {tbl.name, tbl.qualified_name}, False
         )
         if fp is None:
             return self.list_table_files_cached(tbl), None
-        skey = f"{bare}#w:{fp}"
-        loaded: list = []
 
         def loader():
-            loaded.append(True)
             stats = ListingStats()
             return self._list_files(tbl, predicate, stats), stats
 
-        files, stats = self._listing_cache.get_or_load(skey, loader)
-        self._track_listing_key(tbl, skey)
-        if loaded and not stats.prefixes_pruned:
-            # nothing was pruned: this IS the full listing — share it
-            # under the bare key and retire other predicate entries
-            self._listing_cache.get_or_load(bare, lambda: files)
-            self._track_listing_key(tbl, bare)
-            self._drop_pruned_keys(tbl, bare, keep=skey)
-        return files, stats
+        value = self._cached_listing(
+            tbl,
+            listing_cache_key(tbl.location, keys),
+            loader,
+            fp,
+            lambda v: None if v[1].prefixes_pruned else v[0],
+        )
+        # a live bare entry is the flat listing itself; a walk caches
+        # its (files, stats) pair
+        return value if isinstance(value, tuple) else (value, None)
 
     def invalidate_table(self, database: str, table: str) -> None:
         """Reference ``invalidateTable``
@@ -2528,28 +2514,48 @@ class GlueSparkEngine:
         df = self._dataframe_for(tbl, query, travel)
         df.createOrReplaceTempView(view_name)
 
-    def _format_scan_cached(
-        self, tbl: CatalogTable, load: Callable, key_suffix: str = ""
+    def _cached_listing(
+        self,
+        tbl: CatalogTable,
+        bare: str,
+        load: Callable,
+        fingerprint: str | None = None,
+        full: Callable = lambda value: value,
     ):
-        """Table-format metadata walks (Delta log replay, Iceberg
-        manifest walk, Hudi timeline walk) through the LISTING cache —
-        the same LRU+TTL+single-flight treatment the reference gives
-        its S3 listings (/root/reference/src/glue-table-cache.ts:349-466),
-        because that is exactly what these walks are: the format's own
-        file listing.  ``s3_listing_ttl_ms`` bounds staleness; a new
-        commit/snapshot is visible after TTL expiry or an explicit
+        """A table's file listing or format metadata walk (Delta log
+        replay, Iceberg manifest walk, Hudi timeline walk) through
+        the LISTING cache — the same LRU+TTL+single-flight treatment
+        the reference gives its S3 listings (its
+        ``src/glue-table-cache.ts:349-466``), because
+        these walks are the format's own file listing.
+        ``s3_listing_ttl_ms`` bounds staleness; a new commit/snapshot
+        is visible after TTL expiry or an explicit
         ``invalidate_table``.  Cached values are treated as immutable
         — every consumer rebuilds its own filtered lists.
 
-        ``key_suffix`` (r13) scopes the entry to a pushed-down
-        predicate: a walk whose distributed decode pre-pruned by the
-        query's WHERE clause caches under a predicate fingerprint, so
-        a different query never serves from a narrower active set.
-        All of a table's keys are recorded for invalidation."""
-        key = f"format-scan:{tbl.location}{key_suffix}"
-        self._track_listing_key(tbl, key)
-        if key_suffix:
-            return self._listing_cache.get_or_load(key, load)
+        ``bare`` keys the FULL set, which answers every query.  A walk
+        that can pre-prune by the query's WHERE clause (r13
+        distributed decode, r14 prefix-pruned listing) passes the
+        predicate's ``fingerprint``: a live bare entry is still
+        preferred, else the walk runs INSIDE ``get_or_load`` on
+        ``<bare>#w:<fingerprint>`` (per-key single-flight and
+        retry/backoff), so no other query ever serves from a narrowed
+        set.  ``full(value)`` is the full set to share under the bare
+        key, or ``None`` when the walk did prune.  A bare entry that
+        is freshly loaded or served retires every other ``#w:``
+        entry: a narrower snapshot must never outlive a fresher full
+        walk (if the bare entry later evicts or expires, the same
+        query's view of the table would move BACKWARD within one TTL
+        window).  Every key is recorded for ``invalidate_table``
+        after its entry exists."""
+        key = bare
+        if fingerprint is not None:
+            hit = self._listing_cache.peek(bare)
+            if hit is not None:
+                self._track_listing_key(tbl, bare)
+                self._drop_pruned_keys(tbl, bare)
+                return hit
+            key = f"{bare}#w:{fingerprint}"
         loaded: list = []
 
         def loader():
@@ -2557,10 +2563,13 @@ class GlueSparkEngine:
             return load()
 
         value = self._listing_cache.get_or_load(key, loader)
-        if loaded:
-            # a fresh FULL walk: predicate-scoped entries from before
-            # it must not outlive it (see _drop_pruned_keys)
-            self._drop_pruned_keys(tbl, key)
+        self._track_listing_key(tbl, key)
+        shared = full(value) if loaded else None
+        if shared is not None:
+            if key != bare:
+                self._listing_cache.get_or_load(bare, lambda: shared)
+                self._track_listing_key(tbl, bare)
+            self._drop_pruned_keys(tbl, bare, keep=key)
         return value
 
     #: bound on tracked cache keys per table: each distinct pushed
@@ -2596,61 +2605,6 @@ class GlueSparkEngine:
                     del keys[victim]
             keys.pop(key, None)
             keys[key] = None
-
-    def _format_scan_cached_pruned(
-        self, tbl: CatalogTable, load: Callable, factory
-    ):
-        """Predicate-aware caching for walks whose distributed decode
-        can pre-prune by the query's WHERE clause (r13).  Below the
-        distribution gate pushdown never engages and the walk caches
-        under the bare key exactly as before (full cache sharing
-        across queries); when the decode DID pre-prune (huge
-        checkpoint / manifest set), the narrower result is cached
-        under a predicate-fingerprint key so no other query ever
-        serves from it.  A fresh bare-key entry is always preferred —
-        it answers every predicate.
-
-        The walk itself runs INSIDE ``get_or_load`` on the
-        fingerprint key, keeping the per-key single-flight and
-        retry/backoff every other format-scan load gets (two threads
-        with the same predicate walk once; different predicates on a
-        cold table each walk — their pruned sets differ anyway).
-        When the load comes back un-pruned (below the gate), the full
-        set is mirrored under the bare key so every other query
-        shares it."""
-        if factory is None:
-            return self._format_scan_cached(tbl, load)
-        bare = f"format-scan:{tbl.location}"
-        hit = self._listing_cache.peek(bare)
-        if hit is not None:
-            self._track_listing_key(tbl, bare)
-            # a live bare entry answers every predicate — predicate
-            # -scoped entries must never OUTLIVE it (if the bare entry
-            # later evicts/expires while an older #w: entry survives,
-            # the same query's view of the table would move BACKWARD
-            # within one TTL window), so retire them now
-            self._drop_pruned_keys(tbl, bare)
-            return hit
-        skey = f"{bare}#w:{factory.fingerprint}"
-        loaded: list = []
-
-        def loader():
-            loaded.append(True)
-            factory.applied = False
-            return load()
-
-        value = self._listing_cache.get_or_load(skey, loader)
-        self._track_listing_key(tbl, skey)
-        if loaded and not factory.applied:
-            # gate never crossed: this IS the full active set — share
-            # it under the bare key (a cache hit there means no other
-            # predicate ever re-walks this table), and retire every
-            # OLDER predicate-scoped entry so none can serve a stale
-            # narrower snapshot after this fresher full walk
-            self._listing_cache.get_or_load(bare, lambda: value)
-            self._track_listing_key(tbl, bare)
-            self._drop_pruned_keys(tbl, bare, keep=skey)
-        return value
 
     def _drop_pruned_keys(
         self, tbl: CatalogTable, bare: str, keep: str | None = None
@@ -2690,7 +2644,9 @@ class GlueSparkEngine:
             dt = dt.replace(tzinfo=datetime.timezone.utc)
         return int(dt.timestamp() * 1000)
 
-    def _delta_travel_kwargs(self, location: str, travel: tuple) -> dict:
+    def _delta_travel_kwargs(self, location: str, travel) -> dict:
+        if travel is None:
+            return {}
         kind, val = travel
         if kind == "timestamp":
             return {
@@ -2708,9 +2664,9 @@ class GlueSparkEngine:
             )
         return {"version_offset": latest - val}
 
-    def _iceberg_travel_kwargs(
-        self, location: str, travel: tuple
-    ) -> dict:
+    def _iceberg_travel_kwargs(self, location: str, travel) -> dict:
+        if travel is None:
+            return {}
         kind, val = travel
         if kind == "timestamp":
             return {
@@ -2760,36 +2716,142 @@ class GlueSparkEngine:
             return reader.parquet(*self._proxy([sample_path])).limit(0)
         return self.spark.range(0).select(F.lit(None).alias("null"))
 
-    def _stats_keep_set(
+    def _prune_and_skip(
         self,
-        query: str,
         tbl: CatalogTable,
-        stats_by_path: dict,
-    ) -> set[str] | None:
-        """Zone-map file skipping: paths whose stats say a row MAY
-        match the query's WHERE clause, or ``None`` when no skipping is
-        possible (no usable stats, or no extractable data-column
-        predicate).  Predicates are extracted over the union of
-        stats-bearing columns with the same conservative three-valued
-        machinery as partition pruning — a file is dropped only when
-        its min/max/null-count PROVE it cannot contribute."""
-        from glue_table_cache_spark.pruning import TruePredicate
-        from glue_table_cache_spark.skipping import skip_files
+        query: str | None,
+        files: list[FileInfo],
+        keys: list[str],
+        spec: list[dict] | None = None,
+        stats: Callable[[list[FileInfo]], list | None] | None = None,
+    ) -> list[FileInfo]:
+        """The one file-selection pass every read path runs over its
+        metadata walk — the reference's single ``SELECT list(path)
+        FROM listing WHERE …`` (its
+        ``src/glue-table-cache.ts:323-333``).
+        ``files`` carry each file's partition values as the format
+        records them: path ``k=v`` segments, a Delta add's
+        ``partitionValues``, an Iceberg manifest's partition tuple, a
+        Hudi write stat's partition path.
 
+        1. Identity pruning: the WHERE clause over ``keys``.
+        2. Transform pruning: predicates on the SOURCE columns of
+           ``spec`` (``[{"name", "transform", "source"}]`` — Iceberg
+           hidden partitions, Delta generated partition columns)
+           rewritten soundly into the transformed values the files
+           record (monotone bounds / bucket equality; anything else
+           stays Unknown).
+        3. Zone-map skipping: ``stats(kept)`` gives one
+           :class:`~glue_table_cache_spark.skipping.FileStats` (or
+           ``None``) per surviving file, or ``None`` for no skipping;
+           the predicate is extracted over the union of stats-bearing
+           columns.
+
+        Steps 1 and 2 AND into one predicate for one ``prune_files``
+        call.  Every step is conservative three-valued logic: a file
+        is dropped only when its metadata PROVES no row can match, so
+        the full WHERE clause still runs over what is kept.  Returns
+        the kept files in input order."""
+        if not query or not files:
+            return files
+        idents = {tbl.name, tbl.qualified_name}
+        if keys or spec:
+            preds = []
+            if keys:
+                preds.append(
+                    extract_partition_predicate(query, keys, idents)
+                )
+            if spec:
+                from glue_table_cache_spark.sources.iceberg_partitioning import (  # noqa: E501
+                    transform_partition_predicate,
+                )
+
+                srcs = sorted({f["source"] for f in spec if f["source"]})
+                preds.append(
+                    transform_partition_predicate(
+                        extract_partition_predicate(query, srcs, idents),
+                        spec,
+                    )
+                )
+            live = [p for p in preds if not isinstance(p, TruePredicate)]
+            files = prune_files(
+                files,
+                And(tuple(live)) if len(live) > 1
+                else live[0] if live else TruePredicate(),
+            )
+        per_file = stats(files) if stats is not None and files else None
+        if per_file is None:
+            return files
         cols: set[str] = set()
-        for st in stats_by_path.values():
+        for st in per_file:
             if st is not None:
                 cols.update(st.min_values)
                 cols.update(st.max_values)
                 cols.update(st.null_counts)
         if not cols:
-            return None
-        pred = extract_partition_predicate(
-            query, sorted(cols), {tbl.name, tbl.qualified_name}
-        )
+            return files
+        pred = extract_partition_predicate(query, sorted(cols), idents)
         if isinstance(pred, TruePredicate):
-            return None
-        return skip_files(list(stats_by_path.items()), pred)
+            return files
+        from glue_table_cache_spark.skipping import skip_files
+
+        keep = skip_files(
+            [(f.path, st) for f, st in zip(files, per_file)], pred
+        )
+        return [f for f in files if f.path in keep]
+
+    @staticmethod
+    def _kept_entries(
+        entries: list[tuple], files: list[FileInfo], kept: list[FileInfo]
+    ) -> list[tuple]:
+        """``entries`` (walk tuples, path first) whose file survived
+        :meth:`_prune_and_skip` (``files`` in, ``kept`` out)."""
+        if len(kept) == len(files):
+            return entries
+        paths = {f.path for f in kept}
+        return [e for e in entries if e[0] in paths]
+
+    def _format_walk(
+        self,
+        tbl: CatalogTable,
+        travel: tuple | None,
+        load: Callable,
+        factory=None,
+    ):
+        """A format's metadata walk: through the listing cache for the
+        current state, uncached for a time-travel state."""
+        if travel is not None:
+            return load()
+        bare = f"format-scan:{tbl.location}"
+        if factory is None:
+            return self._cached_listing(tbl, bare, load)
+
+        def fresh():
+            factory.applied = False
+            return load()
+
+        # below the distribution gate pushdown never engages: the
+        # walk is the full active set and is shared under the bare key
+        return self._cached_listing(
+            tbl,
+            bare,
+            fresh,
+            factory.fingerprint,
+            lambda v: None if factory.applied else v,
+        )
+
+    @staticmethod
+    def _in_schema_order(df: DataFrame, schema) -> DataFrame:
+        """Reorder ``df`` to the format metadata schema's column order.
+        Spark appends hive-partition columns at the END of a file scan
+        even under an explicit schema, and inference-path scans can
+        surface columns out of declared order; the metadata order is
+        authoritative (positional INSERT depends on it)."""
+        if schema is not None:
+            want = [f.name for f in schema.fields]
+            if set(want) == set(df.columns) and want != df.columns:
+                return df.select(*want)
+        return df
 
     def _dataframe_for(
         self,
@@ -2854,33 +2916,22 @@ class GlueSparkEngine:
                 hudi_table_schema,
             )
 
-            as_of = int(travel[1]) if travel is not None else None
+            kw = {
+                "fs": self._fs,
+                "as_of_instant": int(travel[1]) if travel else None,
+            }
 
             def _walk_hudi():
                 timeline = _timeline_files(tbl.location, fs=self._fs)
                 if _table_type(timeline) == "MERGE_ON_READ":
-                    return ("MOR",) + hudi_mor_scan_info(
-                        tbl.location, fs=self._fs,
-                        as_of_instant=as_of,
-                    )
+                    return ("MOR",) + hudi_mor_scan_info(tbl.location, **kw)
                 return (
                     "COW",
-                    hudi_scan_info(
-                        tbl.location, fs=self._fs,
-                        as_of_instant=as_of,
-                    ),
-                    hudi_table_schema(
-                        tbl.location, fs=self._fs,
-                        as_of_instant=as_of,
-                    ),
+                    hudi_scan_info(tbl.location, **kw),
+                    hudi_table_schema(tbl.location, **kw),
                 )
 
-            if travel is not None:
-                # travel states bypass the current-state cache, the
-                # DELTA/ICEBERG posture
-                walk = _walk_hudi()
-            else:
-                walk = self._format_scan_cached(tbl, _walk_hudi)
+            walk = self._format_walk(tbl, travel, _walk_hudi)
             if walk[0] == "MOR":
                 from glue_table_cache_spark.sources.hudi_mor import (
                     DEFAULT_RECORD_KEY,
@@ -2893,54 +2944,25 @@ class GlueSparkEngine:
                 # one partition (the write stats record it), so
                 # pruning bases and logs with the same predicate
                 # cannot orphan log records
-                keys = self._hudi_prune_keys(
-                    tbl,
-                    [pv for _p, pv, _t in base_entries]
-                    + [pv for _p, _t, pv in log_entries],
+                files = [
+                    FileInfo(p, pv) for p, pv, _t in base_entries
+                ] + [FileInfo(p, pv) for p, _t, pv in log_entries]
+                kept = self._prune_and_skip(
+                    tbl, query, files, self._hudi_prune_keys(tbl, files)
                 )
-                if query and keys and (base_entries or log_entries):
-                    predicate = extract_partition_predicate(
-                        query, keys, {tbl.name, tbl.qualified_name}
-                    )
-                    kept = {
-                        f.path
-                        for f in prune_files(
-                            [
-                                FileInfo(p, pv)
-                                for p, pv, _t in base_entries
-                            ]
-                            + [
-                                FileInfo(p, pv)
-                                for p, _t, pv in log_entries
-                            ],
-                            predicate,
-                        )
-                    }
-                    base_entries = [
-                        e for e in base_entries if e[0] in kept
-                    ]
-                    log_entries = [
-                        e for e in log_entries if e[0] in kept
-                    ]
+                base_entries = self._kept_entries(base_entries, files, kept)
+                log_entries = self._kept_entries(log_entries, files, kept)
+                base_paths = self._proxy([e[0] for e in base_entries])
+                log_paths = self._proxy([e[0] for e in log_entries])
                 return hudi_mor_read(
                     self.spark,
                     [
                         (pp, pv, ts)
-                        for pp, (_p, pv, ts) in zip(
-                            self._proxy(
-                                [p for p, _pv, _t in base_entries]
-                            ),
-                            base_entries,
-                        )
+                        for pp, (_p, pv, ts) in zip(base_paths, base_entries)
                     ],
                     [
                         (pp, t, pv)
-                        for pp, (_p, t, pv) in zip(
-                            self._proxy(
-                                [p for p, _t, _pv in log_entries]
-                            ),
-                            log_entries,
-                        )
+                        for pp, (_p, t, pv) in zip(log_paths, log_entries)
                     ],
                     record_key_field=tbl.parameters.get(
                         "hoodie.table.recordkey.fields",
@@ -2948,30 +2970,19 @@ class GlueSparkEngine:
                     ),
                     base_path=tbl.location,
                 )
-            entries = walk[1]
-            # TIMELINE-METADATA partition pruning — same shape as the
-            # DELTA/ICEBERG branches, from the write stats' partition
-            # paths (hive-style layouts only; others carry no values)
-            keys = self._hudi_prune_keys(
-                tbl, [pv for _p, pv in entries]
+            # TIMELINE-METADATA partition pruning from the write stats'
+            # partition paths (hive-style layouts only; others carry
+            # no values)
+            files = [FileInfo(p, pv) for p, pv in walk[1]]
+            kept = self._prune_and_skip(
+                tbl, query, files, self._hudi_prune_keys(tbl, files)
             )
-            if query and keys and entries:
-                predicate = extract_partition_predicate(
-                    query, keys, {tbl.name, tbl.qualified_name}
-                )
-                kept = {
-                    f.path
-                    for f in prune_files(
-                        [FileInfo(p, pv) for p, pv in entries],
-                        predicate,
-                    )
-                }
-                entries = [e for e in entries if e[0] in kept]
-            paths = self._proxy([p for p, _pv in entries])
+            paths = self._proxy([f.path for f in kept])
+            schema = walk[2]
             if not paths:
                 return self._empty_scan(
-                    schema=walk[2] if len(walk) > 2 else None,
-                    sample_path=walk[1][0][0] if walk[1] else None,
+                    schema=schema,
+                    sample_path=files[0].path if files else None,
                     base_path=tbl.location,
                 )
             # same basePath treatment as DELTA: hudi partition paths
@@ -2982,11 +2993,11 @@ class GlueSparkEngine:
             # columns, independent of scan order; partition columns in
             # it resolve typed from the k=v directories.  Without one
             # the inferred schema is cached per path list
-            return self._read_paths(
-                paths,
-                base_path=tbl.location,
-                tbl=tbl,
-                schema=walk[2] if len(walk) > 2 else None,
+            return self._in_schema_order(
+                self._read_paths(
+                    paths, base_path=tbl.location, tbl=tbl, schema=schema
+                ),
+                schema,
             )
         if ttype == ETableType.DELTA:
             # beyond the reference (which never handles DELTA): resolve
@@ -2997,6 +3008,7 @@ class GlueSparkEngine:
                 apply_column_mapping,
                 apply_deletion_vectors,
                 delta_scan_info,
+                read_parquet_files,
             )
 
             # r13: push the query's partition/stats predicates INTO
@@ -3009,129 +3021,70 @@ class GlueSparkEngine:
                 delta_prune_factory,
             )
 
+            keys = [k.name for k in tbl.partition_keys]
             prune_factory = delta_prune_factory(
                 query,
-                [k.name for k in tbl.partition_keys],
+                keys,
                 {tbl.name, tbl.qualified_name},
                 self.config.stats_skipping,
             )
-            if travel is not None:
-                # travel states bypass the current-state cache
-                entries, renames, log_schema, gen_fields = (
-                    delta_scan_info(
-                        tbl.location, fs=self._fs, with_schema=True,
-                        with_stats=True, with_partition_fields=True,
-                        allow_nested_mapping=True,
-                        prune_factory=prune_factory,
-                        **self._delta_travel_kwargs(
-                            tbl.location, travel
-                        ),
-                    )
-                )
-            else:
-                entries, renames, log_schema, gen_fields = (
-                    self._format_scan_cached_pruned(
-                        tbl,
-                        lambda: delta_scan_info(
-                            tbl.location, fs=self._fs,
-                            with_schema=True, with_stats=True,
-                            with_partition_fields=True,
-                            allow_nested_mapping=True,
-                            prune_factory=prune_factory,
-                        ),
-                        prune_factory,
-                    )
-                )
+            travel_kwargs = self._delta_travel_kwargs(tbl.location, travel)
+            entries, renames, log_schema, gen_fields = self._format_walk(
+                tbl,
+                travel,
+                lambda: delta_scan_info(
+                    tbl.location, fs=self._fs, with_schema=True,
+                    with_stats=True, with_partition_fields=True,
+                    allow_nested_mapping=True,
+                    prune_factory=prune_factory, **travel_kwargs,
+                ),
+                prune_factory,
+            )
             stats_by_path = {p: s for p, _pv, _dv, s in entries}
-            entries = [(p, pv, dv) for p, pv, dv, _s in entries]
-            # LOG-METADATA partition pruning: the transaction log
-            # already records partitionValues per file, so partition
-            # predicates drop files BEFORE the reader ever sees their
-            # paths — at large file counts this is the difference
-            # between handing Spark 10k paths and 1M (driver memory,
-            # file-index build, task planning), on top of whatever
-            # partition pruning Catalyst repeats later.  Column-mapped
-            # tables (r14) key partitionValues by PHYSICAL name —
-            # translated physical→logical through `renames` so the
-            # same logical-name predicates prune them too.
-            def _log_infos() -> list[FileInfo]:
-                if renames is None:
-                    return [FileInfo(p, pv) for p, pv, _dv in entries]
-                return [
-                    FileInfo(
-                        p,
-                        {
-                            renames.get(k, k): v
-                            for k, v in (pv or {}).items()
-                        },
-                    )
-                    for p, pv, _dv in entries
-                ]
+            # LOG-METADATA pruning and skipping: the transaction log
+            # already records partitionValues and stats per file, so
+            # partition and data-column predicates drop files BEFORE
+            # the reader sees their paths — at large file counts the
+            # difference between handing Spark 10k paths and 1M.  The
+            # metaData's partitionColumns (gen_fields, LOGICAL names)
+            # prune even when the catalog registered no partition
+            # keys, and a partition column generated from another
+            # column (CAST(ts AS DATE), YEAR(ts), DATE_FORMAT,
+            # DATE_TRUNC) prunes from predicates on the SOURCE
+            # column.  Column-mapped tables (r14) key partitionValues
+            # and stats by PHYSICAL name — translated
+            # physical→logical through `renames` (unknown physical
+            # stats keys dropped) so logical-name predicates prune
+            # and skip them too.
+            files = [
+                FileInfo(
+                    p,
+                    pv
+                    if renames is None
+                    else {renames.get(k, k): v for k, v in (pv or {}).items()},
+                )
+                for p, pv, _dv, _s in entries
+            ]
+            stats = None
+            if self.config.stats_skipping:
+                from glue_table_cache_spark.skipping import delta_file_stats
 
-            keys = [k.name for k in tbl.partition_keys]
-            if query and keys and entries:
-                predicate = extract_partition_predicate(
-                    query, keys, {tbl.name, tbl.qualified_name}
-                )
-                kept = {
-                    f.path for f in prune_files(_log_infos(), predicate)
-                }
-                entries = [e for e in entries if e[0] in kept]
-            # GENERATED-COLUMN + log-driven partition pruning: the
-            # metaData's partitionColumns prune even when the catalog
-            # registered no partition keys, and a partition column
-            # generated from another column (delta.generationExpression
-            # — CAST(ts AS DATE), YEAR(ts), DATE_FORMAT, DATE_TRUNC)
-            # prunes from predicates on the SOURCE column through the
-            # same sound transform rewrite the Iceberg hidden
-            # partitioning uses.  gen_fields carry LOGICAL names, so
-            # the physical→logical pv translation (r14) covers mapped
-            # tables here too.
-            if query and entries and gen_fields:
-                from glue_table_cache_spark.sources.iceberg_partitioning import (  # noqa: E501
-                    transform_partition_predicate,
-                )
-
-                srcs = sorted(
-                    {f["source"] for f in gen_fields if f["source"]}
-                )
-                src_pred = extract_partition_predicate(
-                    query, srcs, {tbl.name, tbl.qualified_name}
-                )
-                pv_pred = transform_partition_predicate(
-                    src_pred, gen_fields
-                )
-                kept = {
-                    f.path for f in prune_files(_log_infos(), pv_pred)
-                }
-                entries = [e for e in entries if e[0] in kept]
-            # LOG-STATS zone-map skipping: the add actions' stats JSON
-            # (numRecords/minValues/maxValues/nullCount) is already in
-            # hand, so data-column predicates drop whole files for
-            # free.  Column-mapped tables' stats keys are PHYSICAL
-            # names — translated physical→logical through `renames`
-            # (unknown physical keys dropped) so skipping works there
-            # too without ever matching a stale physical name against
-            # a different column's logical one.
-            if query and entries and self.config.stats_skipping:
-                from glue_table_cache_spark.skipping import (
-                    delta_file_stats,
-                )
-
-                keep = self._stats_keep_set(
-                    query,
-                    tbl,
-                    {
-                        p: delta_file_stats(
-                            stats_by_path.get(p), renames=renames
+                def stats(kept):
+                    return [
+                        delta_file_stats(
+                            stats_by_path.get(f.path), renames=renames
                         )
-                        for p, _pv, _dv in entries
-                    },
-                )
-                if keep is not None:
-                    entries = [e for e in entries if e[0] in keep]
-            raw_paths = [p for p, _pv, _dv in entries]
-            paths = self._proxy(raw_paths)
+                        for f in kept
+                    ]
+
+            entries = self._kept_entries(
+                [(p, pv, dv) for p, pv, dv, _s in entries],
+                files,
+                self._prune_and_skip(
+                    tbl, query, files, keys, gen_fields, stats
+                ),
+            )
+            paths = self._proxy([p for p, _pv, _dv in entries])
             if not paths:
                 # pruned-to-zero keeps the REAL user-visible schema:
                 # the log's logical schema covers mapped and unmapped
@@ -3161,15 +3114,9 @@ class GlueSparkEngine:
             # independent of scan order); not applied for
             # column-mapped tables, whose files carry physical names
             # the rename projection handles
-            from glue_table_cache_spark.sources.delta import (
-                read_parquet_files,
-            )
-
+            unmapped_schema = log_schema if renames is None else None
             df = read_parquet_files(
-                self.spark, tbl.location, paths,
-                schema=(
-                    log_schema if renames is None else None
-                ),
+                self.spark, tbl.location, paths, schema=unmapped_schema
             )
             # keyed on the PROXIED path — the one _metadata.file_path
             # will report for the scan Spark actually performed.
@@ -3184,16 +3131,7 @@ class GlueSparkEngine:
             df = apply_column_mapping(
                 df, renames, logical_schema=log_schema
             ).drop("_metadata")
-            if renames is None and log_schema is not None:
-                # Spark appends hive-partition columns at the END of
-                # a file scan even under an explicit schema; the
-                # log's schemaString order is authoritative (real
-                # Delta keeps partition columns in their declared
-                # position — positional INSERT depends on it)
-                want = [f.name for f in log_schema.fields]
-                if set(want) == set(df.columns) and want != df.columns:
-                    df = df.select(*want)
-            return df
+            return self._in_schema_order(df, unmapped_schema)
         if ttype == ETableType.ICEBERG:
             from glue_table_cache_spark.sources.iceberg import (
                 apply_equality_deletes,
@@ -3209,102 +3147,53 @@ class GlueSparkEngine:
                 iceberg_prune_factory,
             )
 
+            keys = [k.name for k in tbl.partition_keys]
             ice_prune = iceberg_prune_factory(
                 query,
-                [k.name for k in tbl.partition_keys],
+                keys,
                 {tbl.name, tbl.qualified_name},
                 self.config.stats_skipping,
             )
-            if travel is not None:
-                entries, dels, eq_dels, ice_schema, ice_spec, (
-                    ice_renames, ice_dead
-                ) = iceberg_scan_details(
+            travel_kwargs = self._iceberg_travel_kwargs(tbl.location, travel)
+            entries, dels, eq_dels, ice_schema, ice_spec, (
+                ice_renames, ice_dead
+            ) = self._format_walk(
+                tbl,
+                travel,
+                lambda: iceberg_scan_details(
                     tbl.location, fs=self._fs, with_stats=True,
                     with_schema=True, with_spec=True,
-                    with_mapping=True,
-                    prune_factory=ice_prune,
-                    **self._iceberg_travel_kwargs(
-                        tbl.location, travel
-                    ),
-                )
-            else:
-                entries, dels, eq_dels, ice_schema, ice_spec, (
-                    ice_renames, ice_dead
-                ) = self._format_scan_cached_pruned(
-                    tbl,
-                    lambda: iceberg_scan_details(
-                        tbl.location, fs=self._fs, with_stats=True,
-                        with_schema=True, with_spec=True,
-                        with_mapping=True,
-                        prune_factory=ice_prune,
-                    ),
-                    ice_prune,
-                )
+                    with_mapping=True, prune_factory=ice_prune,
+                    **travel_kwargs,
+                ),
+                ice_prune,
+            )
             iceberg_stats = {p: s for p, _pv, _seq, s in entries}
-            entries = [(p, pv, seq) for p, pv, seq, _s in entries]
-            # MANIFEST-METADATA partition pruning — same shape as the
-            # DELTA branch: the manifests record each file's partition
-            # tuple, so partition predicates drop files before the
-            # reader sees their paths.  Safe with row-level deletes:
-            # deletes only ever REMOVE rows from the surviving files,
-            # so pruning first cannot change the result.
-            keys = [k.name for k in tbl.partition_keys]
-            if query and keys and entries:
-                predicate = extract_partition_predicate(
-                    query, keys, {tbl.name, tbl.qualified_name}
-                )
-                kept = {
-                    f.path
-                    for f in prune_files(
-                        [FileInfo(p, pv) for p, pv, _seq in entries],
-                        predicate,
-                    )
-                }
-                entries = [e for e in entries if e[0] in kept]
-            # HIDDEN-PARTITIONING pruning: the spec's transform fields
-            # (day(ts), bucket(N, id), truncate(W, s)) carry
-            # TRANSFORMED values in the manifest partition tuple, keyed
-            # by the spec field's name — predicates on the SOURCE
-            # column prune only after a sound rewrite into transformed
-            # space (monotone bounds / bucket equality; anything else
-            # stays Unknown).  Also covers identity fields on catalogs
+            # MANIFEST-METADATA pruning and skipping — same shape as
+            # the DELTA branch: the manifests record each file's
+            # partition tuple and lower/upper bounds.  The spec's
+            # transform fields (day(ts), bucket(N, id), truncate(W,
+            # s)) carry TRANSFORMED values keyed by the spec field's
+            # name, and its identity fields prune even on catalogs
             # that never registered partition keys — the common shape
-            # for Iceberg entries in Glue.
-            if query and entries and ice_spec:
-                from glue_table_cache_spark.sources.iceberg_partitioning import (
-                    transform_partition_predicate,
-                )
+            # for Iceberg entries in Glue.  Safe with row-level
+            # deletes: deletes only ever REMOVE rows from the
+            # surviving files, so pruning first cannot change the
+            # result.
+            files = [FileInfo(p, pv) for p, pv, _seq, _s in entries]
+            stats = None
+            if self.config.stats_skipping:
 
-                srcs = sorted(
-                    {f["source"] for f in ice_spec if f["source"]}
-                )
-                src_pred = extract_partition_predicate(
-                    query, srcs, {tbl.name, tbl.qualified_name}
-                )
-                pv_pred = transform_partition_predicate(
-                    src_pred, ice_spec
-                )
-                kept = {
-                    f.path
-                    for f in prune_files(
-                        [FileInfo(p, pv) for p, pv, _seq in entries],
-                        pv_pred,
-                    )
-                }
-                entries = [e for e in entries if e[0] in kept]
-            # MANIFEST-BOUNDS zone-map skipping: lower/upper bounds per
-            # data file are already decoded from the manifests.  Safe
-            # under row-level deletes — deletes only ever REMOVE rows,
-            # so a file provably without matching rows stays without
-            # them after masking.
-            if query and entries and self.config.stats_skipping:
-                keep = self._stats_keep_set(
-                    query,
-                    tbl,
-                    {p: iceberg_stats.get(p) for p, _pv, _seq in entries},
-                )
-                if keep is not None:
-                    entries = [e for e in entries if e[0] in keep]
+                def stats(kept):
+                    return [iceberg_stats.get(f.path) for f in kept]
+
+            entries = self._kept_entries(
+                [(p, pv, seq) for p, pv, seq, _s in entries],
+                files,
+                self._prune_and_skip(
+                    tbl, query, files, keys, ice_spec, stats
+                ),
+            )
             raw_paths = [p for p, _pv, _seq in entries]
             paths = self._proxy(raw_paths)
             if not paths:
@@ -3327,62 +3216,49 @@ class GlueSparkEngine:
             # scan it like any column; absent → drop it from the scan
             # schema and re-attach from the path via the same typed
             # extractors the hive listing path uses.
-            missing_keys: list[str] = []
-            scan_schema = None
             # identity-spec columns need the same recovery even when
             # the catalog registered no partition keys (the common
             # Glue shape for Iceberg): the spec field's tuple value
             # is the column value, so a hive-style layout that keeps
             # it out of the data files is recoverable
-            part_cols = list(keys)
-            for f in ice_spec or []:
-                from glue_table_cache_spark.sources.iceberg_partitioning import (  # noqa: E501
-                    parse_transform,
+            from glue_table_cache_spark.sources.iceberg_partitioning import (
+                parse_transform,
+            )
+
+            part_cols = keys + [
+                f["name"]
+                for f in ice_spec or []
+                if parse_transform(f["transform"])[0] == "identity"
+                and f["name"] == f["source"]
+                and f["name"] not in keys
+            ]
+            missing_keys: list[str] = []
+            scan_schema = None
+            if ice_schema is not None:
+                from glue_table_cache_spark.skipping import (
+                    parquet_file_columns,
                 )
 
-                if (
-                    parse_transform(f["transform"])[0] == "identity"
-                    and f["name"] == f["source"]
-                    and f["name"] not in part_cols
-                ):
-                    part_cols.append(f["name"])
-            if ice_schema is not None:
-                drop: set[str] = set()
-                usable = True
-                if part_cols:
-                    from glue_table_cache_spark.skipping import (
-                        parquet_file_columns,
+                # one footer peek per (file, TTL) — repeat queries on
+                # the same snapshot pay a cache hit, not IO.  None:
+                # can't prove whether the files carry the partition
+                # columns — forcing the schema could surface them
+                # all-null, so this scan keeps inference
+                file_cols = (
+                    self._listing_cache.get_or_load(
+                        f"footer-cols:{raw_paths[0]}",
+                        lambda: parquet_file_columns(raw_paths[0]),
                     )
-
-                    # one footer peek per (file, TTL) — repeat queries
-                    # on the same snapshot pay a cache hit, not IO
-                    peek_path = raw_paths[0]
-                    file_cols = self._listing_cache.get_or_load(
-                        f"footer-cols:{peek_path}",
-                        lambda: parquet_file_columns(peek_path),
-                    )
-                    if file_cols is None:
-                        # can't prove whether the files carry the
-                        # partition columns — forcing the schema could
-                        # surface them all-null, so keep inference
-                        # (today's behavior) for this scan
-                        usable = False
-                    else:
-                        drop = {
-                            k
-                            for k in part_cols
-                            if k.lower() not in file_cols
-                        }
-                if usable:
-                    kept = [
-                        f
-                        for f in ice_schema.fields
-                        if f.name not in drop
-                    ]
+                    if part_cols
+                    else set()
+                )
+                if file_cols is not None:
+                    drop = {k for k in part_cols if k.lower() not in file_cols}
                     missing_keys = [
-                        f.name
-                        for f in ice_schema.fields
-                        if f.name in drop
+                        f.name for f in ice_schema.fields if f.name in drop
+                    ]
+                    kept = [
+                        f for f in ice_schema.fields if f.name not in drop
                     ]
                     if kept:
                         from pyspark.sql.types import StructType
@@ -3434,14 +3310,7 @@ class GlueSparkEngine:
                 ]
             df = apply_equality_deletes(df, proxied_entries, eq_dels)
             df = project_iceberg_logical(df, ice_renames, ice_dead)
-            if ice_schema is not None:
-                # inference-path scans can surface logical columns
-                # out of declared order; the metadata order is
-                # authoritative (positional INSERT depends on it)
-                want = [f.name for f in ice_schema.fields]
-                if set(want) == set(df.columns) and want != df.columns:
-                    df = df.select(*want)
-            return df
+            return self._in_schema_order(df, ice_schema)
         return self._explicit_list_dataframe(tbl, query)
 
     def _explicit_list_dataframe(
@@ -3488,12 +3357,31 @@ class GlueSparkEngine:
             # ``SELECT NULL LIMIT 0``
             # (/root/reference/src/sql-transformer.ts:320-322)
             return self.spark.range(0).select(F.lit(None).alias("null"))
-        pruned = files
-        if predicate is not None:
-            if len(files) >= self.config.listing_df_threshold:
-                pruned = self._prune_distributed(files, keys, predicate)
-            else:
-                pruned = prune_files(files, predicate)
+        footer_stats = None
+        if (
+            self.config.footer_stats_skipping
+            and tbl.parameters.get("classification", "parquet") == "parquet"
+        ):
+            from glue_table_cache_spark.skipping import (
+                parquet_footer_stats,
+            )
+
+            def footer_stats(kept):
+                # FOOTER zone-map skipping (opt-in): row-group min/max
+                # ranges read from each surviving file's parquet
+                # footer — metadata-sized and parallelized.  A list
+                # over max_explicit_files reroutes to the directory
+                # scan below and is never read
+                if len(kept) > self.config.max_explicit_files:
+                    return None
+                with ThreadPoolExecutor(max_workers=32) as pool:
+                    return list(
+                        pool.map(lambda f: parquet_footer_stats(f.path), kept)
+                    )
+
+        pruned = self._prune_and_skip(
+            tbl, query, files, keys, stats=footer_stats
+        )
         if len(pruned) > self.config.max_explicit_files:
             if tbl.table_type in (ETableType.HIVE, ETableType.UNPARTITIONED):
                 # too many paths for one reader call: the native
@@ -3509,36 +3397,6 @@ class GlueSparkEngine:
                 f"{self.config.max_explicit_files}; repartition the "
                 "table or raise the limit"
             )
-        if (
-            query
-            and pruned
-            and self.config.footer_stats_skipping
-            and (tbl.parameters.get("classification", "parquet"))
-            == "parquet"
-        ):
-            # FOOTER zone-map skipping (opt-in): read each surviving
-            # file's parquet footer and drop files whose row-group
-            # min/max ranges provably cannot match the WHERE clause.
-            # Footer reads are metadata-sized and parallelized; the
-            # file count is already bounded by max_explicit_files
-            from glue_table_cache_spark.skipping import (
-                parquet_footer_stats,
-            )
-
-            with ThreadPoolExecutor(max_workers=32) as pool:
-                stats = list(
-                    pool.map(
-                        lambda f: parquet_footer_stats(f.path),
-                        pruned,
-                    )
-                )
-            keep = self._stats_keep_set(
-                query,
-                tbl,
-                {f.path: s for f, s in zip(pruned, stats)},
-            )
-            if keep is not None:
-                pruned = [f for f in pruned if f.path in keep]
         if not pruned:
             # pruned-to-zero: empty relation with the real schema
             df = self._read_paths(
@@ -3574,9 +3432,6 @@ class GlueSparkEngine:
         tbl = self.get_table_metadata_cached(database, table)
         files = self.list_table_files_cached(tbl)
         keys = [k.name for k in tbl.partition_keys]
-        return self._listing_df(files, keys)
-
-    def _listing_df(self, files: list[FileInfo], keys: list[str]) -> DataFrame:
         schema = ", ".join(
             ["path string"] + [f"`{k}` string" for k in keys]
         )
@@ -3585,19 +3440,6 @@ class GlueSparkEngine:
             for f in files
         ]
         return local_frame(self.spark, rows, schema)
-
-    def _prune_distributed(
-        self, files: list[FileInfo], keys: list[str], predicate
-    ) -> list[FileInfo]:
-        """Prune a large listing with a DataFrame filter instead of a
-        per-file Python loop.  Same keep-on-Unknown semantics:
-        ``coalesce(pred, TRUE)``."""
-        df = self._listing_df(files, keys)
-        keep = df.filter(
-            F.coalesce(predicate_to_column(predicate), F.lit(True))
-        )
-        kept_paths = {r.path for r in keep.select("path").collect()}
-        return [f for f in files if f.path in kept_paths]
 
     def read_batches(self, df: DataFrame, batch_size: int = 10):
         """Iterate a result in client-side batches of ``batch_size``
@@ -3737,7 +3579,7 @@ class GlueSparkEngine:
 
     @staticmethod
     def _hudi_prune_keys(
-        tbl: CatalogTable, pvs: list[dict]
+        tbl: CatalogTable, files: list[FileInfo]
     ) -> list[str]:
         """Partition keys for Hudi timeline-metadata pruning: the
         catalog's when registered, else the key names the write
@@ -3750,8 +3592,8 @@ class GlueSparkEngine:
         if keys:
             return keys
         seen: set[str] = set()
-        for pv in pvs:
-            seen.update(pv.keys())
+        for f in files:
+            seen.update(f.partition_values)
         return sorted(seen)
 
     def _refuse_misclassified_format(self, tbl: CatalogTable) -> None:

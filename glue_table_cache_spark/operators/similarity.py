@@ -66,31 +66,6 @@ def cosine_n(a: Column, b: Column, an: Column, bn: Column) -> Column:
     return dot(a, b) / (an * bn)
 
 
-def _dot_unrolled(a: str, b: str, dim: int) -> Column:
-    """Flat-sum dot product for a KNOWN vector dimension —
-    ``0.0 + a[0]*b[0] + a[1]*b[1] + …`` — bit-equal to :func:`dot`
-    (identical left-associative IEEE order; ``try_element_at`` yields
-    NULL past a short array exactly where ``zip_with`` pads NULL).
-
-    KEPT ONLY AS A MEASURED NEGATIVE RESULT (r15): replacing the
-    per-pair ``aggregate(zip_with(...))`` fold with this in
-    ``semantic_dedup``'s pair join ran 3× SLOWER at the synthetic sf1
-    (4.7-5.4 s vs 1.5-3.3 s, interleaved same-session) — at d=64 the
-    single generated method exceeds the JIT's per-method budget and
-    runs as uncompiled bytecode, while at k×d (nearest-centroid
-    argmax) it exceeds Janino's hard 64 KB limit outright and kills
-    whole-stage codegen for the stage (measured: ivf_train 2 s →
-    16 s).  No production caller; exercised by tests as the
-    equivalence witness for the fold."""
-    terms = " + ".join(
-        f"try_element_at(cast(`{a}` as array<double>), {i + 1}) * "
-        f"try_element_at(cast(`{b}` as array<double>), {i + 1})"
-        for i in range(dim)
-    )
-    sql = "cast(0.0 as double)" + (f" + {terms}" if terms else "")
-    return F.expr(sql)
-
-
 def embedding_stats(
     df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:

@@ -479,87 +479,6 @@ def extract_proof_predicate(
     )
 
 
-def predicate_to_column(pred: Predicate):
-    """Predicate tree → Spark boolean ``Column`` over a listing
-    DataFrame with one string column per partition key.
-
-    Mirrors the three-valued Python evaluation exactly: a missing key is
-    a NULL column value, an uncoercible numeric cast yields NULL, and
-    SQL NULL propagation through AND/OR/NOT is Kleene logic — so
-    ``filter(coalesce(expr, TRUE))`` keeps precisely the files
-    :func:`prune_files` keeps.  Used for listings too large to prune in
-    a driver-side loop (the reference prunes inside DuckDB over its
-    ``_s3_listing`` table for the same reason,
-    /root/reference/src/glue-table-cache.ts:323-333)."""
-    from pyspark.sql import functions as F
-
-    _OP_COLS = {
-        "COMPARE_EQUAL": lambda a, b: a == b,
-        "COMPARE_NOTEQUAL": lambda a, b: a != b,
-        "COMPARE_GREATERTHAN": lambda a, b: a > b,
-        "COMPARE_LESSTHAN": lambda a, b: a < b,
-        "COMPARE_GREATERTHANOREQUALTO": lambda a, b: a >= b,
-        "COMPARE_LESSTHANOREQUALTO": lambda a, b: a <= b,
-    }
-
-    if isinstance(pred, TruePredicate):
-        return F.lit(True)
-    if isinstance(pred, Comparison):
-        col = F.col(pred.column)
-        if isinstance(pred.const, (int, float)) and not isinstance(
-            pred.const, bool
-        ):
-            # try_cast: an uncoercible value must become NULL (Unknown),
-            # not an ANSI runtime error
-            return _OP_COLS[pred.op](
-                col.try_cast("double"), F.lit(float(pred.const))
-            )
-        if isinstance(pred.const, str):
-            return _OP_COLS[pred.op](col, F.lit(pred.const))
-        return F.lit(None).cast("boolean")
-    if isinstance(pred, InList):
-        col = F.col(pred.column)
-
-        def cmp_const(c):
-            """Per-constant comparison with _coerce's semantics: numeric
-            const → numeric compare (NULL on bad cast), string const →
-            string compare, anything else (bool) → Unknown."""
-            if isinstance(c, bool):
-                return F.lit(None).cast("boolean")
-            if isinstance(c, (int, float)):
-                return col.try_cast("double") == F.lit(float(c))
-            if isinstance(c, str):
-                return col == F.lit(c)
-            return F.lit(None).cast("boolean")
-
-        # mirror InList.evaluate's in-order scan exactly (it returns
-        # Unknown at the FIRST uncoercible constant unless an earlier
-        # constant already matched — e.g. mixed ``key IN (1, 'a')``):
-        # right-fold CASE WHEN cmp IS NULL → NULL / cmp → TRUE / ELSE rest
-        hit = F.lit(False)
-        for c in reversed(pred.consts):
-            cmp_c = cmp_const(c)
-            hit = (
-                F.when(cmp_c.isNull(), F.lit(None).cast("boolean"))
-                .when(cmp_c, F.lit(True))
-                .otherwise(hit)
-            )
-        return ~hit if pred.negated else hit
-    if isinstance(pred, And):
-        out = F.lit(True)
-        for c in pred.children:
-            out = out & predicate_to_column(c)
-        return out
-    if isinstance(pred, Or):
-        out = F.lit(False)
-        for c in pred.children:
-            out = out | predicate_to_column(c)
-        return out
-    if isinstance(pred, Not):
-        return ~predicate_to_column(pred.child)
-    return F.lit(True)
-
-
 def prune_files(files: list[FileInfo], predicate: Predicate) -> list[FileInfo]:
     """Apply the predicate to a listing (reference executes the same idea
     as ``SET VARIABLE … = (SELECT list(path) FROM listing WHERE …)``,

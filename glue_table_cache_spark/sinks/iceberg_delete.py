@@ -229,8 +229,10 @@ def delete_from_iceberg(
         )
     meta_dir = base / "metadata"
     data_dir = base / "data"
-    entries, pos_dels, eq_dels, (renames, dead) = (
-        iceberg_scan_details(location, with_mapping=True)
+    entries, pos_dels, eq_dels, ice_schema, (renames, dead) = (
+        iceberg_scan_details(
+            location, with_schema=True, with_mapping=True
+        )
     )
     if eq_dels:
         raise GlueSparkError(
@@ -255,6 +257,11 @@ def delete_from_iceberg(
         ),
         renames,
         dead,
+    )
+    # identity-partitioned files store the value in the directory —
+    # re-attach from the manifests so the predicate can name it
+    tagged = _attach_identity_partition_columns(
+        spark, tagged, entries, ice_schema
     )
     if pos_dels:
         prior = spark.read.parquet(*pos_dels).select(

@@ -165,13 +165,6 @@ def _transform_column(df: DataFrame, source: str, transform: str):
     )
 
 
-def _src_name(ids: dict[str, int], field: dict) -> str:
-    """Spec field's source column name, resolved back through the
-    name → field-id map."""
-    by_id = {v: k for k, v in ids.items()}
-    return by_id[field["source-id"]]
-
-
 def _resolve_schema(
     prev: dict | None,
     df_types: dict[str, str],
@@ -274,8 +267,8 @@ def _resolve_spec(
     partition_transforms: dict[str, str] | None,
 ) -> list[dict]:
     """This append's partition-spec fields, validated against the
-    table's recorded spec (drift refuses; an unpartitioned batch onto
-    a partitioned table carries the spec forward)."""
+    table's recorded spec (drift refuses; a batch naming no
+    partitioning inherits the recorded spec)."""
     from glue_table_cache_spark.sources.iceberg_partitioning import (
         parse_transform,
     )
@@ -345,9 +338,8 @@ def _resolve_spec(
                     "— partition-spec evolution is out of scope"
                 )
         else:
-            # unpartitioned batch onto a partitioned table: legal
-            # (the new files carry no partition tuple, pruning keeps
-            # them conservatively); the spec is carried forward
+            # a batch naming no partitioning appends under the
+            # recorded spec
             spec_fields = list(prev_specs[0].get("fields") or [])
     return spec_fields
 
@@ -1157,33 +1149,32 @@ def write_iceberg_append(
     def _stage_names(d):
         return d.withColumnsRenamed(l2p) if l2p else d
 
-    # --- stage data files, then move under unique batch names
+    # --- stage data files, then move under unique batch names.  The
+    # batch stages under the spec this append commits — a batch that
+    # names no partitioning inherits the table's recorded spec, so its
+    # files carry partition tuples like the rest: identity fields
+    # partition hive-style (the value moves into the directory name
+    # and out of the files), transform fields derive the hidden
+    # -partitioning column and partition by it while the SOURCE
+    # column stays in the data, exactly as the spec prescribes.  A
+    # batch lacking a spec source column stages unpartitioned (its
+    # files carry no tuple; pruning keeps them conservatively)
     batch = uuid.uuid4().hex[:12]
     stage = base / f"_staging_{batch}"
-    if partition_transforms:
-        stage_df = df
-        derived = []
-        for f in spec_fields:
-            if f["transform"] == "identity" and f["name"] in df.columns:
-                derived.append(f["name"])
-                continue
-            stage_df = stage_df.withColumn(
-                f["name"],
-                _transform_column(df, _src_name(ids, f), f["transform"]),
-            )
+    by_id = {v: k for k, v in ids.items()}
+    sources = [by_id.get(f["source-id"]) for f in spec_fields]
+    stage_df = df
+    derived: list[str] = []
+    if all(src in df.columns for src in sources):
+        for f, src in zip(spec_fields, sources):
+            if f["transform"] != "identity" or f["name"] not in df.columns:
+                stage_df = stage_df.withColumn(
+                    f["name"], _transform_column(df, src, f["transform"])
+                )
             derived.append(f["name"])
-        # partitionBy moves the DERIVED columns into directory names
-        # and out of the files; the SOURCE columns stay in the data,
-        # exactly the spec's hidden-partitioning layout
-        writer = (
-            _stage_names(stage_df)
-            .write.mode("overwrite")
-            .partitionBy(*derived)
-        )
-    else:
-        writer = _stage_names(df).write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
+    writer = _stage_names(stage_df).write.mode("overwrite")
+    if derived:
+        writer = writer.partitionBy(*derived)
     writer.parquet(str(stage))
     files: list[tuple[Path, dict]] = []  # (dest, partition values)
     for p in sorted(stage.rglob("part-*.parquet")):

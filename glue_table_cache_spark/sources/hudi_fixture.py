@@ -20,7 +20,6 @@ consumes (``partitionToWriteStats[].{fileId,path}``,
 from __future__ import annotations
 
 import json
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame

@@ -45,6 +45,9 @@ _SLOW_NODEIDS = (
     "test_dml_fuzz.py::test_dml_fuzz_iceberg_matches_duckdb[1",
     "test_dml_fuzz.py::test_dml_fuzz_iceberg_matches_duckdb[2",
     "test_dml_fuzz.py::test_dml_fuzz_iceberg_matches_duckdb[3",
+    "test_dml_fuzz.py::test_dml_fuzz_iceberg_partitioned_matches_duckdb[1",
+    "test_dml_fuzz.py::test_dml_fuzz_iceberg_partitioned_matches_duckdb[2",
+    "test_dml_fuzz.py::test_dml_fuzz_iceberg_partitioned_matches_duckdb[3",
     "test_dml_fuzz.py::test_dml_fuzz_hudi_matches_duckdb[1",
     "test_dml_fuzz.py::test_dml_fuzz_hudi_matches_duckdb[2",
     "test_dml_fuzz.py::test_dml_fuzz_hudi_matches_duckdb[3",

@@ -165,6 +165,69 @@ def test_sql_delete_iceberg_and_hudi(spark, tmp_path):
     assert eng.sql("SELECT count(*) AS n FROM glue.db.t").first().n == 6
 
 
+def _identity_partitioned_iceberg(spark, tmp_path):
+    from glue_table_cache_spark.sinks.iceberg_write import (
+        write_iceberg_append,
+    )
+
+    loc = tmp_path / "ice_part"
+    write_iceberg_append(
+        spark.createDataFrame(
+            [(1, "a"), (2, "b"), (3, "b")], "id long, cat string"
+        ),
+        str(loc),
+        partition_by=["cat"],
+    )
+    return _engine_for(spark, loc, {"table_type": "ICEBERG"})
+
+
+def test_sql_delete_iceberg_on_identity_partition_column(spark, tmp_path):
+    """The partition value lives in the directory name, not the data
+    files: DELETE must re-attach it before filtering on it."""
+    eng = _identity_partitioned_iceberg(spark, tmp_path)
+    out = eng.sql("DELETE FROM glue.db.t WHERE cat = 'b'").first()
+    assert out.rows_deleted == 2
+    assert [
+        (r.id, r.cat) for r in eng.sql("SELECT * FROM glue.db.t").collect()
+    ] == [(1, "a")]
+
+
+def test_sql_insert_iceberg_writes_under_recorded_spec(spark, tmp_path):
+    """An INSERT names no partitioning: its files are written under
+    the table's recorded identity spec, so the partition value reads
+    back and prunes like the rest."""
+    eng = _identity_partitioned_iceberg(spark, tmp_path)
+    eng.sql("INSERT INTO glue.db.t VALUES (4, 'c')").collect()
+    assert sorted(
+        (r.id, r.cat) for r in eng.sql("SELECT * FROM glue.db.t").collect()
+    ) == [(1, "a"), (2, "b"), (3, "b"), (4, "c")]
+    hit = eng.sql("SELECT id FROM glue.db.t WHERE cat = 'c'")
+    assert [r.id for r in hit.collect()] == [4]
+    assert len(hit.inputFiles()) == 1
+
+
+def test_sql_insert_hudi_partitioned_binds_in_schema_order(spark, tmp_path):
+    """A hive-partitioned Hudi scan surfaces the partition column in
+    the commit schema's position, not appended last, so a positional
+    INSERT binds each value to its declared column."""
+    from glue_table_cache_spark.sinks.hudi_write import write_hudi_append
+
+    loc = tmp_path / "hud_part"
+    write_hudi_append(
+        spark.createDataFrame(
+            [(1, "a", 10), (2, "b", 20)], "id long, cat string, val long"
+        ),
+        str(loc),
+        partition_by=["cat"],
+    )
+    eng = _engine_for(spark, loc, {"hoodie.table.name": "t"})
+    assert eng.sql("SELECT * FROM glue.db.t").columns == ["id", "cat", "val"]
+    eng.sql("INSERT INTO glue.db.t VALUES (3, 'c', 30)").collect()
+    assert sorted(
+        map(tuple, eng.sql("SELECT id, cat, val FROM glue.db.t").collect())
+    ) == [(1, "a", 10), (2, "b", 20), (3, "c", 30)]
+
+
 def test_sql_update_delta(spark, tmp_path):
     from glue_table_cache_spark.sinks.delta_write import write_delta_append
 

@@ -184,9 +184,11 @@ def _run_fuzz_seq(spark, tmp_path, seed, fmt):
     rows = _seed_rows(rng)
     df = spark.createDataFrame(rows, "id long, cat string, val long")
     loc = tmp_path / f"fuzz{fmt}{seed}"
-    partitioned = (
-        fmt == "delta" and seed % 2 == 1
-    ) or fmt == "delta_mapped"
+    partitioned = (fmt == "delta" and seed % 2 == 1) or fmt in (
+        "delta_mapped",
+        "iceberg_part",
+    )
+    part_by = ["cat"] if partitioned else None
     if fmt == "delta_mapped":
         # r14: a COLUMN-MAPPED partitioned target — the table is
         # written under physical column `valx`, then renamed to the
@@ -209,18 +211,18 @@ def _run_fuzz_seq(spark, tmp_path, seed, fmt):
             write_delta_append,
         )
 
-        write_delta_append(
-            df.coalesce(2),
-            str(loc),
-            partition_by=["cat"] if partitioned else None,
-        )
+        write_delta_append(df.coalesce(2), str(loc), partition_by=part_by)
         params = {"spark.sql.sources.provider": "delta"}
-    elif fmt == "iceberg":
+    elif fmt.startswith("iceberg"):
+        # the partitioned arm: hive-style identity partitions keep
+        # `cat` out of the data files, so every DELETE/UPDATE/MERGE
+        # predicate on it and every INSERT's partition tuple run
+        # through the manifests' partition values
         from glue_table_cache_spark.sinks.iceberg_write import (
             write_iceberg_append,
         )
 
-        write_iceberg_append(df.coalesce(2), str(loc))
+        write_iceberg_append(df.coalesce(2), str(loc), partition_by=part_by)
         params = {"table_type": "ICEBERG"}
     else:
         from glue_table_cache_spark.sinks.hudi_write import (
@@ -282,6 +284,11 @@ def test_dml_fuzz_delta_mapped_matches_duckdb(spark, tmp_path, seed):
 @pytest.mark.parametrize("seed", range(4))
 def test_dml_fuzz_iceberg_matches_duckdb(spark, tmp_path, seed):
     _run_fuzz_seq(spark, tmp_path, seed, "iceberg")
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_dml_fuzz_iceberg_partitioned_matches_duckdb(spark, tmp_path, seed):
+    _run_fuzz_seq(spark, tmp_path, seed, "iceberg_part")
 
 
 @pytest.mark.parametrize("seed", range(4))

@@ -258,42 +258,6 @@ def test_mixed_layout_not_prune(spark, store, tmp_path):
     assert df.count() == expected
 
 
-def test_distributed_pruning_matches_python_loop(spark, hive_store):
-    """DataFrame-filter pruning (large-listing path) must keep exactly
-    the same files as the Python three-valued loop."""
-    from glue_table_cache_spark.listing import FileInfo
-    from glue_table_cache_spark.pruning import (
-        extract_partition_predicate,
-        prune_files,
-    )
-
-    files = [
-        FileInfo("s3://b/t/year=2023/month=01/a.parquet",
-                 {"year": "2023", "month": "01"}),
-        FileInfo("s3://b/t/year=2024/month=02/b.parquet",
-                 {"year": "2024", "month": "02"}),
-        FileInfo("s3://b/t/year=weird/month=03/c.parquet",
-                 {"year": "weird", "month": "03"}),
-        FileInfo("s3://b/t/misc/d.parquet", {}),
-    ]
-    engine = GlueSparkEngine(spark, hive_store)
-    queries = [
-        "SELECT * FROM glue.db.t WHERE year = '2024'",
-        "SELECT * FROM glue.db.t WHERE year >= 2024",
-        "SELECT * FROM glue.db.t WHERE NOT (year BETWEEN 2020 AND 2023)",
-        "SELECT * FROM glue.db.t WHERE month IN ('01', '03') OR year = '2024'",
-        "SELECT * FROM glue.db.t WHERE month NOT IN ('01')",
-    ]
-    for q in queries:
-        pred = extract_partition_predicate(q, ["year", "month"], {"t", "db.t"})
-        loop = {f.path for f in prune_files(files, pred)}
-        dist = {
-            f.path
-            for f in engine._prune_distributed(files, ["year", "month"], pred)
-        }
-        assert dist == loop, q
-
-
 def test_max_explicit_files_reroutes_to_native(spark, hive_store):
     engine = GlueSparkEngine(
         spark,

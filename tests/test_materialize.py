@@ -61,42 +61,6 @@ def docs_corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_dot_unrolled_bit_equals_fold(spark):
-    """Equivalence witness for the measured-negative unrolled dot
-    (see similarity._dot_unrolled): identical IEEE fold order, NULL
-    past a short array, bit-equal results."""
-    from pyspark.sql import functions as F
-
-    from glue_table_cache_spark.operators.similarity import (
-        _dot_unrolled,
-        dot,
-    )
-
-    rows = [
-        ([1.5, -2.25, 3.0, 0.125], [4.0, 0.5, -1.0, 8.0]),
-        ([0.1, 0.2, 0.3, 0.4], [0.7, 0.8, 0.9, 1.0]),
-        ([0.0, 0.0, 0.0, 0.0], [-0.0, 1.0, 2.0, 3.0]),
-        ([1e300, -1e300, 1.0, 2.0], [1e8, 1e8, 3.0, 4.0]),
-    ]
-    df = spark.createDataFrame(
-        rows, "a array<double>, b array<double>"
-    )
-    out = df.select(
-        dot(F.col("a"), F.col("b")).alias("fold"),
-        _dot_unrolled("a", "b", 4).alias("flat"),
-    ).collect()
-    for r in out:
-        assert r.fold == r.flat
-    # short array: NULL either way (zip_with pads vs try_element_at)
-    short = spark.createDataFrame(
-        [([1.0, 2.0], [3.0, 4.0, 5.0])], "a array<double>, b array<double>"
-    ).select(
-        dot(F.col("a"), F.col("b")).alias("fold"),
-        _dot_unrolled("a", "b", 3).alias("flat"),
-    ).collect()[0]
-    assert short.fold is None and short.flat is None
-
-
 @pytest.mark.parametrize("mode", ["persist", "off"])
 def test_semantic_dedup_modes_match_default(spark, mode):
     vecs = [

@@ -130,39 +130,32 @@ def test_in_list_mixed_constants_python_path():
     assert out == [f.path for f in FILES[2:]]
 
 
-def test_in_list_mixed_constants_column_path_matches(spark):
-    """The DataFrame pruning path (used over listing_df_threshold) must
-    keep exactly the files the Python loop keeps — including mixed
-    IN lists and uncoercible partition values."""
-    from pyspark.sql import functions as F
-
-    from glue_table_cache_spark.pruning import predicate_to_column
-
+def test_uncoercible_and_missing_values_keep_files():
+    """Partition values a constant cannot compare against (``weird``
+    under a numeric constant, a missing key) evaluate Unknown and keep
+    the file under every operator, negation and mixed IN list."""
     files = FILES + [
         FileInfo("s3://b/t/year=weird/month=01/e.parquet",
                  {"year": "weird", "month": "01"}),
+        FileInfo("s3://b/t/misc/f.parquet", {}),
     ]
-    for sql in [
-        "SELECT * FROM glue.db.tbl WHERE year IN (2024, 'x')",
-        "SELECT * FROM glue.db.tbl WHERE year IN ('2023', 'weird')",
-        "SELECT * FROM glue.db.tbl WHERE year NOT IN (2024, 'x')",
-        "SELECT * FROM glue.db.tbl WHERE year NOT IN ('2024')",
-        "SELECT * FROM glue.db.tbl WHERE year IN (2023, 2024)",
-    ]:
-        pred = extract_partition_predicate(sql, KEYS, IDENTS)
-        py_kept = [f.path for f in prune_files(files, pred)]
-        df = spark.createDataFrame(
-            [(f.path, f.partition_values.get("year"),
-              f.partition_values.get("month")) for f in files],
-            "path string, year string, month string",
+    a, b, c, d, e, f = (x.path for x in files)
+    cases = {
+        "year IN (2024, 'x')": [c, d, e, f],
+        "year IN ('2023', 'weird')": [a, b, e, f],
+        "year NOT IN (2024, 'x')": [a, b, e, f],
+        "year NOT IN ('2024')": [a, b, e, f],
+        "year IN (2023, 2024)": [a, b, c, d, e, f],
+        "year >= 2024": [c, d, e, f],
+        "NOT (year BETWEEN 2020 AND 2023)": [c, d, e, f],
+        "month IN ('01', '03') OR year = '2024'": [a, c, d, e, f],
+        "month NOT IN ('01')": [b, d, f],
+    }
+    for where, want in cases.items():
+        pred = extract_partition_predicate(
+            f"SELECT * FROM glue.db.tbl WHERE {where}", KEYS, IDENTS
         )
-        col_kept = [
-            r.path
-            for r in df.filter(
-                F.coalesce(predicate_to_column(pred), F.lit(True))
-            ).select("path").collect()
-        ]
-        assert col_kept == py_kept, sql
+        assert [x.path for x in prune_files(files, pred)] == want, where
 
 
 # ---------------------------------------------------------------------------
