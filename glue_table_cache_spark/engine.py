@@ -3183,9 +3183,10 @@ class GlueSparkEngine:
             files = [FileInfo(p, pv) for p, pv, _seq, _s in entries]
             stats = None
             if self.config.stats_skipping:
-
+                # zone maps decode here, for the partition survivors
+                # only (the walk keeps them as raw manifest bytes)
                 def stats(kept):
-                    return [iceberg_stats.get(f.path) for f in kept]
+                    return [iceberg_stats[f.path].resolve() for f in kept]
 
             entries = self._kept_entries(
                 [(p, pv, seq) for p, pv, seq, _s in entries],

@@ -248,7 +248,9 @@ class _IcebergPruneFactory:
     walk's partition-tuple stringification and
     :func:`~glue_table_cache_spark.skipping.iceberg_entry_stats`
     decode so the surviving entries are byte-identical to what the
-    driver path would have pruned to."""
+    driver path would have pruned to.  Entries arrive through the
+    walk's projection, zone maps still raw bytes; keep decodes them
+    only for an entry that passed the partition test."""
 
     def __init__(
         self,

@@ -32,6 +32,7 @@ attempt validation that every compacted group is still active, then
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 import os
@@ -435,12 +436,19 @@ def compact_hudi(
     location: str,
     record_key_field: str,
     max_commit_retries: int = 10,
+    max_driver_bytes: int = 64 << 20,
 ) -> str | None:
     """Fold every file group's live logs into a fresh base slice (the
     MOR compaction table service); returns the committed instant, or
     ``None`` when no group carries live logs.  After compaction the
     logs are dead (older than the new base slice) and
-    :func:`.hudi_optimize.clean_hudi` collects them."""
+    :func:`.hudi_optimize.clean_hudi` collects them.
+
+    A group whose base slice plus live logs stay within
+    ``max_driver_bytes`` on disk is collected to the driver and
+    written there with pyarrow (no Spark write job); the larger groups
+    are written executor-side by one :func:`_write_group_slices` job,
+    so the driver never holds them."""
     from glue_table_cache_spark.sources.hudi import hudi_mor_scan_info
     from glue_table_cache_spark.sources.hudi_mor import hudi_mor_read
 
@@ -466,44 +474,71 @@ def compact_hudi(
                 "— log-only groups are not compactable by this path"
             )
 
+    from pyspark.sql import functions as F
+
+    from glue_table_cache_spark.sources.fixture_io import (
+        write_single_parquet,
+    )
+
     batch = uuid.uuid4().hex[:8]
     staged: list[tuple[str, str, str]] = []  # (fid, part, rel_path)
     instant_tag = _latest_instant(base / ".hoodie") + 1
-    for fid, group_logs in sorted(live_by_fid.items()):
-        ts, slice_path, part = slices[fid]
-        base_entry = (
-            slice_path
-            if slice_path.startswith("/")
-            else str(base / slice_path),
-            {},
-            ts,
-        )
-        merged = hudi_mor_read(
-            spark,
-            [base_entry],
-            [
-                (
-                    p if p.startswith("/") else str(base / p),
-                    lts,
-                )
-                for lts, p, _pt in sorted(group_logs)
-            ],
-            record_key_field=record_key_field,
-        )
+    large: dict[str, DataFrame] = {}  # fid -> frame, written executor-side
+
+    def stage_on_driver(fid: str, merged: DataFrame) -> None:
+        # single pyarrow write (see sources/fixture_io): per-group
+        # frames are small by MOR design, and the coalesce(1)
+        # Spark-write shape pays a full job (plus sequential
+        # Python-slice round-trips when log rows ride a createDataFrame
+        # lineage) per file group
+        part = slices[fid][2]
         name = f"{fid}_0-0-0_{instant_tag}.parquet"
         rel = f"{part}/{name}" if part else name
-        dest = base / rel
-        # single pyarrow write (see sources/fixture_io): the merged
-        # slice is one file group — per-group frames are small by MOR
-        # design, and the coalesce(1) Spark-write shape paid a full
-        # job (plus sequential Python-slice round-trips when log rows
-        # ride a createDataFrame lineage) per file group
-        from glue_table_cache_spark.sources.fixture_io import (
-            write_single_parquet,
-        )
-
-        write_single_parquet(merged, dest)
+        write_single_parquet(merged, base / rel)
         staged.append((fid, part, rel))
+
+    for fid, group_logs in sorted(live_by_fid.items()):
+        ts, slice_path, _part = slices[fid]
+        slice_abs = (
+            slice_path
+            if slice_path.startswith("/")
+            else str(base / slice_path)
+        )
+        log_abs = [
+            (p if p.startswith("/") else str(base / p), lts)
+            for lts, p, _pt in sorted(group_logs)
+        ]
+        merged = hudi_mor_read(
+            spark,
+            [(slice_abs, {}, ts)],
+            log_abs,
+            record_key_field=record_key_field,
+        )
+        group_bytes = sum(
+            os.path.getsize(p) for p in [slice_abs] + [p for p, _ in log_abs]
+        )
+        if group_bytes > max_driver_bytes:
+            large[fid] = merged
+        else:
+            stage_on_driver(fid, merged)
+    if large:
+        frames = [m.withColumn("__fid", F.lit(f)) for f, m in large.items()]
+        out = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+        )
+        stats, _rels = _write_group_slices(
+            spark,
+            base,
+            out,
+            {fid: slices[fid][2] for fid in large},
+            batch,
+            instant_tag,
+        )
+        staged += [(s["fileId"], s["partitionPath"], s["path"]) for s in stats]
+        # a group whose every row was deleted has no rows to partition
+        # by: its slice is empty, so the driver writes it
+        for fid in sorted(set(large) - {s["fileId"] for s in stats}):
+            stage_on_driver(fid, large[fid])
 
     hoodie = base / ".hoodie"
     compacted = set(live_by_fid)

@@ -60,6 +60,8 @@ from glue_table_cache_spark.sources.iceberg_fixture import (
 
 
 def _scan_state(location: str):
+    """``(entries, position deletes, equality deletes)``; entries are
+    ``(path, partition, seq, LazyFileStats)``."""
     entries, pos_dels, eq_dels = iceberg_scan_details(
         location, with_stats=True
     )
@@ -67,11 +69,14 @@ def _scan_state(location: str):
 
 
 def _reencode_bounds(
-    st, ids: dict[str, int], types: dict[str, str]
+    lazy, ids: dict[str, int], types: dict[str, str]
 ) -> dict | None:
-    """Carried-over entries keep their zone maps: re-encode the
-    decoded :class:`FileStats` back into the manifest's binary form —
-    no data or footer reads for untouched files."""
+    """Carried-over entries keep their zone maps: resolve the walk's
+    :class:`~glue_table_cache_spark.skipping.LazyFileStats` (only
+    carried entries are decoded; replaced ones never are) and
+    re-encode it into the manifest's binary form under the current
+    schema — no data or footer reads for untouched files."""
+    st = lazy.resolve()
     if st is None:
         return None
     from glue_table_cache_spark.skipping import encode_iceberg_bound

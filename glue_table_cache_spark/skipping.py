@@ -19,7 +19,9 @@ the optional parquet-footer reads, which touch footers only):
   already in hand from the log replay: skipping is free.
 * **Iceberg** — manifest entries' ``lower_bounds`` / ``upper_bounds`` /
   ``null_value_counts`` / ``record_count`` fields, decoded from the
-  spec's single-value binary serialization: also free.
+  spec's single-value binary serialization: also free, and deferred —
+  the walk keeps them raw in a :class:`LazyFileStats`, so only files
+  that survive partition pruning are decoded.
 * **Parquet footers** — row-group statistics aggregated per file, for
   plain Hive/unpartitioned listings where no table format carries
   stats.  Costs one footer read per file, so it is opt-in
@@ -633,9 +635,13 @@ def iceberg_entry_stats(
     field-id keys stringified) or as the spec's array-of-
     ``{key, value}`` records (Avro map keys must be strings, so
     Iceberg writes int-keyed maps as k/v record arrays) — both are
-    accepted."""
+    accepted, decoded or still a projected walk's
+    :class:`~glue_table_cache_spark.sources.avro_lite.RawField`."""
+    from glue_table_cache_spark.sources.avro_lite import RawField
 
     def pairs(m: Any):
+        if isinstance(m, RawField):
+            m = m.decode()
         if isinstance(m, dict):
             return m.items()
         out = []
@@ -684,3 +690,41 @@ def iceberg_entry_stats(
     if not mins and not maxs and not nulls and num is None:
         return None
     return FileStats.build(num, mins, maxs, nulls)
+
+
+class LazyFileStats:
+    """The zone map of one Iceberg manifest entry, decoded on first
+    :meth:`resolve`: the walk keeps the entry's stats fields as the
+    manifest stored them, and only files that survive partition
+    pruning pay :func:`iceberg_entry_stats`.  The result is memoized,
+    so a cached walk decodes each file at most once, and the raw fields
+    are dropped once decoded.  Compares by the
+    resolved :class:`FileStats` (``None`` when the entry has none)."""
+
+    __slots__ = ("_data_file", "_types", "_stats", "_done")
+
+    def __init__(
+        self, data_file: dict, types_by_id: Mapping[int, tuple[str, str]]
+    ):
+        self._data_file: dict | None = data_file
+        self._types: Mapping[int, tuple[str, str]] | None = types_by_id
+        self._stats: FileStats | None = None
+        self._done = False
+
+    def resolve(self) -> FileStats | None:
+        if not self._done:
+            self._stats = iceberg_entry_stats(self._data_file, self._types)
+            self._done = True
+            # the cached walk keeps this object: drop the raw fields
+            self._data_file = self._types = None
+        return self._stats
+
+    def __eq__(self, other: object) -> bool:
+        if isinstance(other, LazyFileStats):
+            other = other.resolve()
+        return self.resolve() == other
+
+    __hash__ = None  # type: ignore[assignment]
+
+    def __repr__(self) -> str:
+        return f"LazyFileStats({self.resolve()!r})"

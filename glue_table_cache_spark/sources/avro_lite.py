@@ -12,11 +12,26 @@ magic ``Obj\\x01``, file-metadata map carrying ``avro.schema``, 16-byte
 sync marker, blocks of zigzag-varint-encoded records.  Supported schema
 subset: null/boolean/int/long/float/double/bytes/string primitives,
 records, arrays, maps, unions, fixed — enough for Iceberg manifest
-lists and manifest files (and then some).  Codec: ``null`` only.
+lists and manifest files (and then some).  Codecs: ``null`` and
+``deflate`` on read, ``null`` on write.
+
+Decoding compiles the writer schema into a closure tree once per
+distinct schema text (:func:`_decoder_for`), not once per file.  A
+caller that consumes only some fields passes a *projection*
+(``fields=`` of :func:`read_avro_bytes`): a dict from record field name
+to ``True`` (decode), ``"raw"`` (keep the encoded bytes as a
+:class:`RawField`, decoded on demand) or a nested projection for a
+record-typed field.  Every field the projection leaves out is skipped
+at the byte level — a varint skip for int/long, a length skip for
+bytes/string, and a block-count walk for arrays and maps that jumps a
+whole block when the writer recorded its byte size — so it costs no
+allocation.  Iceberg's manifest walk reads a handful of the fields a
+Java-written manifest carries this way.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import struct
 from pathlib import Path
@@ -185,20 +200,194 @@ def _matches(branch: Any, value: Any) -> bool:
     return True
 
 
-def _compile_decoder(schema: Any):
+class RawField:
+    """One field's encoded bytes, kept undecoded by a ``"raw"``
+    projection entry (see the module docstring).  :meth:`decode` gives
+    the value a full decode would have produced.  It pickles as
+    ``(schema text, bytes)`` and compares by decoded value, so entries
+    carrying one compare equal to fully decoded ones."""
+
+    __slots__ = ("schema", "raw")
+
+    def __init__(self, schema: str, raw: bytes):
+        self.schema = schema  # JSON text of the encoded value's schema
+        self.raw = raw
+
+    def decode(self) -> Any:
+        return _decoder_for(self.schema, None)(self.raw, 0)[0]
+
+    def __eq__(self, other: object) -> bool:
+        if isinstance(other, RawField):
+            other = other.decode()
+        return self.decode() == other
+
+    __hash__ = None  # type: ignore[assignment]  # equal values, unequal bytes
+
+    def __repr__(self) -> str:
+        return f"RawField({self.decode()!r})"
+
+
+@functools.lru_cache(maxsize=64)
+def _decoder_for(schema_text: str | bytes, fields_key: str | None):
+    """The compiled decoder for one schema text and projection (JSON
+    text, ``None`` for a full decode) — compiled once per distinct
+    pair, however many files share the schema."""
+    fields = None if fields_key is None else json.loads(fields_key)
+    return _compile_decoder(json.loads(schema_text), fields)
+
+
+_WIDTHS = {"boolean": 1, "float": 4, "double": 8}
+
+
+def _skip_nothing(data, pos):
+    return pos
+
+
+def _skip_varint(data, pos):
+    while data[pos] & 0x80:
+        pos += 1
+    return pos + 1
+
+
+def _skip_bytes(data, pos):
+    acc = 0
+    shift = 0
+    while True:
+        byte = data[pos]
+        pos += 1
+        acc |= (byte & 0x7F) << shift
+        if not byte & 0x80:
+            break
+        shift += 7
+    return pos + ((acc >> 1) ^ -(acc & 1))
+
+
+def _compile_skipper(schema: Any):
+    """Compile the schema into ``fn(data, pos) -> pos`` that steps over
+    one encoded value without building it."""
+    t = _type_name(schema)
+    if t == "union":
+        branches = tuple(_compile_skipper(b) for b in schema)
+
+        def s_union(data, pos, _b=branches):
+            acc = 0
+            shift = 0
+            while True:
+                byte = data[pos]
+                pos += 1
+                acc |= (byte & 0x7F) << shift
+                if not byte & 0x80:
+                    break
+                shift += 7
+            return _b[(acc >> 1) ^ -(acc & 1)](data, pos)
+
+        return s_union
+    if t == "null":
+        return _skip_nothing
+    if t in ("int", "long"):
+        return _skip_varint
+    if t in ("bytes", "string"):
+        return _skip_bytes
+    if t in ("boolean", "float", "double", "fixed"):
+        width = schema["size"] if t == "fixed" else _WIDTHS[t]
+        return lambda data, pos: pos + width
+    if t == "record":
+        parts = tuple(_compile_skipper(f["type"]) for f in schema["fields"])
+
+        def s_record(data, pos, _p=parts):
+            for skip in _p:
+                pos = skip(data, pos)
+            return pos
+
+        return s_record
+    if t in ("array", "map"):
+        is_map = t == "map"
+        item = _compile_skipper(schema["values" if is_map else "items"])
+
+        def s_coll(data, pos, _item=item, _m=is_map):
+            while True:
+                acc = 0
+                shift = 0
+                while True:
+                    byte = data[pos]
+                    pos += 1
+                    acc |= (byte & 0x7F) << shift
+                    if not byte & 0x80:
+                        break
+                    shift += 7
+                count = (acc >> 1) ^ -(acc & 1)
+                if count == 0:
+                    return pos
+                if count < 0:  # the block's byte size follows: jump it
+                    pos = _skip_bytes(data, pos)
+                    continue
+                for _ in range(count):
+                    if _m:
+                        pos = _skip_bytes(data, pos)
+                    pos = _item(data, pos)
+
+        return s_coll
+    raise ValueError(f"unsupported avro type {t!r}")
+
+
+def _compile_raw(schema: Any):
+    """``fn(data, pos) -> (RawField | None, pos)``: the value's encoded
+    bytes, undecoded.  A union's null branch yields ``None`` and any
+    other branch a :class:`RawField` typed by that branch, so "absent"
+    stays as cheap to test as it is after a full decode."""
+    if _type_name(schema) != "union":
+        schema = [schema]
+        tagged = False
+    else:
+        tagged = True
+    branches = tuple(
+        None
+        if _type_name(b) == "null"
+        else (json.dumps(b), _compile_skipper(b))
+        for b in schema
+    )
+
+    def r_field(data, pos, _b=branches, _tagged=tagged):
+        idx = 0
+        if _tagged:
+            acc = 0
+            shift = 0
+            while True:
+                byte = data[pos]
+                pos += 1
+                acc |= (byte & 0x7F) << shift
+                if not byte & 0x80:
+                    break
+                shift += 7
+            idx = (acc >> 1) ^ -(acc & 1)
+        branch = _b[idx]
+        if branch is None:
+            return None, pos
+        text, skip = branch
+        end = skip(data, pos)
+        return RawField(text, data[pos:end]), end
+
+    return r_field
+
+
+def _compile_decoder(schema: Any, fields: dict | None = None):
     """Compile the schema into a closure tree ``fn(data, pos) ->
     (value, pos)`` over a flat ``bytes`` buffer.
 
     The schema-interpreting :func:`decode_value` dispatches on the
     schema node and calls ``BytesIO.read`` per varint byte — measured
     (cProfile, 512 manifests × 400 entries) that interpretation is
-    ~70% of the Iceberg driver metadata walk.  Compiling once per
-    file removes the per-value type dispatch and the stream-object
-    overhead (direct byte indexing); same supported subset, same
-    values (guide §1.2: per-task work, after the distributed shape)."""
+    ~70% of the Iceberg driver metadata walk.  The closure tree
+    removes the per-value type dispatch and the stream-object overhead
+    (direct byte indexing); same supported subset, same values.
+    :func:`_decoder_for` caches it per schema text.
+
+    ``fields`` projects a record (or a union's record branches): see
+    the module docstring.  A record decodes to a dict of the projected
+    fields only."""
     t = _type_name(schema)
     if t == "union":
-        branches = tuple(_compile_decoder(b) for b in schema)
+        branches = tuple(_compile_decoder(b, fields) for b in schema)
 
         def d_union(data, pos, _b=branches):
             acc = 0
@@ -274,15 +463,32 @@ def _compile_decoder(schema: Any):
 
         return d_fixed
     if t == "record":
-        fields = tuple(
-            (f["name"], _compile_decoder(f["type"]))
-            for f in schema["fields"]
-        )
+        plan = []  # (name, decoder), or (None, skipper) for unread fields
+        for f in schema["fields"]:
+            want = True if fields is None else fields.get(f["name"])
+            if not want:
+                plan.append((None, _compile_skipper(f["type"])))
+            elif want == "raw":
+                plan.append((f["name"], _compile_raw(f["type"])))
+            else:
+                plan.append(
+                    (
+                        f["name"],
+                        _compile_decoder(
+                            f["type"],
+                            want if isinstance(want, dict) else None,
+                        ),
+                    )
+                )
+        steps = tuple(plan)
 
-        def d_record(data, pos, _f=fields):
+        def d_record(data, pos, _f=steps):
             out = {}
             for name, dec in _f:
-                out[name], pos = dec(data, pos)
+                if name is None:
+                    pos = dec(data, pos)
+                else:
+                    out[name], pos = dec(data, pos)
             return out, pos
 
         return d_record
@@ -426,9 +632,13 @@ def read_avro(path: str | Path) -> list[dict]:
     return read_avro_bytes(data, name=str(path))
 
 
-def read_avro_bytes(data: bytes, name: str = "<bytes>") -> list[dict]:
+def read_avro_bytes(
+    data: bytes, name: str = "<bytes>", fields: dict | None = None
+) -> list[dict]:
     """Decode an Avro object container from in-memory bytes (the shape
-    an S3 GetObject body arrives in — no temp file round-trip)."""
+    an S3 GetObject body arrives in — no temp file round-trip).
+    ``fields`` projects each record (see the module docstring); the
+    default decodes every field."""
     import io
 
     buf = io.BytesIO(data)
@@ -446,9 +656,11 @@ def read_avro_bytes(data: bytes, name: str = "<bytes>") -> list[dict]:
             k = buf.read(_decode_long(buf)).decode("utf-8")
             meta[k] = buf.read(_decode_long(buf))
     codec = meta.get("avro.codec", b"null")
-    schema = json.loads(meta["avro.schema"])
     sync = buf.read(16)
-    decoder = _compile_decoder(schema)
+    decoder = _decoder_for(
+        meta["avro.schema"],
+        None if fields is None else json.dumps(fields, sort_keys=True),
+    )
     records: list[dict] = []
     while buf.tell() < len(data):
         count = _decode_long(buf)

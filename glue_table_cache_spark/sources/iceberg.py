@@ -32,6 +32,16 @@ all validation stay driver-side.  The returned path list feeds the
 distributed parquet scan.  Avro decoding uses
 :mod:`glue_table_cache_spark.sources.avro_lite` (neither fastavro nor
 the spark-avro module ship in this environment).
+
+Both decode legs read manifests through the same projection
+(:func:`_entry_fields`).  The reference reads one field per entry,
+``data_file['file_path']`` (``iceberg.ts:31-33``); the scan walk reads
+the few it validates and prunes on, and skips every other field —
+Java writers' ``column_sizes``, ``value_counts``, ``nan_value_counts``,
+``split_offsets`` and the like — at the byte level.  The zone-map
+fields stay raw bytes inside a
+:class:`~glue_table_cache_spark.skipping.LazyFileStats` and are decoded
+only for the files that survive partition pruning.
 """
 
 from __future__ import annotations
@@ -79,27 +89,54 @@ def _read_json(path: str, s3_client=None) -> dict:
 #: active SparkSession and no injected ``s3_client`` (a boto3 client
 #: cannot ship to executors).
 #:
-#: Crossover, median wall ms of a warm walk, driver / distributed, over
-#: lake-shaped manifests with column stats (the 64-manifest benchmark
-#: lake's manifests copied k times; 4-core host, ``local[3]``):
+#: Crossover, median wall ms of a warm walk as the engine calls it
+#: (``with_stats`` plus schema/spec/mapping), driver / distributed,
+#: over lake-shaped manifests with column stats (the 64-manifest
+#: benchmark lake's manifests copied k times; 4-core host,
+#: ``local[3]``).  The driver leg decodes through the walk's
+#: projection (:func:`_entry_fields`) and resolves no zone map; the
+#: distributed leg's pushed filter is a point query (partition plus
+#: id range):
 #:
 #: ============== ===================== =============
 #: manifest bytes with a pushed filter   without one
 #: ============== ===================== =============
-#: 0.43 MB        174 / 478             138 / 547
-#: 0.86 MB        237 / 476             214 / 676
-#: 1.72 MB        636 / 550             503 / 890
-#: 3.43 MB        1,336 / 674           1,137 / 1,462
-#: 6.86 MB        2,802 / 901           2,230 / 2,614
-#: 13.72 MB       4,362 / 1,394         4,590 / 4,880
+#: 0.41 MB        64 / 705              71 / 690
+#: 0.83 MB        129 / 654             128 / 734
+#: 1.65 MB        258 / 641             336 / 749
+#: 2.48 MB        372 / 797
+#: 3.31 MB        570-673 / 649-718     672 / 1,063
+#: 4.14 MB        714 / 667
+#: 6.62 MB        1,325 / 923           1,327 / 1,681
+#: 13.23 MB       2,467 / 1,266         2,464 / 2,704
 #: ============== ===================== =============
 #:
-#: Without a pushed filter the driver leg also spends less total CPU
-#: (Python plus JVM) at every size measured; with one it wins on CPU
-#: up to about 5 MB and on wall time up to about 1.5 MB.  2 MiB keeps
-#: small and mid-sized snapshots (and the 64-manifest, 0.43 MB
-#: point-query lake) off the Python workers.
-DISTRIBUTED_MANIFEST_MIN_BYTES = 2 * 1024 * 1024
+#: Without a pushed filter the driver leg wins at every size measured.
+#: With one it wins up to about 3.7 MB; before the walk decoded
+#: through a projection that crossover sat near 1.6 MB (1.65 MB:
+#: 685 / 649, the gate was 2 MiB).  3 MiB keeps the driver leg where
+#: it won in every run.
+DISTRIBUTED_MANIFEST_MIN_BYTES = 3 * 1024 * 1024
+
+
+def _entry_fields(zone_maps: bool) -> dict:
+    """The manifest-entry projection the scan walk decodes (see
+    :mod:`glue_table_cache_spark.sources.avro_lite`): validation,
+    sequence inheritance and partition pruning read these fields;
+    ``zone_maps`` keeps the three stats maps as raw bytes for
+    :class:`~glue_table_cache_spark.skipping.LazyFileStats` (they are
+    skipped otherwise)."""
+    data_file = dict.fromkeys(
+        ("content", "file_path", "partition", "record_count", "equality_ids"),
+        True,
+    )
+    if zone_maps:
+        data_file.update(
+            dict.fromkeys(
+                ("lower_bounds", "upper_bounds", "null_value_counts"), "raw"
+            )
+        )
+    return {"status": True, "sequence_number": True, "data_file": data_file}
 
 
 def _decode_manifests_distributed(
@@ -107,13 +144,16 @@ def _decode_manifests_distributed(
     paths: list[str],
     keep_fn=None,
     data_paths: set[str] | None = None,
+    fields: dict | None = None,
 ) -> dict[str, list[dict]]:
     """Decode manifest Avro files executor-side: each worker runs
     :func:`~glue_table_cache_spark.sources.avro_lite.read_avro_bytes`
-    on its share of the paths and returns one pickled entry-list blob
-    per manifest; the driver unpickles into exactly the per-entry
-    dicts the driver-side codec yields, so downstream validation,
-    sequence inheritance, and path resolution are byte-identical.
+    on its share of the paths, with the driver leg's ``fields``
+    projection, and returns one pickled entry-list blob per manifest
+    (a projected entry's raw fields pickle as bytes); the driver
+    unpickles into exactly the per-entry dicts the driver-side codec
+    yields, so downstream validation, sequence inheritance, and path
+    resolution are byte-identical.
 
     ``keep_fn`` (r13, from
     :class:`glue_table_cache_spark.meta_prune._IcebergPruneFactory`)
@@ -138,7 +178,7 @@ def _decode_manifests_distributed(
         for pdf in iterator:
             out_p, out_b = [], []
             for p in pdf["path"]:
-                entries = _rab(_rb(p), name=p)
+                entries = _rab(_rb(p), name=p, fields=fields)
                 if (
                     keep_fn is not None
                     and data_paths is not None
@@ -203,6 +243,7 @@ def _manifest_reader(
     keep_fn=None,
     data_paths: set[str] | None = None,
     applied: list | None = None,
+    fields: dict | None = None,
 ):
     """``callable(resolved_path) -> entries`` for a snapshot's
     manifest-list rows (paths mapped through ``resolve``):
@@ -213,7 +254,8 @@ def _manifest_reader(
     distributed decode (see :func:`_decode_manifests_distributed`);
     the driver fallback ignores them — the engine's driver-side prune
     still runs over whatever this returns, so both paths converge on
-    the same kept set."""
+    the same kept set.  Both legs decode with the same ``fields``
+    projection (``None``: every field)."""
     lengths = {
         resolve(r["manifest_path"]): int(r.get("manifest_length") or 0)
         for r in list_rows
@@ -234,10 +276,11 @@ def _manifest_reader(
                 list(lengths),
                 keep_fn=keep_fn,
                 data_paths=data_paths,
+                fields=fields,
             )
             return decoded.__getitem__
     return lambda p: read_avro_bytes(
-        _read_bytes(p, s3_client), name=p
+        _read_bytes(p, s3_client), name=p, fields=fields
     )
 
 
@@ -607,10 +650,14 @@ def iceberg_scan_details(
       resurrect rows).
 
     ``with_stats=True`` widens data entries to 4-tuples whose last
-    element is a :class:`glue_table_cache_spark.skipping.FileStats`
-    decoded from the manifest's ``lower_bounds``/``upper_bounds``/
-    ``null_value_counts``/``record_count`` (``None`` when the writer
-    recorded none) — the zone-map input for file skipping.
+    element is a :class:`glue_table_cache_spark.skipping.LazyFileStats`
+    over the manifest's ``lower_bounds``/``upper_bounds``/
+    ``null_value_counts``/``record_count`` — the zone-map input for
+    file skipping.  The walk does not decode them: ``.resolve()``
+    does, on first call, and returns the
+    :class:`~glue_table_cache_spark.skipping.FileStats` (``None`` when
+    the writer recorded none).  Callers resolve only the files they
+    still need after partition pruning.
 
     ``with_schema=True`` widens the RETURN to a 4-tuple whose last
     element is the resolved metadata version's current schema as a
@@ -670,11 +717,10 @@ def iceberg_scan_details(
 
     if not snapshots:
         return _widen(([], [], []))
+    if with_stats:
+        from glue_table_cache_spark.skipping import LazyFileStats
     names_by_id = _field_names_by_id(meta)
     types_by_id = _field_types_by_id(meta) if with_stats else {}
-
-    def avro(path: str) -> list[dict]:
-        return read_avro_bytes(_read_bytes(path, s3_client), name=path)
 
     if as_of_ref is not None:
         # named-ref travel (spec `refs` map): the tag/branch's
@@ -712,7 +758,14 @@ def iceberg_scan_details(
     entries: list = []
     pos_deletes: list[str] = []
     eq_deletes: list[dict] = []
-    list_rows = avro(manifest_list)
+    list_rows = read_avro_bytes(
+        _read_bytes(manifest_list, s3_client),
+        name=manifest_list,
+        fields=dict.fromkeys(
+            ("manifest_path", "manifest_length", "content", "sequence_number"),
+            True,
+        ),
+    )
     # r13 predicate pushdown: data-manifest entries the query's
     # partition/stats predicates disprove are dropped EXECUTOR-side
     # inside the distributed decode (delete manifests always ship
@@ -736,6 +789,8 @@ def iceberg_scan_details(
         keep_fn=keep_fn,
         data_paths=data_manifest_paths,
         applied=pushdown_applied,
+        # the pushed keep_fn reads the zone maps too
+        fields=_entry_fields(with_stats or keep_fn is not None),
     )
     if pushdown_applied and prune_factory is not None:
         # the caching layer keys this walk's result by predicate
@@ -775,13 +830,7 @@ def iceberg_scan_details(
                     seq,
                 )
                 if with_stats:
-                    from glue_table_cache_spark.skipping import (
-                        iceberg_entry_stats,
-                    )
-
-                    row = row + (
-                        iceberg_entry_stats(df_rec, types_by_id),
-                    )
+                    row = row + (LazyFileStats(df_rec, types_by_id),)
                 entries.append(row)
                 continue
             content = df_rec.get("content", 0)

@@ -654,3 +654,39 @@ def test_iceberg_manifest_byte_gate(spark, tmp_path, monkeypatch):
     assert dist_f[0] == [e for e in driver[0] if e[1]["p"] == "7"]
     assert len(dist_f[0]) == 4 * 8
     assert dist_f[1:] == driver[1:]
+
+
+def test_cold_sql_decodes_zone_maps_for_survivors_only(
+    spark, tmp_path, monkeypatch
+):
+    """A cold ``engine.sql()`` over a 64-manifest table resolves zone
+    maps only for the files partition pruning keeps: 8 of the 512
+    entries, not all 512."""
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import glue_table_cache_spark.skipping as sk
+
+    loc, _total = _many_manifest_iceberg(tmp_path / "ice64", parts=64)
+    for e in range(8):  # only the survivors are ever opened
+        f = Path(loc) / "data" / "p=7" / f"f-7-{e}.parquet"
+        f.parent.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table({"id": pa.array([e], pa.int64())}), f)
+    resolved: list = []
+    real = sk.iceberg_entry_stats
+
+    def counted(data_file, types_by_id):
+        resolved.append(data_file)
+        return real(data_file, types_by_id)
+
+    monkeypatch.setattr(sk, "iceberg_entry_stats", counted)
+    store = LocalMetadataStore()
+    store.register_parquet_dir(
+        "db", "ice", loc, parameters={"table_type": "ICEBERG"}
+    )
+    eng = GlueSparkEngine(spark, store)
+    rows = eng.sql("SELECT id, p FROM glue.db.ice WHERE p = '7'").collect()
+    assert sorted((r.id, r.p) for r in rows) == [(e, "7") for e in range(8)]
+    assert len(resolved) == 8

@@ -1000,7 +1000,7 @@ def test_optimize_iceberg_compacts_preserves_and_time_travels(
     )
     # the new file carries re-derived bounds
     entries, _d, _e = iceberg_scan_details(str(base), with_stats=True)
-    assert all(st is not None for _p, _pv, _s, st in entries)
+    assert all(st.resolve() is not None for _p, _pv, _s, st in entries)
     assert optimize_iceberg(spark, str(base)) is None  # nothing left
 
 
@@ -1778,6 +1778,62 @@ def test_hudi_log_writer_upsert_delete_compact_clean(spark, tmp_path):
     ]
     _b, _l, got = view()
     assert got == [(1, "a"), (2, "B2"), (4, "d"), (9, "new")]
+
+
+def test_compact_hudi_byte_bound_picks_the_write(
+    spark, tmp_path, monkeypatch
+):
+    """compact_hudi collects a file group to the driver only while its
+    base slice plus live logs fit ``max_driver_bytes``; above that the
+    executor writes the slice, except for a group whose every row was
+    deleted (nothing to write executor-side; its empty slice is written
+    on the driver).  Both arms fold the same rows and leave no staging
+    directory."""
+    import glue_table_cache_spark.sources.fixture_io as fio
+    from glue_table_cache_spark.sinks.hudi_log_write import (
+        compact_hudi,
+        write_hudi_log,
+    )
+    from glue_table_cache_spark.sinks.hudi_write import (
+        write_hudi_append,
+    )
+    from glue_table_cache_spark.sources.hudi import hudi_mor_scan_info
+
+    driver_writes: list = []
+    real = fio.write_single_parquet
+
+    def counted(df, out):
+        driver_writes.append(out)
+        return real(df, out)
+
+    monkeypatch.setattr(fio, "write_single_parquet", counted)
+    # two file groups: {1, 2} and {3}; the log deletes all of {3}
+    seeds = [
+        spark.createDataFrame(rows, "id long, v string").coalesce(1)
+        for rows in ([(1, "a"), (2, "b")], [(3, "c")])
+    ]
+    ups = spark.createDataFrame([(2, "B2"), (9, "new")], "id long, v string")
+    got = {}
+    for arm, bound in (("driver", 1 << 40), ("executor", 0)):
+        loc = str(tmp_path / arm)
+        for seed in seeds:
+            write_hudi_append(seed, loc, table_type="MERGE_ON_READ")
+        write_hudi_log(spark, loc, "id", upserts=ups, delete_keys=[1, 3])
+        driver_writes.clear()
+        assert compact_hudi(spark, loc, "id", max_driver_bytes=bound)
+        base_entries, log_entries = hudi_mor_scan_info(loc)
+        assert log_entries == []
+        assert len(base_entries) == 2
+        assert not list((tmp_path / arm).glob("_staging_*"))
+        rows = sorted(
+            (r.id, r.v)
+            for r in spark.read.parquet(
+                *[p for p, _pv, _ts in base_entries]
+            ).collect()
+        )
+        got[arm] = (len(driver_writes), rows)
+    want = [(2, "B2"), (9, "new")]
+    assert got == {"driver": (2, want), "executor": (1, want)}
 
 
 def test_hudi_log_writer_refuses_cow(spark, tmp_path):
