@@ -29,14 +29,25 @@ transform pruning (Iceberg hidden partitions, Delta generated
 columns) and zone-map skipping over the walk's per-file stats — the
 reference's single ``SELECT list(path) FROM listing WHERE …``
 (its ``src/glue-table-cache.ts:323-333``).
+
+Write and metadata statements (INSERT/CTAS, DELETE, UPDATE, MERGE,
+ALTER, TBLPROPERTIES, RESTORE, OPTIMIZE/VACUUM/REORG/FSCK, COPY INTO,
+constraints, tags and branches, DESCRIBE HISTORY/DETAIL) pick their
+implementation in one place too: ``formats.for_format`` maps the verb
+and the table's format to a sink or source function, or refuses with a
+reason that names both.  The engine binds the statement's arguments
+and calls it; Hudi's MERGE_ON_READ layout is decided once per
+statement, in ``GlueSparkEngine._row_writer``.
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
 import re as _re
 import threading
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,6 +71,7 @@ from glue_table_cache_spark.errors import (
     GlueSparkError,
     NoStorageLocationError,
 )
+from glue_table_cache_spark.formats import Detail, for_format
 from glue_table_cache_spark.listing import (
     FileInfo,
     FileSystem,
@@ -84,6 +96,19 @@ from glue_table_cache_spark.transformer import (
     get_query_glue_table_refs,
     rewrite_query,
 )
+
+#: row-level verb → the engine method that writes it on a
+#: MERGE_ON_READ Hudi table (log blocks instead of base rewrites)
+_HUDI_MOR_WRITERS = {
+    "DELETE": "_hudi_mor_delete",
+    "UPDATE": "_hudi_mor_update",
+    "MERGE": "_hudi_mor_merge",
+}
+
+
+def _local_path(loc: str) -> str:
+    """``loc`` without its ``file:`` scheme."""
+    return loc[len("file:"):] if loc.startswith("file:") else loc
 
 
 class GlueSparkEngine:
@@ -237,17 +262,12 @@ class GlueSparkEngine:
         that sequence number (the same identifier data-scan travel
         uses).  Non-Iceberg formats refuse toward the engine's
         unified ``DESCRIBE HISTORY`` surface."""
-        from glue_table_cache_spark.catalog import ETableType
-        from glue_table_cache_spark.errors import (
-            NoStorageLocationError,
-        )
         from glue_table_cache_spark.sources.iceberg import (
             iceberg_metadata_table,
         )
 
         tbl = self.get_table_metadata_cached(ref.database, ref.table)
-        if not tbl.location:
-            raise NoStorageLocationError(tbl.database, tbl.name)
+        loc = self._table_location(tbl)
         if tbl.table_type != ETableType.ICEBERG:
             raise GlueSparkError(
                 f"glue.{ref.database}.{ref.table}.{kind}: Iceberg "
@@ -256,9 +276,6 @@ class GlueSparkEngine:
                 f"glue.{ref.database}.{ref.table} for the engine's "
                 "unified timeline"
             )
-        loc = tbl.location
-        if loc.startswith("file:"):
-            loc = loc[len("file:"):]
         return iceberg_metadata_table(
             self.spark, loc, kind, sequence_number=version
         )
@@ -302,17 +319,9 @@ class GlueSparkEngine:
         what refuses is the genuinely non-reconstructible remainder
         (Iceberg equality-delete changes, Hudi replacecommits that
         retire groups with live logs) — with a pointer."""
-        from glue_table_cache_spark.catalog import ETableType
-        from glue_table_cache_spark.errors import (
-            NoStorageLocationError,
-        )
 
         tbl = self.get_table_metadata_cached(ref.database, ref.table)
-        if not tbl.location:
-            raise NoStorageLocationError(tbl.database, tbl.name)
-        loc = tbl.location
-        if loc.startswith("file:"):
-            loc = loc[len("file:"):]
+        loc = self._table_location(tbl)
         if tbl.table_type == ETableType.DELTA:
             from glue_table_cache_spark.sources.delta import (
                 delta_cdf,
@@ -409,6 +418,7 @@ class GlueSparkEngine:
             ShowStatement,
             TablePropertiesStatement,
             UpdateStatement,
+            predicate_has_subquery,
         )
 
         ref = stmt.ref
@@ -423,302 +433,73 @@ class GlueSparkEngine:
         if isinstance(stmt, ShowStatement):
             return self._execute_show(stmt)
         tbl = self.get_table_metadata_cached(ref.database, ref.table)
-        if not tbl.location:
-            raise NoStorageLocationError(tbl.database, tbl.name)
-        loc = tbl.location
-        if loc.startswith("file:"):
-            loc = loc[len("file:"):]
+        loc = self._table_location(tbl)
         ttype = tbl.table_type
         qual = f"glue.{ref.database}.{ref.table}"
-        fmt_hint = (
-            f"{qual} is registered as {ttype.name} — raw parquet has "
-            "no transaction log to commit against; register the "
-            "location as a DELTA/ICEBERG/HUDI table"
-        )
-        version: object = None
-        n_upd = n_ins = n_del = 0
         if isinstance(stmt, ConvertStatement):
             return self._execute_convert(stmt, tbl, loc, qual)
-        if isinstance(stmt, CopyIntoStatement):
-            if ttype != ETableType.DELTA:
-                raise GlueSparkError(
-                    f"COPY INTO {qual}: the per-file idempotence "
-                    "ledger rides the Delta log's SetTransaction "
-                    "state; the table is registered as "
-                    f"{ttype.name}"
-                )
-            from glue_table_cache_spark.sinks.delta_write import (
-                copy_into_delta,
-            )
-
-            version, n_files, n_rows = copy_into_delta(
-                self.spark, loc, stmt.source
-            )
-            if version is not None:
-                self.invalidate_table(ref.database, ref.table)
-            return local_frame(
-                self.spark,
-                [(
-                    "COPY INTO",
-                    None if version is None else str(version),
-                    0, n_rows, 0,
-                )],
-                "operation string, version string, rows_updated long, "
-                "rows_inserted long, rows_deleted long",
-            )
         if isinstance(stmt, MaintenanceStatement):
             return self._execute_maintenance(stmt, tbl, loc, qual)
-        if isinstance(stmt, ConstraintStatement):
-            if ttype != ETableType.DELTA:
-                raise GlueSparkError(
-                    f"{stmt.action.upper()} CONSTRAINT {qual}: CHECK "
-                    "constraints live in the Delta configuration "
-                    "(delta.constraints.<name>); the table is "
-                    f"registered as {ttype.name}"
-                )
-            from glue_table_cache_spark.sinks.delta_write import (
-                set_delta_table_properties,
+        n_upd = n_ins = n_del = 0
+        if isinstance(stmt, CopyIntoStatement):
+            op = "COPY INTO"
+            version, _n_files, n_ins = for_format(op, ttype, qual)(
+                self.spark, loc, stmt.source
             )
-            from glue_table_cache_spark.sources.delta import (
-                delta_table_configuration,
+        elif isinstance(stmt, ConstraintStatement):
+            op = f"{stmt.action.upper()} CONSTRAINT"
+            version = self._alter_constraint(stmt, tbl, loc, qual, op)
+        elif isinstance(stmt, TablePropertiesStatement):
+            op = (
+                "UNSET TBLPROPERTIES" if stmt.unset else "SET TBLPROPERTIES"
             )
-
-            key = f"delta.constraints.{stmt.name}"
-            cfg = delta_table_configuration(loc)
-            if stmt.action == "add":
-                if key in cfg:
-                    raise GlueSparkError(
-                        f"ADD CONSTRAINT {qual}: constraint "
-                        f"{stmt.name!r} already exists "
-                        f"({cfg[key]}); DROP it first"
-                    )
-                # EXISTING rows must already satisfy the new CHECK —
-                # otherwise the table is born violating its own gate
-                bad = (
-                    self.table_dataframe(ref.database, ref.table)
-                    .where(
-                        ~F.coalesce(F.expr(stmt.expr), F.lit(True))
-                    )
-                    .limit(1)
-                    .count()
-                )
-                if bad:
-                    raise GlueSparkError(
-                        f"ADD CONSTRAINT {qual}: existing rows "
-                        f"violate CHECK ({stmt.expr}) — clean the "
-                        "data first"
-                    )
-                version = set_delta_table_properties(
-                    loc, {key: stmt.expr}
-                )
-            else:
-                if key not in cfg:
-                    raise GlueSparkError(
-                        f"DROP CONSTRAINT {qual}: no constraint "
-                        f"named {stmt.name!r} (have "
-                        f"{sorted(k.rsplit('.', 1)[1] for k in cfg if k.startswith('delta.constraints.'))})"
-                    )
-                version = set_delta_table_properties(
-                    loc, {}, unset=(key,)
-                )
-            self.invalidate_table(ref.database, ref.table)
-            return local_frame(
-                self.spark,
-                [(
-                    f"{stmt.action.upper()} CONSTRAINT",
-                    str(version), 0, 0, 0,
-                )],
-                "operation string, version string, rows_updated long, "
-                "rows_inserted long, rows_deleted long",
+            version = for_format("SET TBLPROPERTIES", ttype, qual, op)(
+                loc, dict(stmt.props), unset=stmt.unset
             )
-        if isinstance(stmt, TablePropertiesStatement):
-            if ttype == ETableType.DELTA:
-                from glue_table_cache_spark.sinks.delta_write import (
-                    set_delta_table_properties,
-                )
-
-                version = set_delta_table_properties(
-                    loc, dict(stmt.props), unset=stmt.unset
-                )
-            elif ttype == ETableType.ICEBERG:
-                from glue_table_cache_spark.sinks.iceberg_write import (  # noqa: E501
-                    set_iceberg_table_properties,
-                )
-
-                version = set_iceberg_table_properties(
-                    loc, dict(stmt.props), unset=stmt.unset
-                )
-            elif ttype == ETableType.HUDI:
-                from glue_table_cache_spark.sinks.hudi_write import (
-                    set_hudi_table_properties,
-                )
-
-                set_hudi_table_properties(
-                    loc, dict(stmt.props), unset=stmt.unset
-                )
-                version = None
-            else:
-                raise GlueSparkError(
-                    f"SET TBLPROPERTIES {qual}: table properties "
-                    "live in each format's own metadata (Delta "
-                    "configuration / Iceberg properties / "
-                    "hoodie.properties); the table is registered "
-                    f"as {ttype.name}"
-                )
-            self.invalidate_table(ref.database, ref.table)
-            return local_frame(
-                self.spark,
-                [(
-                    "UNSET TBLPROPERTIES"
-                    if stmt.unset else "SET TBLPROPERTIES",
-                    None if version is None else str(version),
-                    0, 0, 0,
-                )],
-                "operation string, version string, rows_updated long, "
-                "rows_inserted long, rows_deleted long",
-            )
-        if isinstance(stmt, RefStatement):
-            if ttype != ETableType.ICEBERG:
-                raise GlueSparkError(
-                    f"{stmt.action.upper()} "
-                    f"{stmt.ref_type.upper()} {qual}: named "
-                    "snapshot refs are an Iceberg feature (the "
-                    f"table is registered as {ttype.name})"
-                )
-            from glue_table_cache_spark.sinks.iceberg_write import (
-                create_iceberg_ref,
-                drop_iceberg_ref,
-            )
-
+        elif isinstance(stmt, RefStatement):
+            op = f"{stmt.action.upper()} {stmt.ref_type.upper()}"
+            verb = f"{stmt.action.upper()} REF"
             if stmt.action == "create":
-                version = create_iceberg_ref(
+                version = for_format(verb, ttype, qual, op)(
                     loc,
                     stmt.name,
                     ref_type=stmt.ref_type,
                     sequence_number=stmt.version,
                 )
             else:
-                version = drop_iceberg_ref(loc, stmt.name)
-            self.invalidate_table(ref.database, ref.table)
-            return local_frame(
-                self.spark,
-                [
-                    (
-                        f"{stmt.action.upper()} "
-                        f"{stmt.ref_type.upper()}",
-                        str(version),
-                        0,
-                        0,
-                        0,
-                    )
-                ],
-                "operation string, version string, rows_updated long, "
-                "rows_inserted long, rows_deleted long",
-            )
-        if isinstance(stmt, RestoreStatement):
-            target_version = stmt.version
+                version = for_format(verb, ttype, qual, op)(
+                    loc, stmt.name
+                )
+        elif isinstance(stmt, RestoreStatement):
+            op = "RESTORE"
+            target = stmt.version
             if stmt.timestamp is not None:
                 # TO TIMESTAMP AS OF: resolve through the same rule
                 # read-side timestamp travel uses (newest commit at
                 # or before the literal)
-                if ttype != ETableType.DELTA:
-                    raise GlueSparkError(
-                        f"RESTORE {qual} TO TIMESTAMP AS OF: "
-                        "implemented for Delta (commitInfo "
-                        "timestamps are the travel authority); for "
-                        f"{ttype.name} restore by VERSION AS OF"
-                    )
-                from glue_table_cache_spark.sources.delta import (
-                    delta_version_at_timestamp,
-                )
-
-                target_version = delta_version_at_timestamp(
+                target = for_format(
+                    "RESTORE TIMESTAMP AS OF", ttype, qual
+                )(
                     loc,
                     self._travel_timestamp_ms(stmt.timestamp),
                     fs=self._fs,
                 )
-            if ttype == ETableType.DELTA:
-                from glue_table_cache_spark.sinks.delta_write import (
-                    restore_delta,
-                )
-
-                version = restore_delta(loc, target_version)
-            elif ttype == ETableType.ICEBERG:
-                from glue_table_cache_spark.sinks.iceberg_write import (
-                    rollback_iceberg,
-                )
-
-                version = rollback_iceberg(loc, stmt.version)
-            elif ttype == ETableType.HUDI:
-                from glue_table_cache_spark.sinks.hudi_write import (
-                    restore_hudi,
-                )
-
-                version = restore_hudi(loc, stmt.version)
+            version = for_format(op, ttype, qual)(loc, target)
+        elif isinstance(stmt, AlterColumnStatement):
+            # Iceberg's rename/drop is the spec's native mechanism:
+            # readers resolve by FIELD ID, so both are one metadata
+            # commit; the name-mapping property pins on-disk
+            # spellings for this engine's id-less parquet files
+            if stmt.action == "rename":
+                op, args = "RENAME COLUMN", (stmt.column, stmt.new_name)
             else:
-                raise GlueSparkError(f"RESTORE {qual}: {fmt_hint}")
-            self.invalidate_table(ref.database, ref.table)
-            return local_frame(
-                self.spark,
-                [("RESTORE", str(version), 0, 0, 0)],
-                "operation string, version string, rows_updated long, "
-                "rows_inserted long, rows_deleted long",
-            )
-        if isinstance(stmt, AlterColumnStatement):
-            verb = (
-                "RENAME COLUMN"
-                if stmt.action == "rename"
-                else "DROP COLUMN"
-            )
-            if ttype == ETableType.DELTA:
-                from glue_table_cache_spark.sinks.delta_write import (
-                    alter_delta_drop_column,
-                    alter_delta_rename_column,
-                )
-
-                if stmt.action == "rename":
-                    version = alter_delta_rename_column(
-                        loc, stmt.column, stmt.new_name
-                    )
-                else:
-                    version = alter_delta_drop_column(loc, stmt.column)
-            elif ttype == ETableType.ICEBERG:
-                # the spec's native mechanism: readers resolve by
-                # FIELD ID, so rename/drop are one metadata commit;
-                # the name-mapping property pins on-disk spellings
-                # for this engine's id-less parquet files
-                from glue_table_cache_spark.sinks.iceberg_write import (
-                    alter_iceberg_drop_column,
-                    alter_iceberg_rename_column,
-                )
-
-                if stmt.action == "rename":
-                    version = alter_iceberg_rename_column(
-                        loc, stmt.column, stmt.new_name
-                    )
-                else:
-                    version = alter_iceberg_drop_column(
-                        loc, stmt.column
-                    )
-            else:
-                raise GlueSparkError(
-                    f"ALTER TABLE {qual} {verb}: logical column "
-                    "changes need column mapping (Delta) or field-id "
-                    f"resolution (Iceberg); this table is "
-                    f"{ttype.name} — Hudi tracks columns by name "
-                    "in every base/log file; rewrite via CREATE "
-                    "TABLE AS"
-                )
-            self.invalidate_table(ref.database, ref.table)
-            return local_frame(
-                self.spark,
-                [(verb, str(version), 0, 0, 0)],
-                "operation string, version string, rows_updated "
-                "long, rows_inserted long, rows_deleted long",
-            )
-        if isinstance(stmt, AlterTableStatement):
+                op, args = "DROP COLUMN", (stmt.column,)
+            version = for_format(op, ttype, qual)(loc, *args)
+        elif isinstance(stmt, AlterTableStatement):
             from pyspark.sql.types import StructType
 
+            op = "ADD COLUMNS"
+            add_columns = for_format(op, ttype, qual)
             try:
                 cols = StructType.fromDDL(stmt.columns_ddl)
             except Exception as e:
@@ -726,192 +507,23 @@ class GlueSparkEngine:
                     f"ALTER TABLE {qual}: invalid column list "
                     f"{stmt.columns_ddl!r} ({e})"
                 ) from None
-            if ttype == ETableType.DELTA:
-                from glue_table_cache_spark.sinks.delta_write import (
-                    alter_delta_add_columns,
-                )
-
-                version = alter_delta_add_columns(loc, cols)
-            elif ttype == ETableType.ICEBERG:
-                from glue_table_cache_spark.sinks.iceberg_write import (
-                    alter_iceberg_add_columns,
-                )
-
-                version = alter_iceberg_add_columns(loc, cols)
-            elif ttype == ETableType.HUDI:
-                from glue_table_cache_spark.sinks.hudi_write import (
-                    alter_hudi_add_columns,
-                )
-
-                version = alter_hudi_add_columns(loc, cols)
-            else:
-                raise GlueSparkError(f"ALTER TABLE {qual}: {fmt_hint}")
-            self.invalidate_table(ref.database, ref.table)
-            return local_frame(
-                self.spark,
-                [("ADD COLUMNS", str(version), 0, 0, 0)],
-                "operation string, version string, rows_updated long, "
-                "rows_inserted long, rows_deleted long",
-            )
-        if isinstance(stmt, InsertStatement):
+            version = add_columns(loc, cols)
+        elif isinstance(stmt, InsertStatement):
             op = "INSERT OVERWRITE" if stmt.overwrite else "INSERT"
-            # the source resolves through the normal read path (glue
-            # refs, temp views, VALUES, subqueries all work); an
-            # explicit column list renames positionally — the writers'
-            # own schema authority gates the rest
-            source = self.sql(f"SELECT * FROM ({stmt.source_text})")
-            # standard INSERT semantics: the source binds to the
-            # table's columns POSITIONALLY (or to the explicit column
-            # list) and implicitly casts to the target column types —
-            # a bare VALUES tuple's col1/col2 names are meaningless
-            target_fields = self.table_dataframe(
-                ref.database, ref.table
-            ).schema.fields
-            if stmt.by_name:
-                # BY NAME: the source's own column names bind —
-                # order-free; unknown names refuse, missing target
-                # columns NULL-fill (the Delta-dialect posture)
-                known = {f.name for f in target_fields}
-                unknown = [
-                    c for c in source.columns if c not in known
-                ]
-                if unknown:
-                    raise GlueSparkError(
-                        f"{op} {qual} BY NAME: source column(s) "
-                        f"{unknown} are not in the table schema "
-                        f"{sorted(known)}"
-                    )
-                have = set(source.columns)
-                source = source.select(
-                    *[
-                        F.col(f.name)
-                        if f.name in have
-                        else F.lit(None)
-                        .cast(f.dataType)
-                        .alias(f.name)
-                        for f in target_fields
-                    ]
-                )
-            elif stmt.columns:
-                if len(stmt.columns) != len(source.columns):
-                    raise GlueSparkError(
-                        f"{op} {qual}: column list has "
-                        f"{len(stmt.columns)} name(s) but the source "
-                        f"produces {len(source.columns)} column(s)"
-                    )
-                source = source.toDF(*stmt.columns)
-            elif len(source.columns) == len(target_fields):
-                source = source.toDF(
-                    *[f.name for f in target_fields]
-                )
-            else:
-                raise GlueSparkError(
-                    f"{op} {qual}: the source produces "
-                    f"{len(source.columns)} column(s) but the table "
-                    f"has {len(target_fields)} — INSERT binds "
-                    "positionally; pass an explicit column list"
-                )
-            target = {f.name: f.dataType for f in target_fields}
-            source = source.select(
-                *[
-                    F.col(c).cast(target[c]).alias(c)
-                    if c in target
-                    else F.col(c)
-                    for c in source.columns
-                ]
-            )
+            append = for_format("INSERT", ttype, qual, op)
+            source = self._insert_source(stmt, op, qual)
             n_ins = source.count()
-            if ttype == ETableType.DELTA:
-                from glue_table_cache_spark.sinks.delta_write import (
-                    write_delta_append,
-                )
-
-                version = write_delta_append(
-                    source, loc, overwrite=stmt.overwrite
-                )
-            elif ttype == ETableType.ICEBERG:
-                from glue_table_cache_spark.sinks.iceberg_write import (
-                    write_iceberg_append,
-                )
-
-                version = write_iceberg_append(
-                    source, loc, overwrite=stmt.overwrite
-                )
-            elif ttype == ETableType.HUDI:
-                from glue_table_cache_spark.sinks.hudi_write import (
-                    write_hudi_append,
-                )
-
-                version = write_hudi_append(
-                    source, loc, overwrite=stmt.overwrite
-                )
-            else:
-                raise GlueSparkError(f"{op} {qual}: {fmt_hint}")
-            self.invalidate_table(ref.database, ref.table)
-            return local_frame(
-                self.spark,
-                [(op, str(version), 0, n_ins, 0)],
-                "operation string, version string, rows_updated long, "
-                "rows_inserted long, rows_deleted long",
-            )
-        if isinstance(stmt, DeleteStatement):
+            version = append(source, loc, overwrite=stmt.overwrite)
+        elif isinstance(stmt, DeleteStatement):
             op = "DELETE"
+            _v, delete = self._row_writer(op, tbl, loc, qual)
             # subquery predicates (`WHERE id IN (SELECT ... FROM
-            # glue.db.x)` — the decontamination DELETE): glue refs
-            # inside the predicate resolve to per-call temp views;
-            # the writers evaluate the predicate in FILTERS, where
-            # Spark allows InSubquery/Exists
-            import dataclasses as _dc
-
-            drop_pred_views = None
-            if "(" in stmt.predicate:
-                pred, drop_pred_views = (
-                    self._resolve_predicate_refs(stmt.predicate)
-                )
-                stmt = _dc.replace(stmt, predicate=pred)
-            try:
-                if ttype == ETableType.DELTA:
-                    from glue_table_cache_spark.sinks.delta_delete import (  # noqa: E501
-                        delete_from_delta,
-                    )
-
-                    version, n_del = delete_from_delta(
-                        self.spark, loc, stmt.predicate
-                    )
-                elif ttype == ETableType.ICEBERG:
-                    from glue_table_cache_spark.sinks.iceberg_delete import (  # noqa: E501
-                        delete_from_iceberg,
-                    )
-
-                    version, n_del = delete_from_iceberg(
-                        self.spark, loc, stmt.predicate
-                    )
-                elif ttype == ETableType.HUDI:
-                    if self._hudi_is_mor(loc):
-                        version, n_del = self._hudi_mor_delete(
-                            tbl, stmt
-                        )
-                    else:
-                        from glue_table_cache_spark.sinks.hudi_log_write import (  # noqa: E501
-                            delete_from_hudi,
-                        )
-
-                        version, n_del = delete_from_hudi(
-                            self.spark, loc, stmt.predicate
-                        )
-                else:
-                    raise GlueSparkError(
-                        f"DELETE FROM {qual}: {fmt_hint}"
-                    )
-            finally:
-                if drop_pred_views is not None:
-                    drop_pred_views()
+            # glue.db.x)` — the decontamination DELETE) evaluate in
+            # the writers' FILTERS, where Spark allows them
+            with self._predicate_refs(stmt.predicate) as pred:
+                version, n_del = delete(self.spark, loc, pred)
         elif isinstance(stmt, UpdateStatement):
             op = "UPDATE"
-            from glue_table_cache_spark.dml import (
-                predicate_has_subquery,
-            )
-
             if any(
                 predicate_has_subquery(e)
                 for e in stmt.set_exprs.values()
@@ -922,174 +534,192 @@ class GlueSparkEngine:
                     "Spark only allows them in filters — express "
                     "the change as MERGE INTO ... USING (SELECT ...)"
                 )
-            # subquery PREDICATES work: glue refs resolve to
-            # per-call views and the writers evaluate the condition
-            # in filters (the filter-union rewrite shape)
-            import dataclasses as _dc
-
-            drop_pred_views = None
-            if "(" in stmt.predicate:
-                pred, drop_pred_views = (
-                    self._resolve_predicate_refs(stmt.predicate)
+            _v, update = self._row_writer(op, tbl, loc, qual)
+            with self._predicate_refs(stmt.predicate) as pred:
+                version, n_upd = update(
+                    self.spark, loc, pred, stmt.set_exprs
                 )
-                stmt = _dc.replace(stmt, predicate=pred)
-            try:
-                if ttype == ETableType.DELTA:
-                    from glue_table_cache_spark.sinks.delta_merge import (  # noqa: E501
-                        update_delta,
-                    )
-
-                    version, n_upd = update_delta(
-                        self.spark, loc, stmt.predicate,
-                        stmt.set_exprs,
-                    )
-                elif ttype == ETableType.ICEBERG:
-                    from glue_table_cache_spark.sinks.iceberg_delete import (  # noqa: E501
-                        update_iceberg,
-                    )
-
-                    version, n_upd = update_iceberg(
-                        self.spark, loc, stmt.predicate,
-                        stmt.set_exprs,
-                    )
-                elif ttype == ETableType.HUDI:
-                    if self._hudi_is_mor(loc):
-                        version, n_upd = self._hudi_mor_update(
-                            tbl, stmt
-                        )
-                    else:
-                        from glue_table_cache_spark.sinks.hudi_log_write import (  # noqa: E501
-                            update_hudi,
-                        )
-
-                        version, n_upd = update_hudi(
-                            self.spark, loc, stmt.predicate,
-                            stmt.set_exprs,
-                        )
-                else:
-                    raise GlueSparkError(
-                        f"UPDATE {qual}: {fmt_hint}"
-                    )
-            finally:
-                if drop_pred_views is not None:
-                    drop_pred_views()
         elif isinstance(stmt, MergeStatement):
             op = "MERGE"
-            if ttype not in (
-                ETableType.DELTA,
-                ETableType.ICEBERG,
-                ETableType.HUDI,
-            ):
-                raise GlueSparkError(f"MERGE INTO {qual}: {fmt_hint}")
+            verb, merge = self._row_writer(
+                "MERGE ROWS" if stmt.whole_row else "MERGE",
+                tbl, loc, qual, "MERGE INTO",
+            )
             # the USING operand resolves through the normal read
             # path — glue refs, temp views, and subqueries all work
             source = self.sql(f"SELECT * FROM {stmt.source_text}")
             if stmt.schema_evolution:
-                # WITH SCHEMA EVOLUTION: new source columns widen
-                # the table schema FIRST via the formats' schema-only
-                # ALTER commit (Delta schemaString, fresh Iceberg
-                # field ids, Hudi extraMetadata re-record) — then the
-                # normal merge sees the widened target (pre-merge
-                # files surface nulls).  Two commits, documented
-                # deviation from the one-commit runtimes.
-                tbl = self._evolve_for_merge(tbl, stmt, source)
-                loc = tbl.location
-                if loc.startswith("file:"):
-                    loc = loc[len("file:"):]
-            if stmt.whole_row:
+                self._evolve_for_merge(tbl, loc, qual, source)
+            keys = list(stmt.on_keys)
+            if verb == "MERGE ROWS":
                 # the classic upsert pair (unconditional UPDATE SET *
-                # + INSERT *) — the whole-row writers' fast path, no
+                # + INSERT *): the whole-row writers' fast path, no
                 # full-row join
-                if ttype == ETableType.DELTA:
-                    from glue_table_cache_spark.sinks.delta_merge import (  # noqa: E501
-                        merge_into_delta,
-                    )
-
-                    version, n_upd, n_ins = merge_into_delta(
-                        self.spark, loc, source, list(stmt.on_keys)
-                    )
-                elif ttype == ETableType.ICEBERG:
-                    from glue_table_cache_spark.sinks.iceberg_delete import (  # noqa: E501
-                        merge_into_iceberg,
-                    )
-
-                    version, n_upd, n_ins = merge_into_iceberg(
-                        self.spark, loc, source, list(stmt.on_keys)
-                    )
-                elif self._hudi_is_mor(loc):
-                    version, n_upd, n_ins, n_del = (
-                        self._hudi_mor_merge(tbl, stmt, source)
-                    )
-                else:
-                    from glue_table_cache_spark.sinks.hudi_log_write import (  # noqa: E501
-                        merge_general_hudi,
-                        merge_into_hudi,
-                    )
-                    from glue_table_cache_spark.sources.hudi import (
-                        hudi_scan_info,
-                    )
-
-                    if any(
-                        pv for _p, pv in hudi_scan_info(loc)
-                    ):
-                        # partitioned COW: the clause planner routes
-                        # inserts into per-partition file groups —
-                        # the whole-row pair is just its simplest
-                        # clause shape
-                        version, n_upd, n_ins, n_del = (
-                            merge_general_hudi(
-                                self.spark, loc, source,
-                                list(stmt.on_keys), stmt.parsed,
-                            )
-                        )
-                    else:
-                        version, n_upd, n_ins = merge_into_hudi(
-                            self.spark, loc, source,
-                            list(stmt.on_keys),
-                        )
-            elif ttype == ETableType.DELTA:
-                from glue_table_cache_spark.sinks.delta_merge import (
-                    merge_general_delta,
-                )
-
-                version, n_upd, n_ins, n_del = merge_general_delta(
-                    self.spark, loc, source, list(stmt.on_keys),
-                    stmt.parsed,
-                )
-            elif ttype == ETableType.ICEBERG:
-                from glue_table_cache_spark.sinks.iceberg_delete import (  # noqa: E501
-                    merge_general_iceberg,
-                )
-
-                version, n_upd, n_ins, n_del = merge_general_iceberg(
-                    self.spark, loc, source, list(stmt.on_keys),
-                    stmt.parsed,
-                )
-            elif self._hudi_is_mor(loc):
-                version, n_upd, n_ins, n_del = self._hudi_mor_merge(
-                    tbl, stmt, source
+                version, n_upd, n_ins = merge(
+                    self.spark, loc, source, keys
                 )
             else:
-                from glue_table_cache_spark.sinks.hudi_log_write import (  # noqa: E501
-                    merge_general_hudi,
+                version, n_upd, n_ins, n_del = merge(
+                    self.spark, loc, source, keys, stmt.parsed
                 )
-
-                version, n_upd, n_ins, n_del = merge_general_hudi(
-                    self.spark, loc, source, list(stmt.on_keys),
-                    stmt.parsed,
-                )
-        else:  # pragma: no cover - parse_dml returns only the three
+        else:
             raise GlueSparkError(f"unknown DML statement {stmt!r}")
-        if version is not None:
-            # the commit is externally visible NOW — drop the cached
-            # format walk so the next scan replays the new version
+        # the commit is externally visible NOW — drop the cached format
+        # walk so the next scan replays the new version (Hudi property
+        # changes rewrite hoodie.properties with no instant)
+        if version is not None or isinstance(
+            stmt, TablePropertiesStatement
+        ):
             self.invalidate_table(ref.database, ref.table)
+        return self._dml_metrics(op, version, n_upd, n_ins, n_del)
+
+    def _dml_metrics(
+        self, op: str, version=None, updated=0, inserted=0, deleted=0
+    ) -> DataFrame:
+        """The one-row result of a write statement."""
         return local_frame(
             self.spark,
-            [(op, None if version is None else str(version),
-              n_upd, n_ins, n_del)],
+            [(
+                op,
+                None if version is None else str(version),
+                updated, inserted, deleted,
+            )],
             "operation string, version string, rows_updated long, "
             "rows_inserted long, rows_deleted long",
+        )
+
+    def _table_location(self, tbl: CatalogTable) -> str:
+        """The table's location as the format readers and writers take
+        it (no ``file:`` scheme); a table without one refuses."""
+        if not tbl.location:
+            raise NoStorageLocationError(tbl.database, tbl.name)
+        return _local_path(tbl.location)
+
+    def _row_writer(
+        self, verb: str, tbl: CatalogTable, loc: str, qual: str, op=None
+    ) -> tuple[str, Callable]:
+        """``(verb, writer)`` for a row-level verb (DELETE, UPDATE,
+        MERGE, MERGE ROWS); the writer takes the sink's signature.
+
+        Hudi picks its writer here, once per statement.  A
+        MERGE_ON_READ table publishes log blocks through the engine's
+        MOR writers, which read the merged snapshot view (the catalog
+        table is bound in).  A whole-row MERGE on a MOR or a
+        partitioned copy-on-write table runs the general clause
+        planner, which routes inserts into per-partition file groups —
+        the whole-row pair is just its simplest clause shape."""
+        if tbl.table_type == ETableType.HUDI:
+            from glue_table_cache_spark.sources.hudi import hudi_scan_info
+
+            mor = self._hudi_is_mor(loc)
+            if verb == "MERGE ROWS" and (
+                mor or any(pv for _p, pv in hudi_scan_info(loc))
+            ):
+                verb = "MERGE"
+            if mor:
+                return verb, functools.partial(
+                    getattr(self, _HUDI_MOR_WRITERS[verb]), tbl
+                )
+        return verb, for_format(verb, tbl.table_type, qual, op)
+
+    def _alter_constraint(self, stmt, tbl, loc: str, qual: str, op: str):
+        """``ADD`` / ``DROP CONSTRAINT``: a CHECK expression stored as
+        ``delta.constraints.<name>`` in the Delta configuration, which
+        every Delta writer enforces."""
+        set_props = for_format("CONSTRAINT", tbl.table_type, qual, op)
+        key = f"delta.constraints.{stmt.name}"
+        cfg = for_format("SHOW TBLPROPERTIES", tbl.table_type, qual)(
+            loc, fs=self._fs
+        )
+        if stmt.action == "drop":
+            if key not in cfg:
+                have = sorted(
+                    k.rsplit(".", 1)[1]
+                    for k in cfg
+                    if k.startswith("delta.constraints.")
+                )
+                raise GlueSparkError(
+                    f"DROP CONSTRAINT {qual}: no constraint named "
+                    f"{stmt.name!r} (have {have})"
+                )
+            return set_props(loc, {}, unset=(key,))
+        if key in cfg:
+            raise GlueSparkError(
+                f"ADD CONSTRAINT {qual}: constraint {stmt.name!r} "
+                f"already exists ({cfg[key]}); DROP it first"
+            )
+        # EXISTING rows must already satisfy the new CHECK — otherwise
+        # the table is born violating its own gate
+        bad = (
+            self.table_dataframe(stmt.ref.database, stmt.ref.table)
+            .where(~F.coalesce(F.expr(stmt.expr), F.lit(True)))
+            .limit(1)
+            .count()
+        )
+        if bad:
+            raise GlueSparkError(
+                f"ADD CONSTRAINT {qual}: existing rows violate CHECK "
+                f"({stmt.expr}) — clean the data first"
+            )
+        return set_props(loc, {key: stmt.expr})
+
+    def _insert_source(self, stmt, op: str, qual: str) -> DataFrame:
+        """INSERT's source bound to the target table's columns.  The
+        source resolves through the normal read path (glue refs, temp
+        views, VALUES, subqueries all work) and binds POSITIONALLY, to
+        an explicit column list, or BY NAME, then casts implicitly to
+        the target column types — a bare VALUES tuple's col1/col2
+        names are meaningless.  The writers' own schema authority
+        gates the rest."""
+        source = self.sql(f"SELECT * FROM ({stmt.source_text})")
+        target_fields = self.table_dataframe(
+            stmt.ref.database, stmt.ref.table
+        ).schema.fields
+        if stmt.by_name:
+            # BY NAME: the source's own column names bind — order-free;
+            # unknown names refuse, missing target columns NULL-fill
+            # (the Delta-dialect posture)
+            known = {f.name for f in target_fields}
+            unknown = [c for c in source.columns if c not in known]
+            if unknown:
+                raise GlueSparkError(
+                    f"{op} {qual} BY NAME: source column(s) {unknown} "
+                    f"are not in the table schema {sorted(known)}"
+                )
+            have = set(source.columns)
+            source = source.select(
+                *[
+                    F.col(f.name)
+                    if f.name in have
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in target_fields
+                ]
+            )
+        elif stmt.columns:
+            if len(stmt.columns) != len(source.columns):
+                raise GlueSparkError(
+                    f"{op} {qual}: column list has {len(stmt.columns)} "
+                    f"name(s) but the source produces "
+                    f"{len(source.columns)} column(s)"
+                )
+            source = source.toDF(*stmt.columns)
+        elif len(source.columns) == len(target_fields):
+            source = source.toDF(*[f.name for f in target_fields])
+        else:
+            raise GlueSparkError(
+                f"{op} {qual}: the source produces "
+                f"{len(source.columns)} column(s) but the table has "
+                f"{len(target_fields)} — INSERT binds positionally; "
+                "pass an explicit column list"
+            )
+        target = {f.name: f.dataType for f in target_fields}
+        return source.select(
+            *[
+                F.col(c).cast(target[c]).alias(c)
+                if c in target
+                else F.col(c)
+                for c in source.columns
+            ]
         )
 
     @staticmethod
@@ -1110,8 +740,26 @@ class GlueSparkEngine:
             "hoodie.table.recordkey.fields", DEFAULT_RECORD_KEY
         )
 
+    def _hudi_mor_view(self, tbl: CatalogTable, verb: str):
+        """``(record_key, merged snapshot view)`` of a MERGE_ON_READ
+        table — what its row-level verbs match against."""
+        key = self._hudi_record_key(tbl)
+        df = self._dataframe_for(tbl, None)
+        if key not in df.columns:
+            raise GlueSparkError(
+                f"{verb} on MOR glue.{tbl.database}.{tbl.name}: "
+                f"record key column {key!r} is not in the scan "
+                "schema; register hoodie.table.recordkey.fields"
+            )
+        return key, df
+
     def _hudi_mor_delete(
-        self, tbl: CatalogTable, stmt, max_delete_keys: int = 1_000_000
+        self,
+        tbl: CatalogTable,
+        spark,
+        loc: str,
+        predicate,
+        max_delete_keys: int = 1_000_000,
     ) -> tuple[str | None, int]:
         """SQL DELETE on a MERGE_ON_READ table: matched record keys
         (from the MERGED snapshot view, so log-upserted rows match
@@ -1123,20 +771,8 @@ class GlueSparkEngine:
             write_hudi_log,
         )
 
-        key = self._hudi_record_key(tbl)
-        loc = tbl.location
-        if loc.startswith("file:"):
-            loc = loc[len("file:"):]
-        df = self._dataframe_for(tbl, None)
-        if key not in df.columns:
-            raise GlueSparkError(
-                f"DELETE on MOR glue.{tbl.database}.{tbl.name}: "
-                f"record key column {key!r} is not in the scan "
-                "schema; register hoodie.table.recordkey.fields"
-            )
-        matched = (
-            df.where(F.expr(stmt.predicate)).select(key).distinct()
-        )
+        key, df = self._hudi_mor_view(tbl, "DELETE")
+        matched = df.where(F.expr(predicate)).select(key).distinct()
         keys = [
             r[0] for r in matched.limit(max_delete_keys + 1).collect()
         ]
@@ -1149,23 +785,20 @@ class GlueSparkEngine:
             )
         if not keys:
             return None, 0
-        instant = write_hudi_log(
-            self.spark, loc, key, delete_keys=keys
-        )
+        instant = write_hudi_log(spark, loc, key, delete_keys=keys)
         return instant, len(keys)
 
     def _evolve_for_merge(
-        self, tbl: CatalogTable, stmt, source: DataFrame
-    ) -> CatalogTable:
+        self, tbl: CatalogTable, loc: str, qual: str, source: DataFrame
+    ) -> None:
         """``MERGE WITH SCHEMA EVOLUTION``'s widening pre-step: any
         source column absent from the target schema commits via the
         format's schema-only ALTER (nullable — pre-merge rows read
         null), then the table caches invalidate so the merge writers
         and the MOR merged view see the widened schema.  No new
-        columns → no commit."""
+        columns → no commit.  Two commits: a documented deviation
+        from the one-commit runtimes."""
         from pyspark.sql.types import StructField, StructType
-
-        from glue_table_cache_spark.catalog import ETableType
 
         t_cols = set(self._dataframe_for(tbl, None).columns)
         new_fields = [
@@ -1173,35 +806,14 @@ class GlueSparkEngine:
             for f in source.schema.fields
             if f.name not in t_cols
         ]
-        if not new_fields:
-            return tbl
-        loc = tbl.location
-        if loc.startswith("file:"):
-            loc = loc[len("file:"):]
-        cols = StructType(new_fields)
-        if tbl.table_type == ETableType.DELTA:
-            from glue_table_cache_spark.sinks.delta_write import (
-                alter_delta_add_columns,
+        if new_fields:
+            for_format("ADD COLUMNS", tbl.table_type, qual)(
+                loc, StructType(new_fields)
             )
-
-            alter_delta_add_columns(loc, cols)
-        elif tbl.table_type == ETableType.ICEBERG:
-            from glue_table_cache_spark.sinks.iceberg_write import (
-                alter_iceberg_add_columns,
-            )
-
-            alter_iceberg_add_columns(loc, cols)
-        else:
-            from glue_table_cache_spark.sinks.hudi_write import (
-                alter_hudi_add_columns,
-            )
-
-            alter_hudi_add_columns(loc, cols)
-        self.invalidate_table(tbl.database, tbl.name)
-        return tbl
+            self.invalidate_table(tbl.database, tbl.name)
 
     def _hudi_mor_update(
-        self, tbl: CatalogTable, stmt
+        self, tbl: CatalogTable, spark, loc: str, predicate, set_exprs
     ) -> tuple[str | None, int]:
         """SQL UPDATE on a MERGE_ON_READ table: matched rows from the
         merged view, transformed through the SET expressions
@@ -1211,30 +823,20 @@ class GlueSparkEngine:
             write_hudi_log,
         )
 
-        key = self._hudi_record_key(tbl)
-        loc = tbl.location
-        if loc.startswith("file:"):
-            loc = loc[len("file:"):]
-        df = self._dataframe_for(tbl, None)
-        if key not in df.columns:
-            raise GlueSparkError(
-                f"UPDATE on MOR glue.{tbl.database}.{tbl.name}: "
-                f"record key column {key!r} is not in the scan "
-                "schema; register hoodie.table.recordkey.fields"
-            )
-        unknown = [c for c in stmt.set_exprs if c not in df.columns]
+        key, df = self._hudi_mor_view(tbl, "UPDATE")
+        unknown = [c for c in set_exprs if c not in df.columns]
         if unknown:
             raise GlueSparkError(
                 f"UPDATE sets unknown column(s) {unknown}; table "
                 f"columns are {df.columns}"
             )
-        matched = df.where(F.expr(stmt.predicate))
+        matched = df.where(F.expr(predicate))
         transformed = matched.select(
             *[
-                F.expr(stmt.set_exprs[c])
+                F.expr(set_exprs[c])
                 .cast(df.schema[c].dataType)
                 .alias(c)
-                if c in stmt.set_exprs
+                if c in set_exprs
                 else F.col(c)
                 for c in df.columns
             ]
@@ -1242,16 +844,17 @@ class GlueSparkEngine:
         n = transformed.count()
         if not n:
             return None, 0
-        instant = write_hudi_log(
-            self.spark, loc, key, upserts=transformed
-        )
+        instant = write_hudi_log(spark, loc, key, upserts=transformed)
         return instant, int(n)
 
     def _hudi_mor_merge(
         self,
         tbl: CatalogTable,
-        stmt,
+        spark,
+        loc: str,
         source,
+        keys: list[str],
+        clauses,
         max_delete_keys: int = 1_000_000,
     ) -> tuple[str | None, int, int, int]:
         """MERGE (the whole-row upsert pair AND the general clause
@@ -1281,19 +884,7 @@ class GlueSparkEngine:
             validate_clauses,
         )
 
-        clauses = stmt.parsed
-        keys = list(stmt.on_keys)
-        key = self._hudi_record_key(tbl)
-        loc = tbl.location
-        if loc.startswith("file:"):
-            loc = loc[len("file:"):]
-        df = self._dataframe_for(tbl, None)
-        if key not in df.columns:
-            raise GlueSparkError(
-                f"MERGE on MOR glue.{tbl.database}.{tbl.name}: "
-                f"record key column {key!r} is not in the scan "
-                "schema; register hoodie.table.recordkey.fields"
-            )
+        key, df = self._hudi_mor_view(tbl, "MERGE")
         missing = [k for k in keys if k not in source.columns]
         if missing:
             raise GlueSparkError(
@@ -1397,7 +988,7 @@ class GlueSparkEngine:
         if ups is None and not del_keys:
             return None, 0, 0, 0
         instant = write_hudi_log(
-            self.spark,
+            spark,
             loc,
             key,
             upserts=ups,
@@ -1567,120 +1158,29 @@ class GlueSparkEngine:
         active file count + byte size, table properties.  The active
         set comes from the same format walk every scan uses (DV'd /
         position-deleted files still count — they are live storage);
-        sizes are summed from the local filesystem and surface NULL
-        for remote locations rather than guessing."""
+        raw listings describe their cached listing.  Sizes are summed
+        from the local filesystem and surface NULL for remote
+        locations rather than guessing."""
         import os as _os
 
-        if not tbl.location:
-            raise NoStorageLocationError(tbl.database, tbl.name)
-        loc = tbl.location
-        if loc.startswith("file:"):
-            loc = loc[len("file:"):]
-        ttype = tbl.table_type
-        table_id = None
-        created = None
-        pcols: list[str] = [k.name for k in tbl.partition_keys]
-        props: dict[str, str] = {}
-        if ttype == ETableType.DELTA:
-            from glue_table_cache_spark.sources.delta import _replay
-
-            active, state = _replay(loc, fs=self._fs)
-            meta = state.get("metaData") or {}
-            table_id = meta.get("id")
-            created = meta.get("createdTime")
-            pcols = list(meta.get("partitionColumns") or []) or pcols
-            props = {
-                str(k): str(v)
-                for k, v in (meta.get("configuration") or {}).items()
-            }
-            paths = [
-                p if p.startswith("/")
-                else _os.path.join(loc, p)
-                for p in active
-            ]
-            fmt = "delta"
-        elif ttype == ETableType.ICEBERG:
-            from glue_table_cache_spark.sources.iceberg import (
-                _list_metadata_jsons,
-                _read_json,
-                iceberg_data_files,
-            )
-
-            jsons = _list_metadata_jsons(loc, fs=self._fs)
-            if not jsons:
-                raise GlueSparkError(
-                    f"No Iceberg metadata JSON found under {loc!r}"
-                )
-            meta = max(
-                (_read_json(p, None) for p in jsons),
-                key=lambda m: m.get("last-sequence-number", 0),
-            )
-            table_id = meta.get("table-uuid")
-            created = meta.get("last-updated-ms")
-            specs = meta.get("partition-specs") or []
-            if specs:
-                pcols = [
-                    f["name"] for f in (specs[0].get("fields") or [])
-                ] or pcols
-            props = {
-                str(k): str(v)
-                for k, v in (meta.get("properties") or {}).items()
-            }
-            # delete files (position AND equality) are live storage
-            # too — walk the full scan state instead of the data-only
-            # helper, which refuses when deletes exist
-            from glue_table_cache_spark.sources.iceberg import (
-                iceberg_scan_details,
-            )
-
-            entries, pos_dels, eq_dels = iceberg_scan_details(
-                loc, fs=self._fs
-            )
-            paths = (
-                [p for p, _pv, _s in entries]
-                + list(pos_dels)
-                + [
-                    d["path"]
-                    for d in eq_dels
-                    if isinstance(d, dict) and d.get("path")
-                ]
-            )
-            fmt = "iceberg"
-        elif ttype == ETableType.HUDI:
-            from pathlib import Path as _P
-
-            from glue_table_cache_spark.sinks.hudi_write import (
-                _recorded_partition_fields,
-            )
-            from glue_table_cache_spark.sources.hudi import (
-                hudi_scan_info,
-            )
-
-            rec = _recorded_partition_fields(
-                loc, _P(loc) / ".hoodie" / "hoodie.properties"
-            )
-            if rec:
-                pcols = rec
-            pf = _P(loc) / ".hoodie" / "hoodie.properties"
-            if pf.exists():
-                for line in pf.read_text().splitlines():
-                    k, eq, v = line.partition("=")
-                    if eq:
-                        props[k.strip()] = v.strip()
-            paths = [
-                p
-                for p, _pv in hudi_scan_info(
-                    loc, fs=self._fs, base_files_only=True
-                )
-            ]
-            fmt = "hudi"
-        else:
-            paths = [
-                f.path for f in self.list_table_files_cached(tbl)
-            ]
+        loc = self._table_location(tbl)
+        detail = for_format(
+            "DESCRIBE DETAIL",
+            tbl.table_type,
+            f"glue.{ref.database}.{ref.table}",
+        )
+        if detail is None:
             fmt = tbl.data_format
+            d = Detail(
+                None, None, [], [
+                    f.path for f in self.list_table_files_cached(tbl)
+                ], {},
+            )
+        else:
+            fmt = tbl.table_type.name.lower()
+            d = detail(loc, fs=self._fs)
         size: int | None = 0
-        for p in paths:
+        for p in d.files:
             try:
                 size += _os.stat(p).st_size
             except OSError:
@@ -1688,13 +1188,13 @@ class GlueSparkEngine:
                 break
         rows = [(
             fmt,
-            table_id,
+            d.table_id,
             tbl.location,
-            int(created) if created is not None else None,
-            pcols,
-            len(paths),
+            int(d.created_ms) if d.created_ms is not None else None,
+            d.partition_columns or [k.name for k in tbl.partition_keys],
+            len(d.files),
             size,
-            props,
+            d.properties,
         )]
         return local_frame(
             self.spark,
@@ -1714,115 +1214,30 @@ class GlueSparkEngine:
         configuration / table ``properties`` / ``hoodie.properties``
         for tblproperties.  Raw-parquet tables have neither and
         refuse with the registration hint."""
-        if not tbl.location:
-            raise NoStorageLocationError(tbl.database, tbl.name)
-        loc = tbl.location
-        if loc.startswith("file:"):
-            loc = loc[len("file:"):]
-        ttype = tbl.table_type
+        loc = self._table_location(tbl)
         qual = f"glue.{ref.database}.{ref.table}"
-        verb_name = (
-            "DESCRIBE HISTORY"
-            if verb == "history"
-            else "SHOW TBLPROPERTIES"
-        )
-        hint = (
-            f"{verb_name} {qual}: {qual} is registered as "
-            f"{ttype.name} — raw parquet has no transaction "
-            "metadata; register the location as a "
-            "DELTA/ICEBERG/HUDI table"
-        )
         if verb == "history":
-            if ttype == ETableType.DELTA:
-                from glue_table_cache_spark.sources.delta import (
-                    delta_history,
-                )
-
-                return delta_history(self.spark, loc)
-            if ttype == ETableType.ICEBERG:
-                from glue_table_cache_spark.sources.iceberg import (
-                    iceberg_history,
-                )
-
-                return iceberg_history(self.spark, loc)
-            if ttype == ETableType.HUDI:
-                from glue_table_cache_spark.sources.hudi import (
-                    hudi_history,
-                )
-
-                return hudi_history(self.spark, loc)
-            raise GlueSparkError(hint)
-        if ttype == ETableType.DELTA:
-            from glue_table_cache_spark.sources.delta import _replay
-
-            _active, state = _replay(loc)
-            conf = (state.get("metaData") or {}).get(
-                "configuration"
-            ) or {}
-            if isinstance(conf, list):  # pyarrow map → pairs
-                conf = dict(conf)
-            props = {str(k): str(v) for k, v in conf.items()}
-        elif ttype == ETableType.ICEBERG:
-            from glue_table_cache_spark.sources.iceberg import (
-                _list_metadata_jsons,
-                _read_json,
+            return for_format("DESCRIBE HISTORY", tbl.table_type, qual)(
+                self.spark, loc, fs=self._fs
             )
-
-            jsons = _list_metadata_jsons(loc)
-            if not jsons:
-                raise GlueSparkError(
-                    f"No Iceberg metadata JSON found under {loc!r}"
-                )
-            meta = max(
-                (_read_json(p, None) for p in jsons),
-                key=lambda m: m.get("last-sequence-number", 0),
-            )
-            props = {
-                str(k): str(v)
-                for k, v in (meta.get("properties") or {}).items()
-            }
-        elif ttype == ETableType.HUDI:
-            from glue_table_cache_spark.sources.hudi import (
-                _read_bytes,
-                _timeline_files,
-            )
-
-            names = [
-                p
-                for p in _timeline_files(loc)
-                if p.endswith("hoodie.properties")
-            ]
-            props = {}
-            if names:
-                for line in _read_bytes(names[0], None).decode(
-                ).splitlines():
-                    line = line.strip()
-                    if not line or line.startswith(("#", "!")):
-                        continue
-                    k, eq, v = line.partition("=")
-                    if eq:
-                        props[k.strip()] = v.strip()
-        else:
-            raise GlueSparkError(hint)
+        props = for_format("SHOW TBLPROPERTIES", tbl.table_type, qual)(
+            loc, fs=self._fs
+        )
         return local_frame(
             self.spark,
             sorted(props.items()), "key string, value string"
         )
 
-    def _execute_clone(self, stmt) -> DataFrame:
-        """``CREATE TABLE ... SHALLOW CLONE glue.db.src`` — a
-        zero-copy Delta clone (the source's active files referenced
-        by absolute path in a fresh log), registered as a new
-        catalog entry carrying the source's partition keys.  The
-        source must be a registered DELTA table; the clone follows
-        the CTAS location rules (explicit LOCATION or
-        ``warehouse_dir``)."""
+    def _new_table_location(self, stmt, qual: str) -> str | None:
+        """CREATE TABLE's target: the store must be writable and the
+        table new (``None`` when it exists under IF NOT EXISTS); the
+        location is the ``LOCATION`` clause or
+        ``<warehouse_dir>/<db>/<table>``."""
         import os
 
         from glue_table_cache_spark.errors import TableNotFoundError
 
         ref = stmt.ref
-        qual = f"glue.{ref.database}.{ref.table}"
         if not callable(getattr(self.store, "register_table", None)):
             raise GlueSparkError(
                 f"CREATE TABLE {qual}: the metadata store is "
@@ -1830,38 +1245,14 @@ class GlueSparkEngine:
             )
         try:
             self.store.get_table(ref.database, ref.table)
-            exists = True
         except TableNotFoundError:
-            exists = False
-        if exists:
+            pass
+        else:
             if stmt.if_not_exists:
-                return local_frame(
-                    self.spark,
-                    [("CLONE", None, 0, 0, 0)],
-                    "operation string, version string, "
-                    "rows_updated long, rows_inserted long, "
-                    "rows_deleted long",
-                )
+                return None
             raise GlueSparkError(
                 f"CREATE TABLE {qual}: table already exists "
                 "(use IF NOT EXISTS)"
-            )
-        src_tbl = self.get_table_metadata_cached(
-            stmt.source.database, stmt.source.table
-        )
-        if not src_tbl.location:
-            raise NoStorageLocationError(
-                src_tbl.database, src_tbl.name
-            )
-        src_loc = src_tbl.location
-        if src_loc.startswith("file:"):
-            src_loc = src_loc[len("file:"):]
-        if src_tbl.table_type != ETableType.DELTA:
-            raise GlueSparkError(
-                f"SHALLOW CLONE glue.{stmt.source.database}."
-                f"{stmt.source.table}: shallow clone is a Delta "
-                "verb (the source is registered as "
-                f"{src_tbl.table_type.name})"
             )
         loc = stmt.location
         if loc is None:
@@ -1873,15 +1264,31 @@ class GlueSparkEngine:
             loc = os.path.join(
                 self.config.warehouse_dir, ref.database, ref.table
             )
-        if loc.startswith("file:"):
-            loc = loc[len("file:"):]
-        from glue_table_cache_spark.sinks.delta_write import (
-            shallow_clone_delta,
-        )
+        return _local_path(loc)
 
-        n_files = shallow_clone_delta(
-            src_loc, loc, version=stmt.version, deep=stmt.deep
+    def _execute_clone(self, stmt) -> DataFrame:
+        """``CREATE TABLE ... SHALLOW CLONE glue.db.src`` — a
+        zero-copy Delta clone (the source's active files referenced
+        by absolute path in a fresh log), registered as a new
+        catalog entry carrying the source's partition keys.  The
+        source must be a registered DELTA table; the clone follows
+        the CTAS location rules (explicit LOCATION or
+        ``warehouse_dir``)."""
+        ref = stmt.ref
+        loc = self._new_table_location(
+            stmt, f"glue.{ref.database}.{ref.table}"
         )
+        if loc is None:
+            return self._dml_metrics("CLONE")
+        src_tbl = self.get_table_metadata_cached(
+            stmt.source.database, stmt.source.table
+        )
+        src_loc = self._table_location(src_tbl)
+        for_format(
+            "SHALLOW CLONE",
+            src_tbl.table_type,
+            f"glue.{stmt.source.database}.{stmt.source.table}",
+        )(src_loc, loc, version=stmt.version, deep=stmt.deep)
         self.store.register_table(
             CatalogTable(
                 ref.database,
@@ -1891,12 +1298,7 @@ class GlueSparkEngine:
                 parameters={"spark.sql.sources.provider": "delta"},
             )
         )
-        return local_frame(
-            self.spark,
-            [("CLONE", "0", 0, 0, 0)],
-            "operation string, version string, rows_updated long, "
-            "rows_inserted long, rows_deleted long",
-        )
+        return self._dml_metrics("CLONE", 0)
 
     def _execute_convert(self, stmt, tbl, loc, qual) -> DataFrame:
         """``CONVERT TO DELTA glue.db.t`` — metadata-only in-place
@@ -1907,14 +1309,7 @@ class GlueSparkEngine:
         from the statement's ``PARTITIONED BY (col type, ...)`` or,
         omitted, the catalog's registered keys (Glue partition keys
         carry a type; untyped default is string)."""
-        if tbl.table_type not in (
-            ETableType.HIVE, ETableType.UNPARTITIONED,
-        ):
-            raise GlueSparkError(
-                f"CONVERT TO DELTA {qual}: the table is registered "
-                f"as {tbl.table_type.name} — only plain parquet "
-                "(HIVE/UNPARTITIONED) tables convert"
-            )
+        convert = for_format("CONVERT TO DELTA", tbl.table_type, qual)
         if tbl.data_format != "parquet":
             raise GlueSparkError(
                 f"CONVERT TO DELTA {qual}: classification is "
@@ -1928,11 +1323,7 @@ class GlueSparkEngine:
         keys = list(stmt.partition_keys) or [
             (k.name, k.type or "string") for k in tbl.partition_keys
         ]
-        from glue_table_cache_spark.sinks.delta_write import (
-            convert_to_delta,
-        )
-
-        convert_to_delta(self.spark, loc, keys)
+        convert(self.spark, loc, keys)
         params = dict(tbl.parameters)
         params["spark.sql.sources.provider"] = "delta"
         self.store.register_table(
@@ -1945,12 +1336,7 @@ class GlueSparkEngine:
             )
         )
         self.invalidate_table(stmt.ref.database, stmt.ref.table)
-        return local_frame(
-            self.spark,
-            [("CONVERT", "0", 0, 0, 0)],
-            "operation string, version string, rows_updated long, "
-            "rows_inserted long, rows_deleted long",
-        )
+        return self._dml_metrics("CONVERT", 0)
 
     def _execute_create(self, stmt) -> DataFrame:
         """CTAS: evaluate the source through the normal read path,
@@ -1959,48 +1345,13 @@ class GlueSparkEngine:
         (``register_table``) — read-only stores refuse.  Location is
         the explicit ``LOCATION`` clause or
         ``<warehouse_dir>/<db>/<table>``."""
-        import os
-
         from glue_table_cache_spark.catalog import PartitionKey
-        from glue_table_cache_spark.errors import TableNotFoundError
 
         ref = stmt.ref
         qual = f"glue.{ref.database}.{ref.table}"
-        if not callable(getattr(self.store, "register_table", None)):
-            raise GlueSparkError(
-                f"CREATE TABLE {qual}: the metadata store is "
-                "read-only (no register_table)"
-            )
-        try:
-            self.store.get_table(ref.database, ref.table)
-            exists = True
-        except TableNotFoundError:
-            exists = False
-        if exists:
-            if stmt.if_not_exists:
-                return local_frame(
-                    self.spark,
-                    [("CREATE TABLE", None, 0, 0, 0)],
-                    "operation string, version string, "
-                    "rows_updated long, rows_inserted long, "
-                    "rows_deleted long",
-                )
-            raise GlueSparkError(
-                f"CREATE TABLE {qual}: table already exists "
-                "(use IF NOT EXISTS)"
-            )
-        loc = stmt.location
+        loc = self._new_table_location(stmt, qual)
         if loc is None:
-            if not self.config.warehouse_dir:
-                raise GlueSparkError(
-                    f"CREATE TABLE {qual}: no LOCATION clause and no "
-                    "warehouse_dir configured"
-                )
-            loc = os.path.join(
-                self.config.warehouse_dir, ref.database, ref.table
-            )
-        if loc.startswith("file:"):
-            loc = loc[len("file:"):]
+            return self._dml_metrics("CREATE TABLE")
         source = self.sql(f"SELECT * FROM ({stmt.source_text})")
         missing = [
             c for c in stmt.partition_by if c not in source.columns
@@ -2014,32 +1365,8 @@ class GlueSparkEngine:
         part = list(stmt.partition_by) or None
         n_ins = source.count()
         version: object = None
-        params: dict[str, str] = {}
         keys: list[PartitionKey] = []
-        if stmt.using == "DELTA":
-            from glue_table_cache_spark.sinks.delta_write import (
-                write_delta_append,
-            )
-
-            version = write_delta_append(source, loc, partition_by=part)
-            params = {"spark.sql.sources.provider": "delta"}
-        elif stmt.using == "ICEBERG":
-            from glue_table_cache_spark.sinks.iceberg_write import (
-                write_iceberg_append,
-            )
-
-            version = write_iceberg_append(
-                source, loc, partition_by=part
-            )
-            params = {"table_type": "ICEBERG"}
-        elif stmt.using == "HUDI":
-            from glue_table_cache_spark.sinks.hudi_write import (
-                write_hudi_append,
-            )
-
-            version = write_hudi_append(source, loc, partition_by=part)
-            params = {"hoodie.table.name": ref.table}
-        else:  # PARQUET: plain hive-style directory
+        if stmt.using == "PARQUET":  # plain hive-style directory
             writer = source.write.mode("errorifexists")
             if part:
                 writer = writer.partitionBy(*part)
@@ -2048,6 +1375,16 @@ class GlueSparkEngine:
             # prunes them (values are directory strings — the typed
             # extractors coerce at predicate time)
             keys = [PartitionKey(c) for c in stmt.partition_by]
+        else:
+            version = for_format(
+                "INSERT", ETableType[stmt.using], qual
+            )(source, loc, partition_by=part)
+        # the catalog parameters that classify each format
+        params = {
+            "DELTA": {"spark.sql.sources.provider": "delta"},
+            "ICEBERG": {"table_type": "ICEBERG"},
+            "HUDI": {"hoodie.table.name": ref.table},
+        }.get(stmt.using, {})
         self.store.register_table(
             CatalogTable(
                 database=ref.database,
@@ -2058,20 +1395,7 @@ class GlueSparkEngine:
             )
         )
         self.invalidate_table(ref.database, ref.table)
-        return local_frame(
-            self.spark,
-            [
-                (
-                    "CREATE TABLE",
-                    None if version is None else str(version),
-                    0,
-                    int(n_ins),
-                    0,
-                )
-            ],
-            "operation string, version string, rows_updated long, "
-            "rows_inserted long, rows_deleted long",
-        )
+        return self._dml_metrics("CREATE TABLE", version, 0, n_ins)
 
     def _execute_drop(self, stmt) -> DataFrame:
         """DROP TABLE: unregister the catalog entry and drop cached
@@ -2091,197 +1415,98 @@ class GlueSparkEngine:
             self.store.get_table(ref.database, ref.table)
         except TableNotFoundError:
             if stmt.if_exists:
-                return local_frame(
-                    self.spark,
-                    [("DROP TABLE", None, 0, 0, 0)],
-                    "operation string, version string, "
-                    "rows_updated long, rows_inserted long, "
-                    "rows_deleted long",
-                )
+                return self._dml_metrics("DROP TABLE")
             raise
         self.store.unregister_table(ref.database, ref.table)
         self.invalidate_table(ref.database, ref.table)
-        return local_frame(
-            self.spark,
-            [("DROP TABLE", None, 0, 0, 0)],
-            "operation string, version string, rows_updated long, "
-            "rows_inserted long, rows_deleted long",
-        )
+        return self._dml_metrics("DROP TABLE")
 
     def _execute_maintenance(
         self, stmt, tbl, loc: str, qual: str
     ) -> DataFrame:
-        """``OPTIMIZE`` / ``VACUUM`` on a glue reference: compaction
-        (optionally Z-ordered) and retention-gated unreferenced-file
-        cleanup, dispatched per format.  VACUUM maps to each format's
-        data-file cleanup half (Delta ``vacuum_delta``, Iceberg
-        ``remove_iceberg_orphans``, Hudi ``clean_hudi``) — snapshot/log
-        retention stays with the narrower Python APIs."""
+        """``OPTIMIZE`` / ``VACUUM`` / ``REORG`` / ``FSCK`` on a glue
+        reference: compaction (optionally Z-ordered, optionally
+        partition-scoped on Delta), retention-gated
+        unreferenced-file cleanup, deletion-vector purge and
+        missing-file repair, dispatched per format.  VACUUM maps to
+        each format's data-file cleanup half (Delta
+        ``vacuum_delta``, Iceberg ``remove_iceberg_orphans``, Hudi
+        ``clean_hudi``) — snapshot/log retention stays with the
+        narrower Python APIs.  ``DRY RUN`` returns the path rows
+        instead of deleting."""
         ttype = tbl.table_type
-        zorder = list(stmt.zorder_by) or None
+        op = stmt.verb.upper()
+        version, removed = None, 0
         if stmt.verb == "reorg":
             # REORG TABLE ... APPLY (PURGE): rewrite ONLY the files
             # carrying deletion vectors — minimal write amplification
             # when the goal is shedding DVs, not layout
-            if ttype != ETableType.DELTA:
-                raise GlueSparkError(
-                    f"REORG TABLE {qual} APPLY (PURGE): deletion "
-                    "vectors are a Delta feature (the table is "
-                    f"registered as {ttype.name})"
-                )
-            from glue_table_cache_spark.sinks.delta_optimize import (
-                optimize_delta,
+            version = for_format("REORG", ttype, qual)(
+                self.spark, loc, purge_only=True
             )
-
-            version = optimize_delta(self.spark, loc, purge_only=True)
-            if version is not None:
-                self.invalidate_table(tbl.database, tbl.name)
-            return local_frame(
-                self.spark,
-                [("REORG",
-                  None if version is None else str(version), 0)],
-                "operation string, version string, files_removed long",
-            )
-        if stmt.verb == "fsck":
+        elif stmt.verb == "fsck":
             # FSCK REPAIR TABLE: drop log entries whose backing file
             # vanished out-of-band — until then every scan dies on
             # the missing file
-            if ttype != ETableType.DELTA:
-                raise GlueSparkError(
-                    f"FSCK REPAIR TABLE {qual}: implemented for "
-                    f"Delta (the table is registered as "
-                    f"{ttype.name}); Iceberg/Hudi repair by "
-                    "rewriting metadata with their own runtimes"
-                )
-            from glue_table_cache_spark.sinks.delta_optimize import (
-                fsck_delta,
+            version, paths = for_format("FSCK", ttype, qual)(
+                loc, dry_run=stmt.dry_run
             )
-
-            version, gone = fsck_delta(loc, dry_run=stmt.dry_run)
-            if stmt.dry_run:
-                return local_frame(
-                    self.spark,
-                    [(str(p),) for p in gone], "path string"
-                )
-            if version is not None:
-                self.invalidate_table(tbl.database, tbl.name)
-            return local_frame(
-                self.spark,
-                [("FSCK",
-                  None if version is None else str(version),
-                  len(gone))],
-                "operation string, version string, "
-                "files_removed long",
-            )
-        if stmt.verb == "optimize":
-            if stmt.predicate and ttype != ETableType.DELTA:
-                raise GlueSparkError(
-                    f"OPTIMIZE {qual} WHERE: partition-scoped "
-                    "compaction is implemented for Delta only (the "
-                    f"table is registered as {ttype.name}); run the "
-                    "unscoped OPTIMIZE"
-                )
-            if ttype == ETableType.DELTA:
-                from glue_table_cache_spark.sinks.delta_optimize import (
-                    optimize_delta,
-                )
-
-                version = optimize_delta(
-                    self.spark, loc, zorder_by=zorder,
-                    partition_predicate=stmt.predicate,
-                )
-            elif ttype == ETableType.ICEBERG:
-                from glue_table_cache_spark.sinks.iceberg_optimize import (  # noqa: E501
-                    optimize_iceberg,
-                )
-
-                version = optimize_iceberg(
-                    self.spark, loc, zorder_by=zorder
-                )
-            elif ttype == ETableType.HUDI:
-                from glue_table_cache_spark.sinks.hudi_optimize import (
-                    optimize_hudi,
-                )
-
-                version = optimize_hudi(
-                    self.spark, loc, zorder_by=zorder
-                )
-            else:
-                raise GlueSparkError(
-                    f"OPTIMIZE {qual}: the table is registered as "
-                    f"{ttype.name} — compaction of raw listings goes "
-                    "through sinks.compact.compact_parquet_dir"
-                )
-            if version is not None:
-                self.invalidate_table(tbl.database, tbl.name)
-            return local_frame(
-                self.spark,
-                [("OPTIMIZE",
-                  None if version is None else str(version), 0)],
-                "operation string, version string, files_removed long",
-            )
-        if stmt.zorder_by:
-            raise GlueSparkError("VACUUM takes no ZORDER clause")
-        hours = (
-            168.0 if stmt.retain_hours is None else stmt.retain_hours
-        )
-        if ttype == ETableType.DELTA:
-            from glue_table_cache_spark.sinks.delta_optimize import (
-                vacuum_delta,
-            )
-
-            victims = vacuum_delta(
-                loc, retention_hours=hours, dry_run=stmt.dry_run
-            )
-        elif ttype == ETableType.ICEBERG:
-            from glue_table_cache_spark.sinks.iceberg_optimize import (
-                remove_iceberg_orphans,
-            )
-
-            victims = remove_iceberg_orphans(
-                loc, retention_hours=hours, dry_run=stmt.dry_run
-            )
-        elif ttype == ETableType.HUDI:
-            from glue_table_cache_spark.sinks.hudi_optimize import (
-                clean_hudi,
-            )
-
-            victims = clean_hudi(
-                loc, retention_hours=hours, dry_run=stmt.dry_run
-            )
+            removed = len(paths)
+        elif stmt.verb == "optimize":
+            kwargs = {"zorder_by": list(stmt.zorder_by) or None}
+            if stmt.predicate:
+                kwargs["partition_predicate"] = stmt.predicate
+            version = for_format(
+                "OPTIMIZE WHERE" if stmt.predicate else "OPTIMIZE",
+                ttype, qual,
+            )(self.spark, loc, **kwargs)
         else:
-            raise GlueSparkError(
-                f"VACUUM {qual}: the table is registered as "
-                f"{ttype.name} — raw listings have no transaction log "
-                "to derive the unreferenced set from"
+            if stmt.zorder_by:
+                raise GlueSparkError("VACUUM takes no ZORDER clause")
+            paths = sorted(
+                for_format("VACUUM", ttype, qual)(
+                    loc,
+                    retention_hours=(
+                        168.0
+                        if stmt.retain_hours is None
+                        else stmt.retain_hours
+                    ),
+                    dry_run=stmt.dry_run,
+                )
             )
+            removed = len(paths)
         if stmt.dry_run:
-            # the deletable set itself, nothing deleted — the
-            # look-before-you-leap half of vacuum_delta/clean_hudi/
-            # remove_iceberg_orphans surfaced through SQL
+            # the deletable (or missing) set itself, nothing changed
+            # — the look-before-you-leap half surfaced through SQL
             return local_frame(
-                self.spark,
-                [(str(v),) for v in sorted(victims)], "path string"
+                self.spark, [(str(p),) for p in paths], "path string"
             )
+        if version is not None:
+            self.invalidate_table(tbl.database, tbl.name)
         return local_frame(
             self.spark,
-            [("VACUUM", None, len(victims))],
+            [(op, None if version is None else str(version), removed)],
             "operation string, version string, files_removed long",
         )
 
-    def _resolve_predicate_refs(self, text: str):
+    @contextmanager
+    def _predicate_refs(self, text: str):
         """Glue refs inside a DML predicate — the subquery shapes,
         ``WHERE id IN (SELECT id FROM glue.db.contaminated)`` — get
         the same treatment as any query: per-call temp views plus a
-        textual rewrite.  Returns ``(rewritten, drop)``; call
-        ``drop()`` once the writer has committed (writers evaluate
-        and commit synchronously, so the views' lifetime is the
-        call).  No glue refs → the text passes through untouched
-        with a no-op drop (plain temp-view subqueries already
+        textual rewrite.  Yields the rewritten predicate and drops
+        the views on exit (writers evaluate and commit synchronously,
+        so the views' lifetime is the call).  No glue refs → the text
+        passes through untouched (plain temp-view subqueries already
         resolve by name)."""
-        refs = get_query_glue_table_refs(text, strict=False)
+        refs = (
+            get_query_glue_table_refs(text, strict=False)
+            if "(" in text
+            else []
+        )
         if not refs:
-            return text, (lambda: None)
+            yield text
+            return
         token = next(self._view_seq)
         names = {
             ref: f"{ref.view_name}__pred_q{token}_{i}"
@@ -2293,12 +1518,11 @@ class GlueSparkEngine:
         self._register_views(
             refs, names, f"SELECT * FROM __dml WHERE {text}", None
         )
-
-        def drop() -> None:
+        try:
+            yield rewrite_query(text, refs, names)
+        finally:
             for n in names.values():
                 self.spark.catalog.dropTempView(n)
-
-        return rewrite_query(text, refs, names), drop
 
     def _register_views(
         self,
@@ -3633,7 +2857,7 @@ class GlueSparkEngine:
     def _format_markers(loc: str):
         from pathlib import Path
 
-        base = Path(loc[len("file:"):] if loc.startswith("file:") else loc)
+        base = Path(_local_path(loc))
         if any((base / "_delta_log").glob("*.json")) or any(
             (base / "_delta_log").glob("*.checkpoint*.parquet")
         ):

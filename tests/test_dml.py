@@ -3927,3 +3927,156 @@ def test_apply_changes_scd2_late_delete_retires_version(
         (r["id"], r["v"], r["__START_AT"], r["__END_AT"])
         for r in eng.sql("SELECT * FROM glue.db.dim").collect()
     ) == [(1, "a", 5, 8)]
+
+
+def test_describe_detail_reads_checkpointed_delta_properties(
+    spark, tmp_path
+):
+    """DESCRIBE DETAIL and SHOW TBLPROPERTIES read a Delta table's
+    configuration through one reader: after a checkpoint the
+    ``metaData.configuration`` map decodes as key/value pairs, and
+    both verbs must still answer with the same properties."""
+    from glue_table_cache_spark.sinks.delta_checkpoint import (
+        write_delta_checkpoint,
+    )
+    from glue_table_cache_spark.sinks.delta_write import (
+        set_delta_table_properties,
+        write_delta_append,
+    )
+
+    loc = tmp_path / "dt"
+    write_delta_append(
+        spark.createDataFrame([(1,)], "id long"), str(loc)
+    )
+    set_delta_table_properties(str(loc), {"owner": "x"})
+    write_delta_checkpoint(str(loc))
+    eng = _engine_for(
+        spark, loc, {"spark.sql.sources.provider": "delta"}
+    )
+    shown = eng.sql("SHOW TBLPROPERTIES glue.db.t").collect()
+    assert [tuple(r) for r in shown] == [("owner", "x")]
+    d = eng.sql("DESCRIBE DETAIL glue.db.t").first()
+    assert d.format == "delta" and d.properties == {"owner": "x"}
+
+
+@pytest.fixture(scope="module")
+def one_table_per_format(spark, tmp_path_factory):
+    """A two-row table of each registered format the refusal matrix
+    needs: DELTA, ICEBERG, HUDI (copy-on-write) and partitioned raw
+    parquet (HIVE)."""
+    from glue_table_cache_spark.catalog import PartitionKey
+    from glue_table_cache_spark.sinks.delta_write import (
+        write_delta_append,
+    )
+    from glue_table_cache_spark.sinks.hudi_write import write_hudi_append
+    from glue_table_cache_spark.sinks.iceberg_write import (
+        write_iceberg_append,
+    )
+
+    base = tmp_path_factory.mktemp("refusals")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, p string")
+    write_delta_append(df, str(base / "delta"))
+    write_iceberg_append(df, str(base / "iceberg"))
+    write_hudi_append(df, str(base / "hudi"))
+    df.write.partitionBy("p").parquet(str(base / "hive"))
+    params = {
+        "DELTA": {"spark.sql.sources.provider": "delta"},
+        "ICEBERG": {"table_type": "ICEBERG"},
+        "HUDI": {"hoodie.table.name": "t"},
+        "HIVE": {},
+    }
+    keys = {"HIVE": [PartitionKey("p")]}
+    engines = {}
+    for fmt, p in params.items():
+        store = LocalMetadataStore()
+        store.register_parquet_dir(
+            "db", "t", str(base / fmt.lower()),
+            partition_keys=keys.get(fmt), parameters=p,
+        )
+        engines[fmt] = GlueSparkEngine(spark, store)
+    return engines, base
+
+
+@pytest.mark.parametrize(
+    "fmt, verb, statement",
+    [
+        ("ICEBERG", "COPY INTO", "COPY INTO glue.db.t FROM '{base}'"),
+        ("HUDI", "COPY INTO", "COPY INTO glue.db.t FROM '{base}'"),
+        (
+            "ICEBERG", "ADD CONSTRAINT",
+            "ALTER TABLE glue.db.t ADD CONSTRAINT c CHECK (id > 0)",
+        ),
+        ("HUDI", "DROP CONSTRAINT", "ALTER TABLE glue.db.t DROP CONSTRAINT c"),
+        (
+            "HIVE", "SET TBLPROPERTIES",
+            "ALTER TABLE glue.db.t SET TBLPROPERTIES ('k' = 'v')",
+        ),
+        ("HIVE", "OPTIMIZE", "OPTIMIZE glue.db.t"),
+        ("ICEBERG", "OPTIMIZE", "OPTIMIZE glue.db.t WHERE p = 'a'"),
+        ("HIVE", "VACUUM", "VACUUM glue.db.t"),
+        ("HIVE", "RESTORE", "RESTORE TABLE glue.db.t TO VERSION AS OF 0"),
+        (
+            "ICEBERG", "RESTORE",
+            "RESTORE TABLE glue.db.t TO TIMESTAMP AS OF '2020-01-01'",
+        ),
+        ("HIVE", "INSERT", "INSERT INTO glue.db.t VALUES (9, 'z')"),
+        ("HIVE", "DELETE", "DELETE FROM glue.db.t WHERE id = 1"),
+        ("HIVE", "UPDATE", "UPDATE glue.db.t SET id = 0 WHERE id = 1"),
+        (
+            "HIVE", "MERGE",
+            "MERGE INTO glue.db.t AS t USING (SELECT 1 AS id) s "
+            "ON t.id = s.id WHEN MATCHED THEN DELETE",
+        ),
+        ("HUDI", "RENAME COLUMN", "ALTER TABLE glue.db.t RENAME COLUMN id TO k"),
+        ("HIVE", "DROP COLUMN", "ALTER TABLE glue.db.t DROP COLUMN id"),
+        ("HUDI", "REORG", "REORG TABLE glue.db.t APPLY (PURGE)"),
+        ("ICEBERG", "FSCK", "FSCK REPAIR TABLE glue.db.t"),
+        ("DELTA", "CREATE TAG", "ALTER TABLE glue.db.t CREATE TAG v1"),
+        ("HUDI", "DROP BRANCH", "ALTER TABLE glue.db.t DROP BRANCH b"),
+        ("HIVE", "DESCRIBE HISTORY", "DESCRIBE HISTORY glue.db.t"),
+        ("HIVE", "SHOW TBLPROPERTIES", "SHOW TBLPROPERTIES glue.db.t"),
+    ],
+)
+def test_statement_refuses_on_format(
+    one_table_per_format, fmt, verb, statement
+):
+    """Every (statement, registered format) pair without a writer
+    refuses loudly, naming the verb and the table's format, and
+    writes nothing."""
+    engines, base = one_table_per_format
+    eng = engines[fmt]
+    ttype = eng.get_table_metadata_cached("db", "t").table_type
+    assert ttype.name == fmt
+    with pytest.raises(GlueSparkError) as err:
+        eng.sql(statement.format(base=base / "delta")).collect()
+    assert verb in str(err.value) and fmt in str(err.value)
+
+
+def test_format_dispatch_table_integrity():
+    """Every ``"module:function"`` entry of the verb table imports and
+    is callable, and every (verb, format) pair either has an entry or
+    refuses naming both — a misspelled entry would otherwise surface
+    only at the first statement that uses it.  Needs no Spark."""
+    from glue_table_cache_spark.catalog import ETableType
+    from glue_table_cache_spark.engine import _HUDI_MOR_WRITERS
+    from glue_table_cache_spark.formats import VERBS, for_format
+
+    for verb, (reason, entries) in VERBS.items():
+        assert reason is None or reason.strip(), verb
+        for ttype in ETableType:
+            if ttype in entries:
+                assert callable(for_format(verb, ttype, "glue.db.t")), (
+                    verb, ttype,
+                )
+            elif reason is None:
+                assert for_format(verb, ttype, "glue.db.t") is None
+            else:
+                with pytest.raises(GlueSparkError) as err:
+                    for_format(verb, ttype, "glue.db.t")
+                assert verb in str(err.value)
+                assert ttype.name in str(err.value)
+    # the Hudi MERGE_ON_READ writers cover the row-level verbs they
+    # replace and exist on the engine
+    for verb, method in _HUDI_MOR_WRITERS.items():
+        assert ETableType.HUDI in VERBS[verb][1]
+        assert callable(getattr(GlueSparkEngine, method))
