@@ -42,22 +42,16 @@ class EngineConfig:
     #: materialized file lists (local HTTP block cache,
     #: /root/reference/src/glue-table-cache.ts:54-65, 235-238)
     proxy_address: str | None = None
-    #: zone-map file skipping from table-format metadata (Delta
-    #: ``add.stats``, Iceberg manifest bounds): data-column predicates
-    #: drop whole files whose min/max ranges provably cannot match.
-    #: The stats are already in hand from the log/manifest walk, so
-    #: this costs nothing and is on by default; it is an optimization,
-    #: never a filter of record (conservative three-valued logic, see
+    #: zone-map file skipping: data-column predicates drop whole files
+    #: whose min/max ranges provably cannot match.  The stats come from
+    #: table-format metadata (Delta ``add.stats``, Iceberg manifest
+    #: bounds), already in hand from the log/manifest walk, and from
+    #: parquet FOOTERS for Hive, unpartitioned, projection and Hudi
+    #: COPY_ON_WRITE file lists, read once per surviving file and
+    #: memoized with the listing.  An optimization, never a filter of
+    #: record (conservative three-valued logic, see
     #: glue_table_cache_spark/skipping.py)
     stats_skipping: bool = True
-    #: zone-map skipping for plain HIVE/UNPARTITIONED *explicit* file
-    #: lists by reading parquet FOOTERS (row-group statistics).  Costs
-    #: one footer read per surviving file at planning time, so it is
-    #: opt-in — worth it for highly selective predicates over sorted /
-    #: clustered data, wasted work for full scans.  Without it Spark
-    #: still pushes the filters into the parquet reader and skips row
-    #: groups executor-side; this drops whole files at planning time
-    footer_stats_skipping: bool = False
     #: hard cap on how many explicit file paths may be handed to one
     #: ``spark.read.parquet(*paths)`` call.  HIVE/UNPARTITIONED/projection
     #: tables always scan the reference's way — the cached, pruned

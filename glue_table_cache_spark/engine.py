@@ -89,6 +89,7 @@ from glue_table_cache_spark.pruning import (
     TruePredicate,
     extract_partition_predicate,
     prune_files,
+    where_columns,
 )
 from glue_table_cache_spark.session import local_frame
 from glue_table_cache_spark.transformer import (
@@ -1969,7 +1970,12 @@ class GlueSparkEngine:
            :class:`~glue_table_cache_spark.skipping.FileStats` (or
            ``None``) per surviving file, or ``None`` for no skipping;
            the predicate is extracted over the union of stats-bearing
-           columns.
+           columns other than ``keys``.  The stats are the walk's own
+           (Delta ``add.stats``, Iceberg manifest bounds) or parquet
+           footers (:meth:`_footer_stats`: Hive, unpartitioned and
+           projection listings, Hudi COPY_ON_WRITE).  Hudi
+           MERGE_ON_READ passes none: a log record can move a row
+           into a range its base file's footer rules out.
 
         Steps 1 and 2 AND into one predicate for one ``prune_files``
         call.  Every step is conservative three-valued logic: a file
@@ -2012,6 +2018,10 @@ class GlueSparkEngine:
                 cols.update(st.min_values)
                 cols.update(st.max_values)
                 cols.update(st.null_counts)
+        # a partition key's value is the one the path or metadata
+        # records, which step 1 already applied; a file may still
+        # carry a same-named column with other values
+        cols.difference_update(k.lower() for k in keys)
         if not cols:
             return files
         pred = extract_partition_predicate(query, sorted(cols), idents)
@@ -2023,6 +2033,62 @@ class GlueSparkEngine:
             [(f.path, st) for f, st in zip(files, per_file)], pred
         )
         return [f for f in files if f.path in keep]
+
+    def _footer_stats(
+        self, tbl: CatalogTable, query: str | None, keys: list[str]
+    ) -> Callable[[list[FileInfo]], list | None] | None:
+        """:meth:`_prune_and_skip`'s ``stats`` for a plain-parquet file
+        list, from each file's parquet footer; ``None`` (no footer is
+        read) when skipping is off, the table is not parquet, or the
+        WHERE clause constrains no column outside ``keys``.
+
+        Footers are read for the partition survivors only, each once:
+        the results are memoized per table under
+        ``<location>#footers`` in the listing cache and tracked like
+        the ``#schema:`` entries, so TTL expiry, LRU eviction and
+        ``invalidate_table`` drop them with the listing.  Like the
+        schema cache, the memo takes a data file to be immutable by
+        path.  Local footers are read serially (about 0.2 ms each);
+        ``s3://`` footers by ranged GETs through the client the
+        engine lists with.  A list over ``max_explicit_files`` is
+        never read: the explicit path reroutes it to the directory
+        scan."""
+        if not (
+            self.config.stats_skipping
+            and query
+            and tbl.data_format == "parquet"
+        ):
+            return None
+        idents = {tbl.name, tbl.qualified_name}
+        cols = where_columns(query, idents) - {k.lower() for k in keys}
+        if not cols or isinstance(
+            extract_partition_predicate(query, sorted(cols), idents),
+            TruePredicate,
+        ):
+            return None
+
+        def stats(kept: list[FileInfo]) -> list | None:
+            from glue_table_cache_spark import skipping
+
+            if len(kept) > self.config.max_explicit_files:
+                return None
+            key = f"{tbl.location}#footers"
+            memo = self._listing_cache.get_or_load(key, dict)
+            # recorded after the entry exists, as in _read_paths
+            self._track_listing_key(tbl, key)
+            missing = [f.path for f in kept if f.path not in memo]
+            client = None
+            if any(p.startswith("s3://") for p in missing):
+                client = getattr(
+                    self._fs or filesystem_for(tbl.location), "client", None
+                )
+            # concurrent statements may read the same footer twice;
+            # both store the same value
+            for path in missing:
+                memo[path] = skipping.parquet_footer_stats(path, client)
+            return [memo[f.path] for f in kept]
+
+        return stats
 
     @staticmethod
     def _kept_entries(
@@ -2198,8 +2264,10 @@ class GlueSparkEngine:
             # partition paths (hive-style layouts only; others carry
             # no values)
             files = [FileInfo(p, pv) for p, pv in walk[1]]
+            keys = self._hudi_prune_keys(tbl, files)
             kept = self._prune_and_skip(
-                tbl, query, files, self._hudi_prune_keys(tbl, files)
+                tbl, query, files, keys,
+                stats=self._footer_stats(tbl, query, keys),
             )
             paths = self._proxy([f.path for f in kept])
             schema = walk[2]
@@ -2582,30 +2650,9 @@ class GlueSparkEngine:
             # ``SELECT NULL LIMIT 0``
             # (/root/reference/src/sql-transformer.ts:320-322)
             return self.spark.range(0).select(F.lit(None).alias("null"))
-        footer_stats = None
-        if (
-            self.config.footer_stats_skipping
-            and tbl.parameters.get("classification", "parquet") == "parquet"
-        ):
-            from glue_table_cache_spark.skipping import (
-                parquet_footer_stats,
-            )
-
-            def footer_stats(kept):
-                # FOOTER zone-map skipping (opt-in): row-group min/max
-                # ranges read from each surviving file's parquet
-                # footer — metadata-sized and parallelized.  A list
-                # over max_explicit_files reroutes to the directory
-                # scan below and is never read
-                if len(kept) > self.config.max_explicit_files:
-                    return None
-                with ThreadPoolExecutor(max_workers=32) as pool:
-                    return list(
-                        pool.map(lambda f: parquet_footer_stats(f.path), kept)
-                    )
-
         pruned = self._prune_and_skip(
-            tbl, query, files, keys, stats=footer_stats
+            tbl, query, files, keys,
+            stats=self._footer_stats(tbl, query, keys),
         )
         if len(pruned) > self.config.max_explicit_files:
             if tbl.table_type in (ETableType.HIVE, ETableType.UNPARTITIONED):

@@ -111,6 +111,12 @@ class S3FileSystem:
             client = boto3.client("s3")
         self._client = client
 
+    @property
+    def client(self):
+        """The S3 client this filesystem lists with; footer reads for
+        zone-map skipping go through it too."""
+        return self._client
+
     def list_files(self, location: str) -> list[str]:
         bucket, prefix = parse_s3_path(location)
         paths: list[str] = []

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass
+from decimal import Decimal
 from typing import Any
 
 from glue_table_cache_spark.listing import FileInfo
@@ -104,7 +105,7 @@ def _coerce(value: str | None, const: Any) -> Any | None:
         return None
     if isinstance(const, bool):
         return None
-    if isinstance(const, (int, float)):
+    if isinstance(const, (int, float, Decimal)):
         try:
             return float(value)
         except ValueError:
@@ -124,7 +125,9 @@ class Comparison(Predicate):
         v = _coerce(values.get(self.column), self.const)
         if v is None:
             return None  # Unknown: missing or uncoercible value
-        c = float(self.const) if isinstance(self.const, (int, float)) else self.const
+        c = self.const
+        if isinstance(c, (int, float, Decimal)):
+            c = float(c)
         return _OPS[self.op](v, c)
 
 
@@ -143,7 +146,7 @@ class InList(Predicate):
             v = _coerce(raw, c)
             if v is None:
                 return None
-            cc = float(c) if isinstance(c, (int, float)) else c
+            cc = float(c) if isinstance(c, (int, float, Decimal)) else c
             if v == cc:
                 hit = True
                 break
@@ -257,10 +260,14 @@ def _constant(node: dict) -> tuple[Any, bool]:
     if type_id in ("FLOAT", "DOUBLE"):
         return float(v), True
     if type_id == "DECIMAL":
-        try:
-            return float(v), True
-        except (TypeError, ValueError):
-            return None, False
+        # DuckDB serializes the unscaled integer (a hugeint
+        # {upper, lower} pair past 18 digits) and the scale
+        scale = ((val.get("type") or {}).get("type_info") or {}).get("scale")
+        if isinstance(v, dict):
+            v = (v.get("upper", 0) << 64) + v.get("lower", 0)
+        if isinstance(v, int) and isinstance(scale, int):
+            return Decimal(v).scaleb(-scale), True
+        return None, False
     return None, False
 
 
@@ -477,6 +484,27 @@ def extract_proof_predicate(
         {t.lower() for t in table_idents},
         strict=True,
     )
+
+
+def where_columns(sql: str, table_idents: set[str]) -> set[str]:
+    """Lower-cased names of the columns the WHERE clause references
+    unqualified or qualified by one of ``table_idents`` (empty when
+    there is no parseable WHERE).  A superset is fine: callers extract
+    a predicate over these names and keep every file it cannot
+    decide."""
+    idents = {t.lower() for t in table_idents}
+    out: set[str] = set()
+    stack: list[Any] = [parse_where_clause(sql)]
+    while stack:
+        node = stack.pop()
+        if isinstance(node, list):
+            stack.extend(node)
+        elif isinstance(node, dict):
+            col, qual = _column_ref(node)
+            if col and _qualifier_ok(qual, idents):
+                out.add(col.lower())
+            stack.extend(node.values())
+    return out
 
 
 def prune_files(files: list[FileInfo], predicate: Predicate) -> list[FileInfo]:

@@ -12,7 +12,7 @@ difference between "scan 40k files" and "scan the 300 whose ranges
 overlap" dominates query latency.
 
 Three stats sources, all metadata-scale (no data file is opened except
-the optional parquet-footer reads, which touch footers only):
+the parquet-footer reads, which touch footers only):
 
 * **Delta Lake** — the transaction log's ``add.stats`` JSON
   (``numRecords`` / ``minValues`` / ``maxValues`` / ``nullCount``),
@@ -23,10 +23,17 @@ the optional parquet-footer reads, which touch footers only):
   the walk keeps them raw in a :class:`LazyFileStats`, so only files
   that survive partition pruning are decoded.
 * **Parquet footers** — row-group statistics aggregated per file, for
-  plain Hive/unpartitioned listings where no table format carries
-  stats.  Costs one footer read per file, so it is opt-in
-  (``EngineConfig.footer_stats_skipping``) and bounded by the explicit
-  file-list cap.
+  the plain-parquet file lists where no table format carries stats:
+  Hive, unpartitioned and projection listings and Hudi
+  COPY_ON_WRITE base files.  On by default under the same
+  ``EngineConfig.stats_skipping`` switch.  The engine reads a footer
+  only for a file that survives partition pruning, only when the
+  WHERE clause constrains a non-partition column, and once per file:
+  the results are memoized with the table's listing.  A local footer
+  costs about 0.2 ms (a 32-row benchmark-lake file, 4-core host); a
+  remote one two ranged GETs (:func:`parquet_footer_stats`).  Hudi
+  MERGE_ON_READ base files are never skipped: a log record can move a
+  row into a range its base file's footer rules out.
 
 Correctness contract — the same as partition pruning: skipping is an
 *optimization, never a filter of record*.  A file is dropped only when
@@ -146,6 +153,14 @@ def _cmp_pair(stat: Any, const: Any) -> tuple[Any, Any] | None:
     # bool is an int subclass — handle it before numerics
     if isinstance(const, bool) or isinstance(stat, bool):
         if isinstance(const, bool) and isinstance(stat, bool):
+            return (stat, const)
+        return None
+    if isinstance(const, Decimal):
+        # a SQL decimal literal: Spark compares a double column in
+        # double, and integer and decimal columns exactly
+        if isinstance(stat, float):
+            return (stat, float(const))
+        if isinstance(stat, (int, Decimal)):
             return (stat, const)
         return None
     if isinstance(const, (int, float)):
@@ -451,25 +466,54 @@ def parquet_file_columns(path: str) -> set[str] | None:
         return None
 
 
-def parquet_footer_stats(path: str, s3_client=None) -> FileStats | None:
-    """Aggregate a parquet file's row-group statistics into one
-    :class:`FileStats` — the zone-map source for plain Hive layouts.
-    Only top-level columns with statistics in EVERY row group
-    contribute; reading touches the footer, not the data pages.
-    Unreadable footers return ``None`` (keep the file) — skipping must
-    never turn an IO hiccup into a wrong answer; the scan itself will
-    surface a real corruption loudly."""
+def _s3_footer(path: str, s3_client=None):
+    """An ``s3://`` parquet file's footer metadata from two ranged
+    GETs: the 8-byte trailer (footer length, ``PAR1``), then the footer
+    with its trailer.  The data pages never leave the object store.
+    The bytes are read behind a ``PAR1`` header, which is all the
+    parquet reader needs to parse a footer."""
     import io
 
     import pyarrow.parquet as pq
 
-    from glue_table_cache_spark.sources.iceberg import _read_bytes
+    from glue_table_cache_spark.listing import parse_s3_path
+
+    if s3_client is None:  # pragma: no cover - no AWS in harness
+        import boto3
+
+        s3_client = boto3.client("s3")
+    bucket, key = parse_s3_path(path)
+    key = key.rstrip("/")
+
+    def tail(n: int) -> bytes:
+        return s3_client.get_object(
+            Bucket=bucket, Key=key, Range=f"bytes=-{n}"
+        )["Body"].read()
+
+    trailer = tail(8)
+    if len(trailer) != 8 or trailer[4:] != b"PAR1":
+        raise ValueError(f"{path}: not a parquet file")
+    (length,) = struct.unpack("<I", trailer[:4])
+    footer = tail(length + 8)
+    return pq.ParquetFile(io.BytesIO(b"PAR1" + footer)).metadata
+
+
+def parquet_footer_stats(path: str, s3_client=None) -> FileStats | None:
+    """Aggregate a parquet file's row-group statistics into one
+    :class:`FileStats` — the zone-map source for plain Hive layouts.
+    Only top-level columns with statistics in EVERY row group
+    contribute; reading touches the footer, not the data pages (an
+    ``s3://`` path is read with ranged GETs through ``s3_client``).
+    Unreadable footers return ``None`` (keep the file) — skipping must
+    never turn an IO hiccup into a wrong answer; the scan itself will
+    surface a real corruption loudly."""
+    import pyarrow.parquet as pq
 
     try:
-        if "://" in path:
-            md = pq.ParquetFile(
-                io.BytesIO(_read_bytes(path, s3_client))
-            ).metadata
+        if path.startswith("s3://"):
+            md = _s3_footer(path, s3_client)
+        elif "://" in path:
+            return None  # no reader for other object stores
         else:
             md = pq.ParquetFile(path).metadata
     except Exception:  # noqa: BLE001 - see docstring

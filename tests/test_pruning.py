@@ -3,6 +3,8 @@ we deliberately fix (SURVEY.md §2.D)."""
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from glue_table_cache_spark.listing import FileInfo
 from glue_table_cache_spark.pruning import (
     TruePredicate,
@@ -33,6 +35,21 @@ def test_equality_prunes():
 def test_numeric_comparison_on_string_values():
     out = _prune("SELECT * FROM glue.db.tbl WHERE year >= 2024")
     assert out == [f.path for f in FILES[2:]]
+
+
+def test_decimal_literals_keep_their_scale():
+    # DuckDB serializes 2024.0 as the unscaled 20240 with scale 1
+    assert _prune("SELECT * FROM glue.db.tbl WHERE year = 2024.0") == [
+        f.path for f in FILES[2:]
+    ]
+    assert _prune("SELECT * FROM glue.db.tbl WHERE month < 1.5") == [
+        FILES[0].path, FILES[2].path
+    ]
+    # past 18 digits the unscaled value is a hugeint {upper, lower}
+    pred = extract_partition_predicate(
+        "SELECT * FROM t WHERE year < 12345678901234567890.12", KEYS, {"t"}
+    )
+    assert pred.const == Decimal("12345678901234567890.12")
 
 
 def test_in_list():

@@ -32,6 +32,8 @@ class FakeS3Client:
         self._objects = objects
         self._page_size = page_size
         self.list_calls = 0
+        self.get_calls = 0
+        self.bytes_read = 0
 
     def list_objects_v2(self, Bucket, Prefix, ContinuationToken=None):
         self.list_calls += 1
@@ -44,10 +46,58 @@ class FakeS3Client:
             resp["NextContinuationToken"] = str(start + self._page_size)
         return resp
 
-    def get_object(self, Bucket, Key):
+    def get_object(self, Bucket, Key, Range=None):
+        """``Range`` takes S3's ``bytes=a-b`` and suffix ``bytes=-n``
+        forms."""
         import io
 
-        return {"Body": io.BytesIO(self._objects[Key])}
+        data = self._objects[Key]
+        if Range is not None:
+            lo, hi = Range.removeprefix("bytes=").split("-")
+            if lo:
+                data = data[int(lo) : int(hi) + 1 if hi else None]
+            else:
+                data = data[-int(hi) :]
+        self.get_calls += 1
+        self.bytes_read += len(data)
+        return {"Body": io.BytesIO(data)}
+
+
+# -- parquet footers over S3 ---------------------------------------------------
+
+
+def test_footer_stats_over_stub_s3_reads_only_the_footer(spark, tmp_path):
+    """Zone maps of an ``s3://`` file come from two ranged GETs through
+    the client the engine lists with, never the whole object."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from glue_table_cache_spark.listing import FileInfo
+    from glue_table_cache_spark.skipping import parquet_footer_stats
+
+    local = tmp_path / "f.parquet"
+    pq.write_table(pa.table({"id": pa.array(range(5000), pa.int64())}), local)
+    data = local.read_bytes()
+    client = FakeS3Client({"t/f.parquet": data})
+    st = parquet_footer_stats("s3://b/t/f.parquet", client)
+    assert (st.num_records, st.min_values["id"], st.max_values["id"]) == (
+        5000, 0, 4999,
+    )
+    assert client.get_calls == 2
+    assert client.bytes_read < len(data) // 10
+
+    client.bytes_read = client.get_calls = 0
+    store = LocalMetadataStore()
+    tbl = store.register_parquet_dir("db", "t", "s3://b/t")
+    eng = GlueSparkEngine(
+        spark, store, filesystem=S3FileSystem(client=client)
+    )
+    stats = eng._footer_stats(tbl, "SELECT * FROM glue.db.t WHERE id > 7", [])
+    assert stats([FileInfo("s3://b/t/f.parquet")]) == [st]
+    assert client.get_calls == 2 and client.bytes_read < len(data) // 10
+    # not a parquet object: no stats, the file is kept
+    client = FakeS3Client({"t/x.parquet": b"not parquet at all"})
+    assert parquet_footer_stats("s3://b/t/x.parquet", client) is None
 
 
 # -- parse_s3_path (reference cases) ----------------------------------------

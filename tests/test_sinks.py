@@ -244,7 +244,6 @@ def test_zorder_compaction_bounds_every_clustering_column(
 def test_zorder_enables_skipping_on_every_column(spark, tmp_path):
     from glue_table_cache_spark import GlueSparkEngine
     from glue_table_cache_spark.catalog import LocalMetadataStore
-    from glue_table_cache_spark.config import EngineConfig
     from glue_table_cache_spark.sinks.compact import compact_parquet_dir
 
     rows = [(x, y) for x in range(32) for y in range(32)]
@@ -256,11 +255,7 @@ def test_zorder_enables_skipping_on_every_column(spark, tmp_path):
     )
     store = LocalMetadataStore()
     store.register_parquet_dir("db", "z", dst)
-    eng = GlueSparkEngine(
-        spark,
-        store,
-        config=EngineConfig(footer_stats_skipping=True),
-    )
+    eng = GlueSparkEngine(spark, store)
     for col in ("x", "y"):
         probe = eng.sql(f"SELECT x, y FROM glue.db.z WHERE {col} < 4")
         assert len(probe.inputFiles()) < n, col

@@ -315,6 +315,28 @@ def test_parquet_footer_stats(tmp_path):
     assert parquet_footer_stats(str(tmp_path / "missing.parquet")) is None
 
 
+def test_decimal_literal_against_double_int_and_decimal_bounds():
+    # Spark compares a double column with a decimal literal in double:
+    # the double 0.05 equals the literal 0.05, though the exact values
+    # differ in the 18th digit
+    dbl = FileStats.build(2, {"x": 0.05}, {"x": 0.05}, {"x": 0})
+    lit = Decimal("0.05")
+    assert may_match(Comparison("x", "COMPARE_LESSTHANOREQUALTO", lit), dbl)
+    assert may_match(Comparison("x", "COMPARE_GREATERTHANOREQUALTO", lit), dbl)
+    assert not may_match(Comparison("x", "COMPARE_GREATERTHAN", lit), dbl)
+    # integer and decimal columns compare exactly
+    ints = FileStats.build(2, {"x": 1}, {"x": 2}, {"x": 0})
+    assert not may_match(
+        Comparison("x", "COMPARE_GREATERTHAN", Decimal("2.5")), ints
+    )
+    assert may_match(Comparison("x", "COMPARE_LESSTHAN", Decimal("1.5")), ints)
+    decs = FileStats.build(2, {"x": Decimal("0.05")}, {"x": lit}, {"x": 0})
+    assert may_match(Comparison("x", "COMPARE_EQUAL", lit), decs)
+    assert not may_match(
+        Comparison("x", "COMPARE_LESSTHAN", Decimal("0.05")), decs
+    )
+
+
 @settings(max_examples=120, deadline=None)
 @given(
     rows=st.lists(
@@ -409,26 +431,26 @@ def test_engine_footer_skipping_hive_explicit(spark, tmp_path):
         ).coalesce(1).write.mode("append").parquet(str(base))
     store = LocalMetadataStore()
     store.register_parquet_dir("db", "plain", str(base))
-    eng = GlueSparkEngine(
-        spark,
-        store,
-        config=EngineConfig(footer_stats_skipping=True),
-    )
+    eng = GlueSparkEngine(spark, store)
     out = eng.sql(
         "SELECT count(*) AS n FROM glue.db.plain WHERE x BETWEEN 40 AND 60"
     )
     assert out.collect()[0].n == 21
     probe = eng.sql("SELECT x FROM glue.db.plain WHERE x BETWEEN 40 AND 60")
     assert len(probe.inputFiles()) == 1
-    # default config never reads footers and scans everything
-    eng_off = GlueSparkEngine(spark, store)
+    # stats_skipping=False reads no footer and scans every file; both
+    # answer what a raw read of the directory answers
+    eng_off = GlueSparkEngine(
+        spark, store, config=EngineConfig(stats_skipping=False)
+    )
     probe_off = eng_off.sql(
         "SELECT x FROM glue.db.plain WHERE x BETWEEN 40 AND 60"
     )
     assert len(probe_off.inputFiles()) == 3
-    assert sorted(r.x for r in probe.collect()) == sorted(
-        r.x for r in probe_off.collect()
-    )
+    raw = spark.read.parquet(str(base)).where("x BETWEEN 40 AND 60")
+    want = sorted(r.x for r in raw.collect())
+    assert sorted(r.x for r in probe.collect()) == want
+    assert sorted(r.x for r in probe_off.collect()) == want
 
 
 def test_engine_iceberg_manifest_bounds_skipping(spark, tmp_path):
