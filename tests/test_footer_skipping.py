@@ -241,3 +241,33 @@ def test_partition_key_column_in_files_is_not_skipped_on(spark, tmp_path):
     )
     assert rows_on == rows_off == [(1, 1), (2, 2), (11, 1), (12, 2)]
     assert files_on == files_off
+
+
+def test_footer_memo_under_concurrent_statements(spark, tmp_path):
+    """Statements share one memo per table: threads racing to fill it
+    (more threads than cores, a short switch interval) each still get
+    one footer per file, in file order."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from glue_table_cache_spark.listing import FileInfo
+
+    store = _store(tmp_path)
+    tbl = store.get_table("db", "hive")
+    files = [
+        FileInfo(str(p), {"p": p.parent.name[2:]})
+        for p in sorted((tmp_path / "hive").rglob("*.parquet"))
+    ]
+    want = [skipping.parquet_footer_stats(f.path) for f in files]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(5):
+            eng = GlueSparkEngine(spark, store)
+            stats = eng._footer_stats(tbl, POINT.format(t="hive"), ["p"])
+            with ThreadPoolExecutor(max_workers=16) as pool:
+                futures = [pool.submit(stats, files) for _ in range(32)]
+                got = [f.result(timeout=60) for f in futures]
+            assert all(g == want for g in got)
+    finally:
+        sys.setswitchinterval(old)
