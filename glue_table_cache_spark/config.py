@@ -48,8 +48,11 @@ class EngineConfig:
     #: bounds), already in hand from the log/manifest walk, and from
     #: parquet FOOTERS for Hive, unpartitioned, projection and Hudi
     #: COPY_ON_WRITE file lists, read once per surviving file and
-    #: memoized with the listing.  An optimization, never a filter of
-    #: record (conservative three-valued logic, see
+    #: memoized per table (``skipping.FooterMemo``: a local file is
+    #: read again when rewritten in place; an ``s3://`` object is
+    #: taken to be immutable by key until ``invalidate_table`` or the
+    #: listing TTL).  An optimization, never a filter of record
+    #: (conservative three-valued logic, see
     #: glue_table_cache_spark/skipping.py)
     stats_skipping: bool = True
     #: hard cap on how many explicit file paths may be handed to one

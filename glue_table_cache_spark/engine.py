@@ -85,13 +85,16 @@ from glue_table_cache_spark.projection import (
     relative_path_column,
 )
 from glue_table_cache_spark.pruning import (
+    AllColumnsExcept,
     And,
     TruePredicate,
+    build_predicate,
     extract_partition_predicate,
+    parse_where_clause,
     prune_files,
-    where_columns,
 )
 from glue_table_cache_spark.session import local_frame
+from glue_table_cache_spark.skipping import FooterMemo
 from glue_table_cache_spark.transformer import (
     TableReference,
     get_query_glue_table_refs,
@@ -139,6 +142,13 @@ class GlueSparkEngine:
             **retry,
         )
         self._listing_cache: LruTtlCache[list[FileInfo]] = LruTtlCache(
+            max_entries=cfg.max_entries,
+            ttl_ms=cfg.s3_listing_ttl_ms,
+            **retry,
+        )
+        # table key → the table's parquet-footer zone maps
+        # (_footer_stats), bounded and expired like the listings
+        self._footer_memos: LruTtlCache[FooterMemo] = LruTtlCache(
             max_entries=cfg.max_entries,
             ttl_ms=cfg.s3_listing_ttl_ms,
             **retry,
@@ -1712,11 +1722,13 @@ class GlueSparkEngine:
             )
         self._metadata_cache.invalidate(meta_key)
         self._listing_cache.invalidate_matching(meta_key)
+        self._footer_memos.invalidate(meta_key)
 
     def clear_cache(self) -> None:
         self._metadata_cache.clear()
         self._listing_cache.clear()
         self._listing_keys.clear()
+        self._footer_memos.clear()
 
     # -- view construction ---------------------------------------------------
 
@@ -1966,41 +1978,45 @@ class GlueSparkEngine:
            rewritten soundly into the transformed values the files
            record (monotone bounds / bucket equality; anything else
            stays Unknown).
-        3. Zone-map skipping: ``stats(kept)`` gives one
+        3. Zone-map skipping, when the WHERE clause constrains a
+           column other than ``keys``: ``stats(kept)`` gives one
            :class:`~glue_table_cache_spark.skipping.FileStats` (or
-           ``None``) per surviving file, or ``None`` for no skipping;
-           the predicate is extracted over the union of stats-bearing
-           columns other than ``keys``.  The stats are the walk's own
-           (Delta ``add.stats``, Iceberg manifest bounds) or parquet
-           footers (:meth:`_footer_stats`: Hive, unpartitioned and
-           projection listings, Hudi COPY_ON_WRITE).  Hudi
-           MERGE_ON_READ passes none: a log record can move a row
-           into a range its base file's footer rules out.
+           ``None``) per surviving file, or ``None`` for no skipping.
+           It is not called otherwise, so a partition-only query
+           decodes no zone map and reads no footer.  The stats are
+           the walk's own (Delta ``add.stats``, Iceberg manifest
+           bounds) or parquet footers (:meth:`_footer_stats`: Hive,
+           unpartitioned and projection listings, Hudi
+           COPY_ON_WRITE).  Hudi MERGE_ON_READ passes none: a log
+           record can move a row into a range its base file's footer
+           rules out.  A partition key's value is the one step 1
+           applied; a file may still carry a same-named column with
+           other values, so keys never skip here.
 
         Steps 1 and 2 AND into one predicate for one ``prune_files``
         call.  Every step is conservative three-valued logic: a file
         is dropped only when its metadata PROVES no row can match, so
         the full WHERE clause still runs over what is kept.  Returns
         the kept files in input order."""
-        if not query or not files:
+        if not query or not files or not (keys or spec or stats):
             return files
-        idents = {tbl.name, tbl.qualified_name}
+        where = parse_where_clause(query)
+        idents = {tbl.name.lower(), tbl.qualified_name.lower()}
         if keys or spec:
             preds = []
             if keys:
                 preds.append(
-                    extract_partition_predicate(query, keys, idents)
+                    build_predicate(where, {k.lower() for k in keys}, idents)
                 )
             if spec:
                 from glue_table_cache_spark.sources.iceberg_partitioning import (  # noqa: E501
                     transform_partition_predicate,
                 )
 
-                srcs = sorted({f["source"] for f in spec if f["source"]})
+                srcs = {f["source"].lower() for f in spec if f["source"]}
                 preds.append(
                     transform_partition_predicate(
-                        extract_partition_predicate(query, srcs, idents),
-                        spec,
+                        build_predicate(where, srcs, idents), spec
                     )
                 )
             live = [p for p in preds if not isinstance(p, TruePredicate)]
@@ -2009,23 +2025,13 @@ class GlueSparkEngine:
                 And(tuple(live)) if len(live) > 1
                 else live[0] if live else TruePredicate(),
             )
-        per_file = stats(files) if stats is not None and files else None
-        if per_file is None:
+        if stats is None or not files:
             return files
-        cols: set[str] = set()
-        for st in per_file:
-            if st is not None:
-                cols.update(st.min_values)
-                cols.update(st.max_values)
-                cols.update(st.null_counts)
-        # a partition key's value is the one the path or metadata
-        # records, which step 1 already applied; a file may still
-        # carry a same-named column with other values
-        cols.difference_update(k.lower() for k in keys)
-        if not cols:
-            return files
-        pred = extract_partition_predicate(query, sorted(cols), idents)
+        pred = build_predicate(where, AllColumnsExcept(keys), idents)
         if isinstance(pred, TruePredicate):
+            return files
+        per_file = stats(files)
+        if per_file is None:
             return files
         from glue_table_cache_spark.skipping import skip_files
 
@@ -2035,60 +2041,44 @@ class GlueSparkEngine:
         return [f for f in files if f.path in keep]
 
     def _footer_stats(
-        self, tbl: CatalogTable, query: str | None, keys: list[str]
+        self, tbl: CatalogTable
     ) -> Callable[[list[FileInfo]], list | None] | None:
         """:meth:`_prune_and_skip`'s ``stats`` for a plain-parquet file
-        list, from each file's parquet footer; ``None`` (no footer is
-        read) when skipping is off, the table is not parquet, or the
-        WHERE clause constrains no column outside ``keys``.
+        list, from each file's parquet footer, or ``None`` when
+        skipping is off or the table is not parquet.
 
-        Footers are read for the partition survivors only, each once:
-        the results are memoized per table under
-        ``<location>#footers`` in the listing cache and tracked like
-        the ``#schema:`` entries, so TTL expiry, LRU eviction and
-        ``invalidate_table`` drop them with the listing.  Like the
-        schema cache, the memo takes a data file to be immutable by
-        path.  Local footers are read serially (about 0.2 ms each);
-        ``s3://`` footers by ranged GETs through the client the
-        engine lists with.  A list over ``max_explicit_files`` is
-        never read: the explicit path reroutes it to the directory
-        scan."""
-        if not (
-            self.config.stats_skipping
-            and query
-            and tbl.data_format == "parquet"
-        ):
-            return None
-        idents = {tbl.name, tbl.qualified_name}
-        cols = where_columns(query, idents) - {k.lower() for k in keys}
-        if not cols or isinstance(
-            extract_partition_predicate(query, sorted(cols), idents),
-            TruePredicate,
-        ):
+        The table's :class:`~glue_table_cache_spark.skipping.FooterMemo`
+        lives in an engine cache of its own, keyed by the table and
+        bounded like the listing cache (``max_entries`` tables, the
+        listing TTL); ``invalidate_table`` and ``clear_cache`` drop
+        it.  It keys each local file by path and a fresh stat, so a
+        file rewritten in place is read again; ``s3://`` objects by
+        key alone, so an object rewritten in place needs
+        ``invalidate_table`` (see the memo).  A list over
+        ``max_explicit_files`` is never read: the explicit path
+        reroutes it to the directory scan."""
+        if not (self.config.stats_skipping and tbl.data_format == "parquet"):
             return None
 
         def stats(kept: list[FileInfo]) -> list | None:
-            from glue_table_cache_spark import skipping
-
             if len(kept) > self.config.max_explicit_files:
                 return None
-            key = f"{tbl.location}#footers"
-            memo = self._listing_cache.get_or_load(key, dict)
-            # recorded after the entry exists, as in _read_paths
-            self._track_listing_key(tbl, key)
-            missing = [f.path for f in kept if f.path not in memo]
-            client = None
-            if any(p.startswith("s3://") for p in missing):
-                client = getattr(
-                    self._fs or filesystem_for(tbl.location), "client", None
-                )
-            # concurrent statements may read the same footer twice;
-            # both store the same value
-            for path in missing:
-                memo[path] = skipping.parquet_footer_stats(path, client)
-            return [memo[f.path] for f in kept]
+            memo = self._footer_memos.get_or_load(
+                table_cache_key(tbl.database, tbl.name),
+                lambda: self._new_footer_memo(tbl),
+            )
+            return memo.stats([f.path for f in kept])
 
         return stats
+
+    def _new_footer_memo(self, tbl: CatalogTable) -> FooterMemo:
+        client = None
+        if tbl.location.startswith("s3://"):
+            # footers are read through the client the engine lists with
+            client = getattr(
+                self._fs or filesystem_for(tbl.location), "client", None
+            )
+        return FooterMemo(client)
 
     @staticmethod
     def _kept_entries(
@@ -2264,10 +2254,9 @@ class GlueSparkEngine:
             # partition paths (hive-style layouts only; others carry
             # no values)
             files = [FileInfo(p, pv) for p, pv in walk[1]]
-            keys = self._hudi_prune_keys(tbl, files)
             kept = self._prune_and_skip(
-                tbl, query, files, keys,
-                stats=self._footer_stats(tbl, query, keys),
+                tbl, query, files, self._hudi_prune_keys(tbl, files),
+                stats=self._footer_stats(tbl),
             )
             paths = self._proxy([f.path for f in kept])
             schema = walk[2]
@@ -2652,7 +2641,7 @@ class GlueSparkEngine:
             return self.spark.range(0).select(F.lit(None).alias("null"))
         pruned = self._prune_and_skip(
             tbl, query, files, keys,
-            stats=self._footer_stats(tbl, query, keys),
+            stats=self._footer_stats(tbl),
         )
         if len(pruned) > self.config.max_explicit_files:
             if tbl.table_type in (ETableType.HIVE, ETableType.UNPARTITIONED):

@@ -32,7 +32,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass
 from decimal import Decimal
-from typing import Any
+from typing import Any, Container
 
 from glue_table_cache_spark.listing import FileInfo
 from glue_table_cache_spark.transformer import serialize_sql
@@ -293,7 +293,7 @@ def _qualifier_ok(qualifier: str | None, table_idents: set[str]) -> bool:
 
 def build_predicate(
     node: dict | None,
-    partition_keys: set[str],
+    partition_keys: Container[str],
     table_idents: set[str],
     _degraded: list | None = None,
     strict: bool = False,
@@ -486,25 +486,17 @@ def extract_proof_predicate(
     )
 
 
-def where_columns(sql: str, table_idents: set[str]) -> set[str]:
-    """Lower-cased names of the columns the WHERE clause references
-    unqualified or qualified by one of ``table_idents`` (empty when
-    there is no parseable WHERE).  A superset is fine: callers extract
-    a predicate over these names and keep every file it cannot
-    decide."""
-    idents = {t.lower() for t in table_idents}
-    out: set[str] = set()
-    stack: list[Any] = [parse_where_clause(sql)]
-    while stack:
-        node = stack.pop()
-        if isinstance(node, list):
-            stack.extend(node)
-        elif isinstance(node, dict):
-            col, qual = _column_ref(node)
-            if col and _qualifier_ok(qual, idents):
-                out.add(col.lower())
-            stack.extend(node.values())
-    return out
+class AllColumnsExcept:
+    """The column set :func:`build_predicate` extracts over for zone-map
+    skipping: every column name but ``keys`` (compared lower-cased),
+    whatever the table's schema.  A column no file has statistics for
+    evaluates Unknown there, so the file is kept."""
+
+    def __init__(self, keys: list[str]) -> None:
+        self._keys = frozenset(k.lower() for k in keys)
+
+    def __contains__(self, column: object) -> bool:
+        return column not in self._keys
 
 
 def prune_files(files: list[FileInfo], predicate: Predicate) -> list[FileInfo]:

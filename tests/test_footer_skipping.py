@@ -264,10 +264,105 @@ def test_footer_memo_under_concurrent_statements(spark, tmp_path):
     try:
         for _ in range(5):
             eng = GlueSparkEngine(spark, store)
-            stats = eng._footer_stats(tbl, POINT.format(t="hive"), ["p"])
+            stats = eng._footer_stats(tbl)
             with ThreadPoolExecutor(max_workers=16) as pool:
                 futures = [pool.submit(stats, files) for _ in range(32)]
                 got = [f.result(timeout=60) for f in futures]
             assert all(g == want for g in got)
     finally:
         sys.setswitchinterval(old)
+
+
+def test_local_file_rewritten_in_place_is_read_again(
+    spark, tmp_path, footer_reads
+):
+    """The memo keys a local file by a fresh stat: a file rewritten
+    under its old name, with rows now in range, is read again without
+    ``invalidate_table`` and its rows come back."""
+    store = _store(tmp_path)
+    eng = GlueSparkEngine(spark, store)
+    sql = "SELECT id FROM glue.db.hive WHERE p = 1 AND id BETWEEN 1100 AND 1112"
+    assert sorted(r.id for r in eng.sql(sql).collect()) == [
+        1100, 1103, 1106, 1109, 1112,
+    ]
+    assert len(footer_reads) == FILES
+    moved = tmp_path / "hive" / "p=1" / "part-00003.parquet"
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1101, 1102, 1350], pa.int64()),
+            "v": pa.array([0, 0, 0], pa.int64()),
+        }),
+        moved,
+    )
+    footer_reads.clear()
+    got = sorted(r.id for r in eng.sql(sql).collect())
+    assert got == [1100, 1101, 1102, 1103, 1106, 1109, 1112]
+    assert footer_reads == [str(moved)]
+    off = GlueSparkEngine(
+        spark, store, config=EngineConfig(stats_skipping=False)
+    )
+    assert got == sorted(r.id for r in off.sql(sql).collect())
+
+
+@pytest.mark.parametrize(
+    "where, called",
+    [
+        ("p = 1", False),
+        ("p IN (0, 1) AND p <> 0", False),
+        ("p = 1 AND id > 3", True),
+        ("id > 3", True),
+        ("t.id > 3", False),  # another table's column
+    ],
+)
+def test_zone_maps_are_asked_for_only_with_a_data_predicate(
+    spark, tmp_path, where, called
+):
+    """``_prune_and_skip`` calls ``stats`` only when the WHERE clause
+    constrains a column other than the partition keys, and then only
+    for the partition survivors; this holds for every stats source
+    (footers, Delta ``add.stats``, Iceberg manifest bounds)."""
+    from glue_table_cache_spark.listing import FileInfo
+
+    store = _store(tmp_path)
+    tbl = store.get_table("db", "hive")
+    files = [FileInfo(f"/x/p={p}/a.parquet", {"p": str(p)}) for p in (0, 1)]
+    asked: list[list[str]] = []
+
+    def stats(kept):
+        asked.append([f.path for f in kept])
+        return [None] * len(kept)
+
+    eng = GlueSparkEngine(spark, store)
+    kept = eng._prune_and_skip(
+        tbl, f"SELECT * FROM glue.db.hive WHERE {where}", files, ["p"],
+        stats=stats,
+    )
+    assert asked == ([[f.path for f in kept]] if called else [])
+
+
+def test_footer_memo_reads_at_most_a_capped_batch_per_call(
+    tmp_path, footer_reads, monkeypatch
+):
+    """A cold call reads ``READS_PER_CALL`` footers and keeps the rest
+    of the files unskipped; later calls read the rest.  Past
+    ``MAX_FILES`` the oldest entries go, and only they are read
+    again."""
+    monkeypatch.setattr(skipping.FooterMemo, "READS_PER_CALL", 3)
+    monkeypatch.setattr(skipping.FooterMemo, "MAX_FILES", 4)
+    _write_lake(tmp_path, "hive")
+    paths = sorted(str(p) for p in tmp_path.rglob("*.parquet"))[:5]
+    memo = skipping.FooterMemo()
+    first = memo.stats(paths)
+    assert footer_reads == paths[:3]
+    assert [s is not None for s in first] == [True] * 3 + [False] * 2
+    footer_reads.clear()
+    assert all(s is not None for s in memo.stats(paths))
+    assert footer_reads == paths[3:]
+    # five files, four held: the first one read was dropped
+    footer_reads.clear()
+    assert all(s is not None for s in memo.stats(paths))
+    assert footer_reads == paths[:1]
+    # a path that cannot be stat'ed is kept unread
+    footer_reads.clear()
+    assert memo.stats([str(tmp_path / "gone.parquet")]) == [None]
+    assert footer_reads == []

@@ -92,12 +92,85 @@ def test_footer_stats_over_stub_s3_reads_only_the_footer(spark, tmp_path):
     eng = GlueSparkEngine(
         spark, store, filesystem=S3FileSystem(client=client)
     )
-    stats = eng._footer_stats(tbl, "SELECT * FROM glue.db.t WHERE id > 7", [])
+    stats = eng._footer_stats(tbl)
     assert stats([FileInfo("s3://b/t/f.parquet")]) == [st]
     assert client.get_calls == 2 and client.bytes_read < len(data) // 10
     # not a parquet object: no stats, the file is kept
     client = FakeS3Client({"t/x.parquet": b"not parquet at all"})
     assert parquet_footer_stats("s3://b/t/x.parquet", client) is None
+
+
+def _parquet_bytes(tmp_path, ids) -> bytes:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "one.parquet"
+    pq.write_table(pa.table({"id": pa.array(ids, pa.int64())}), path)
+    return path.read_bytes()
+
+
+def test_remote_footers_are_read_in_parallel_once(tmp_path):
+    """Cold ``s3://`` footers go out several at a time, bounded by the
+    listing pool; a warm call makes no GET."""
+    import threading
+    import time
+
+    from glue_table_cache_spark.listing import LISTING_POOL_WORKERS
+    from glue_table_cache_spark.skipping import FooterMemo
+
+    class SlowS3(FakeS3Client):
+        def __init__(self, objects):
+            super().__init__(objects)
+            self._lock = threading.Lock()
+            self.in_flight = self.most_in_flight = 0
+
+        def get_object(self, Bucket, Key, Range=None):
+            with self._lock:
+                self.in_flight += 1
+                self.most_in_flight = max(self.most_in_flight, self.in_flight)
+            time.sleep(0.01)
+            try:
+                with self._lock:
+                    return super().get_object(Bucket, Key, Range)
+            finally:
+                with self._lock:
+                    self.in_flight -= 1
+
+    n = 2 * LISTING_POOL_WORKERS
+    client = SlowS3({
+        f"t/f{i}.parquet": _parquet_bytes(tmp_path, [i, i + 1])
+        for i in range(n)
+    })
+    memo = FooterMemo(client)
+    paths = [f"s3://b/t/f{i}.parquet" for i in range(n)]
+    got = memo.stats(paths)
+    assert [s.min_values["id"] for s in got] == list(range(n))
+    assert client.get_calls == 2 * n
+    assert 1 < client.most_in_flight <= LISTING_POOL_WORKERS
+    assert memo.stats(paths) == got
+    assert client.get_calls == 2 * n
+
+
+def test_s3_object_rewritten_in_place_is_read_after_invalidate_table(
+    spark, tmp_path
+):
+    """``s3://`` footers are memoized by key: an object rewritten under
+    its old key keeps its old zone map until ``invalidate_table``,
+    which drops the table's memo."""
+    from glue_table_cache_spark.listing import FileInfo
+
+    client = FakeS3Client({"t/f.parquet": _parquet_bytes(tmp_path, [1, 2])})
+    store = LocalMetadataStore()
+    tbl = store.register_parquet_dir("db", "t", "s3://b/t")
+    eng = GlueSparkEngine(
+        spark, store, filesystem=S3FileSystem(client=client)
+    )
+    files = [FileInfo("s3://b/t/f.parquet")]
+    assert eng._footer_stats(tbl)(files)[0].max_values["id"] == 2
+    client._objects["t/f.parquet"] = _parquet_bytes(tmp_path, [1, 900])
+    assert eng._footer_stats(tbl)(files)[0].max_values["id"] == 2
+    eng.invalidate_table("db", "t")
+    assert eng._footer_stats(tbl)(files)[0].max_values["id"] == 900
 
 
 # -- parse_s3_path (reference cases) ----------------------------------------
