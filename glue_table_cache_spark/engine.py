@@ -91,6 +91,7 @@ from glue_table_cache_spark.pruning import (
     build_predicate,
     extract_partition_predicate,
     parse_where_clause,
+    predicate_columns,
     prune_files,
 )
 from glue_table_cache_spark.session import local_frame
@@ -1960,7 +1961,8 @@ class GlueSparkEngine:
         files: list[FileInfo],
         keys: list[str],
         spec: list[dict] | None = None,
-        stats: Callable[[list[FileInfo]], list | None] | None = None,
+        stats: Callable[[list[FileInfo], frozenset[str]], list | None]
+        | None = None,
     ) -> list[FileInfo]:
         """The one file-selection pass every read path runs over its
         metadata walk — the reference's single ``SELECT list(path)
@@ -1979,9 +1981,11 @@ class GlueSparkEngine:
            record (monotone bounds / bucket equality; anything else
            stays Unknown).
         3. Zone-map skipping, when the WHERE clause constrains a
-           column other than ``keys``: ``stats(kept)`` gives one
-           :class:`~glue_table_cache_spark.skipping.FileStats` (or
-           ``None``) per surviving file, or ``None`` for no skipping.
+           column other than ``keys``: ``stats(kept, columns)`` gives
+           one :class:`~glue_table_cache_spark.skipping.FileStats` (or
+           ``None``) per surviving file, or ``None`` for no skipping;
+           ``columns`` are the names the predicate reads, which a
+           source may limit its zone maps to.
            It is not called otherwise, so a partition-only query
            decodes no zone map and reads no footer.  The stats are
            the walk's own (Delta ``add.stats``, Iceberg manifest
@@ -2030,7 +2034,7 @@ class GlueSparkEngine:
         pred = build_predicate(where, AllColumnsExcept(keys), idents)
         if isinstance(pred, TruePredicate):
             return files
-        per_file = stats(files)
+        per_file = stats(files, predicate_columns(pred))
         if per_file is None:
             return files
         from glue_table_cache_spark.skipping import skip_files
@@ -2042,7 +2046,7 @@ class GlueSparkEngine:
 
     def _footer_stats(
         self, tbl: CatalogTable
-    ) -> Callable[[list[FileInfo]], list | None] | None:
+    ) -> Callable[[list[FileInfo], frozenset[str]], list | None] | None:
         """:meth:`_prune_and_skip`'s ``stats`` for a plain-parquet file
         list, from each file's parquet footer, or ``None`` when
         skipping is off or the table is not parquet.
@@ -2060,14 +2064,16 @@ class GlueSparkEngine:
         if not (self.config.stats_skipping and tbl.data_format == "parquet"):
             return None
 
-        def stats(kept: list[FileInfo]) -> list | None:
+        def stats(
+            kept: list[FileInfo], columns: frozenset[str] | None = None
+        ) -> list | None:
             if len(kept) > self.config.max_explicit_files:
                 return None
             memo = self._footer_memos.get_or_load(
                 table_cache_key(tbl.database, tbl.name),
                 lambda: self._new_footer_memo(tbl),
             )
-            return memo.stats([f.path for f in kept])
+            return memo.stats([f.path for f in kept], columns)
 
         return stats
 
@@ -2350,7 +2356,7 @@ class GlueSparkEngine:
             if self.config.stats_skipping:
                 from glue_table_cache_spark.skipping import delta_file_stats
 
-                def stats(kept):
+                def stats(kept, _columns):
                     return [
                         delta_file_stats(
                             stats_by_path.get(f.path), renames=renames
@@ -2466,7 +2472,7 @@ class GlueSparkEngine:
             if self.config.stats_skipping:
                 # zone maps decode here, for the partition survivors
                 # only (the walk keeps them as raw manifest bytes)
-                def stats(kept):
+                def stats(kept, _columns):
                     return [iceberg_stats[f.path].resolve() for f in kept]
 
             entries = self._kept_entries(

@@ -499,6 +499,17 @@ class AllColumnsExcept:
         return column not in self._keys
 
 
+def predicate_columns(pred: Predicate) -> frozenset[str]:
+    """The column names ``pred`` reads (lower-case, as extracted)."""
+    if isinstance(pred, (Comparison, InList)):
+        return frozenset((pred.column,))
+    if isinstance(pred, (And, Or)):
+        return frozenset().union(*map(predicate_columns, pred.children))
+    if isinstance(pred, Not):
+        return predicate_columns(pred.child)
+    return frozenset()
+
+
 def prune_files(files: list[FileInfo], predicate: Predicate) -> list[FileInfo]:
     """Apply the predicate to a listing (reference executes the same idea
     as ``SET VARIABLE … = (SELECT list(path) FROM listing WHERE …)``,

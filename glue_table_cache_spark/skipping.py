@@ -501,12 +501,16 @@ def _s3_footer(path: str, s3_client=None):
     return pq.ParquetFile(io.BytesIO(b"PAR1" + footer)).metadata
 
 
-def parquet_footer_stats(path: str, s3_client=None) -> FileStats | None:
+def parquet_footer_stats(
+    path: str, s3_client=None, columns: frozenset[str] | None = None
+) -> FileStats | None:
     """Aggregate a parquet file's row-group statistics into one
     :class:`FileStats` — the zone-map source for plain Hive layouts.
     Only top-level columns with statistics in EVERY row group
-    contribute; reading touches the footer, not the data pages (an
-    ``s3://`` path is read with ranged GETs through ``s3_client``).
+    contribute, and only those in ``columns`` (lower-case names) when
+    it is given: decoding a column's min/max is most of the cost past
+    the footer read.  Reading touches the footer, not the data pages
+    (an ``s3://`` path is read with ranged GETs through ``s3_client``).
     Unreadable footers return ``None`` (keep the file) — skipping must
     never turn an IO hiccup into a wrong answer; the scan itself will
     surface a real corruption loudly."""
@@ -533,6 +537,8 @@ def parquet_footer_stats(path: str, s3_client=None) -> FileStats | None:
             name = col.path_in_schema
             if "." in name or name in dropped:
                 continue  # nested leaf — not addressable by our preds
+            if columns is not None and name.lower() not in columns:
+                continue
             st = col.statistics
             if st is None or not st.has_min_max:
                 # an all-null row group legitimately has no min/max and
@@ -608,6 +614,11 @@ class FooterMemo:
     one rewritten in place is read again once the owner drops the
     memo (``GlueSparkEngine.invalidate_table``, or the listing TTL).
 
+    A file is read for the columns a statement's predicate needs;
+    a later statement that needs another column reads the footer again
+    for the union, so each file holds the columns its table's
+    statements constrain, not every column of a wide table.
+
     Local footers are read serially; remote ones by two ranged GETs
     each, ``LISTING_POOL_WORKERS`` at a time.  One call reads at most
     ``READS_PER_CALL`` footers, which bounds the planning time a cold
@@ -618,7 +629,7 @@ class FooterMemo:
     each GET after 20 ms, 24 files cost 0.09 s cold and 256 files (the
     cap) 0.7 s, and a warm call makes no GET.  At most ``MAX_FILES``
     entries are held, the oldest dropped first (about 1.7 KB each for
-    a three-column file, so about 7 MB a table)."""
+    three columns, so about 7 MB a table)."""
 
     READS_PER_CALL = 256
     MAX_FILES = 4096
@@ -626,26 +637,40 @@ class FooterMemo:
     def __init__(self, s3_client=None) -> None:
         self._client = s3_client
         self._lock = threading.Lock()  # guards writes to _memo
-        self._memo: dict[str, tuple[tuple, FileStats | None]] = {}
+        # path → (file version, columns read or None for all, stats)
+        self._memo: dict[
+            str, tuple[tuple, frozenset[str] | None, FileStats | None]
+        ] = {}
 
-    def stats(self, paths: list[str]) -> list[FileStats | None]:
-        """One zone map per path: ``None`` where the footer cannot be
-        read or is left for a later call (the file is kept)."""
+    def stats(
+        self, paths: list[str], columns: frozenset[str] | None = None
+    ) -> list[FileStats | None]:
+        """One zone map per path over at least ``columns`` (lower-case
+        names; ``None`` for every column): ``None`` where the footer
+        cannot be read or is left for a later call (the file is
+        kept)."""
         out: list[FileStats | None] = [None] * len(paths)
-        todo: list[tuple[int, tuple]] = []
+        todo: list[tuple[int, tuple, frozenset[str] | None]] = []
         for i, path in enumerate(paths):
             version = _file_version(path)
             if version is None:
                 continue
             hit = self._memo.get(path)
-            if hit is not None and hit[0] == version:
-                out[i] = hit[1]
+            if hit is not None and hit[0] != version:
+                hit = None
+            if hit is not None and (
+                hit[1] is None or (columns is not None and columns <= hit[1])
+            ):
+                out[i] = hit[2]
             elif len(todo) < self.READS_PER_CALL:
-                todo.append((i, version))
-        remote = [i for i, _v in todo if paths[i].startswith("s3://")]
-        for i, _v in todo:
+                held = hit[1] if hit is not None else frozenset()
+                todo.append(
+                    (i, version, None if columns is None else columns | held)
+                )
+        remote = [t for t in todo if paths[t[0]].startswith("s3://")]
+        for i, _v, cols in todo:
             if not paths[i].startswith("s3://"):
-                out[i] = parquet_footer_stats(paths[i])
+                out[i] = parquet_footer_stats(paths[i], None, cols)
         if remote:
             from concurrent.futures import ThreadPoolExecutor
 
@@ -655,17 +680,19 @@ class FooterMemo:
                 min(LISTING_POOL_WORKERS, len(remote))
             ) as pool:
                 read = pool.map(
-                    lambda i: parquet_footer_stats(paths[i], self._client),
+                    lambda t: parquet_footer_stats(
+                        paths[t[0]], self._client, t[2]
+                    ),
                     remote,
                 )
-                for i, st in zip(remote, read):
-                    out[i] = st
-        # concurrent calls may read the same footer twice; both store
-        # the same value
+                for t, st in zip(remote, read):
+                    out[t[0]] = st
+        # concurrent calls may read the same footer twice; the last
+        # store wins, and a call that needs more columns reads again
         with self._lock:
-            for i, version in todo:
+            for i, version, cols in todo:
                 self._memo.pop(paths[i], None)
-                self._memo[paths[i]] = (version, out[i])
+                self._memo[paths[i]] = (version, cols, out[i])
             while len(self._memo) > self.MAX_FILES:
                 del self._memo[next(iter(self._memo))]
         return out

@@ -72,9 +72,9 @@ def footer_reads(monkeypatch):
     seen: list[str] = []
     real = skipping.parquet_footer_stats
 
-    def counting(path, s3_client=None):
+    def counting(path, s3_client=None, columns=None):
         seen.append(path)
-        return real(path, s3_client)
+        return real(path, s3_client, columns)
 
     monkeypatch.setattr(skipping, "parquet_footer_stats", counting)
     return seen
@@ -326,10 +326,10 @@ def test_zone_maps_are_asked_for_only_with_a_data_predicate(
     store = _store(tmp_path)
     tbl = store.get_table("db", "hive")
     files = [FileInfo(f"/x/p={p}/a.parquet", {"p": str(p)}) for p in (0, 1)]
-    asked: list[list[str]] = []
+    asked: list[tuple[list[str], frozenset]] = []
 
-    def stats(kept):
-        asked.append([f.path for f in kept])
+    def stats(kept, columns):
+        asked.append(([f.path for f in kept], columns))
         return [None] * len(kept)
 
     eng = GlueSparkEngine(spark, store)
@@ -337,7 +337,9 @@ def test_zone_maps_are_asked_for_only_with_a_data_predicate(
         tbl, f"SELECT * FROM glue.db.hive WHERE {where}", files, ["p"],
         stats=stats,
     )
-    assert asked == ([[f.path for f in kept]] if called else [])
+    assert asked == (
+        [([f.path for f in kept], frozenset({"id"}))] if called else []
+    )
 
 
 def test_footer_memo_reads_at_most_a_capped_batch_per_call(
@@ -365,4 +367,31 @@ def test_footer_memo_reads_at_most_a_capped_batch_per_call(
     # a path that cannot be stat'ed is kept unread
     footer_reads.clear()
     assert memo.stats([str(tmp_path / "gone.parquet")]) == [None]
+    assert footer_reads == []
+
+
+def test_footer_memo_holds_the_columns_statements_constrain(
+    tmp_path, footer_reads
+):
+    """A footer is decoded for the predicate's columns only.  A later
+    statement on another column reads it again for the union; one on
+    columns already held reads nothing."""
+    _write_lake(tmp_path, "hive")
+    paths = sorted(str(p) for p in tmp_path.rglob("*.parquet"))[:2]
+    memo = skipping.FooterMemo()
+    got = memo.stats(paths, frozenset({"id"}))
+    assert footer_reads == paths
+    assert [set(s.min_values) for s in got] == [{"id"}, {"id"}]
+    footer_reads.clear()
+    got = memo.stats(paths, frozenset({"v"}))
+    assert footer_reads == paths
+    assert [set(s.max_values) for s in got] == [{"id", "v"}, {"id", "v"}]
+    footer_reads.clear()
+    assert memo.stats(paths, frozenset({"id"})) == got
+    assert footer_reads == []
+    # no column set asks for every column: read once more, then held
+    memo.stats(paths)
+    assert footer_reads == paths
+    footer_reads.clear()
+    memo.stats(paths, frozenset({"v"}))
     assert footer_reads == []

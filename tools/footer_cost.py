@@ -77,11 +77,16 @@ def _time(memo: FooterMemo, paths: list[str]) -> tuple[float, int]:
 
 def _fill(memo: FooterMemo, paths: list[str], held: int) -> int:
     """Further calls until every footer is held (each reads at most
-    ``READS_PER_CALL``); returns their number."""
+    ``READS_PER_CALL``), or until a call holds no more than the one
+    before it (an unreadable footer is never held); returns their
+    number."""
     calls = 0
     while held < len(paths):
-        held = _time(memo, paths)[1]
+        now = _time(memo, paths)[1]
         calls += 1
+        if now <= held:
+            break
+        held = now
     return calls
 
 
