@@ -629,7 +629,8 @@ class FooterMemo:
     each GET after 20 ms, 24 files cost 0.09 s cold and 256 files (the
     cap) 0.7 s, and a warm call makes no GET.  At most ``MAX_FILES``
     entries are held, the oldest dropped first (about 1.7 KB each for
-    three columns, so about 7 MB a table)."""
+    three columns, so about 7 MB a table; a 60-column file holds
+    1.2 KiB with one column read, 17.8 KiB with all 60)."""
 
     READS_PER_CALL = 256
     MAX_FILES = 4096
